@@ -129,7 +129,7 @@ def _get_spark(args):
         b = b.master(os.environ.get("SPARK_GRAFT_MASTER", "local[*]"))
     if not os.environ.get("SPARK_ENV_LOADED"):
         # local-mode driver IS the executor: Spark's 1g default heap is
-        # too tight for wide (100+ column) validated scans + sketch
+        # too tight for wide (100+ column) csv scans + sketch
         # state; spark-submit users size their own cluster instead
         b = b.config(
             "spark.driver.memory",
@@ -289,8 +289,7 @@ def _task_ranking(spark, args) -> None:
 
     t0 = time.time()
     timings = []
-    info = read_dataset(spark, args.data_path, args.data_source,
-                        validate=True)
+    info = read_dataset(spark, args.data_path, args.data_source)
     if info.invalid_lines is not None:
         n_bad, samples = invalid_line_summary(info)
         if n_bad:

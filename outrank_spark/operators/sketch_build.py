@@ -178,6 +178,16 @@ def _build_partition(plan: SketchPlan):
     return fn
 
 
+def _parses_as_number(symbol: str) -> bool:
+    """Whether a numeric column's string form could equal ``symbol``
+    (Python's ``float`` accepts every form Spark's cast prints)."""
+    try:
+        float(symbol)
+    except ValueError:
+        return False
+    return True
+
+
 def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
     """Project exactly the channels the build needs: raw columns only
     for kinds that require values, hash/flag longs for the rest."""
@@ -211,14 +221,12 @@ def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
             if isinstance(dt, StringType):
                 # already a string — drop the no-op cast
                 cond = cond | qcol(c).isin(*missing)
-            elif isinstance(dt, NumericType):
-                # a numeric's string form can never equal a missing
-                # symbol like "" / "{}" — the per-row cast only
-                # allocated UTF8Strings (28 per row on the ranking
-                # job's interaction longs) to compare against the
-                # impossible; missing iff NULL.  Non-numeric
-                # non-string types (maps render "{}", etc.) keep the
-                # cast-based semantics below.
+            elif (isinstance(dt, NumericType)
+                  and not any(map(_parses_as_number, missing))):
+                # no number prints as "" or "{}": skip the per-row
+                # cast (28 UTF8Strings per row on the ranking job's
+                # interaction longs); missing iff NULL.  Maps render
+                # "{}", so other types keep the cast below.
                 pass
             else:
                 cond = cond | qcol(c).cast("string").isin(*missing)

@@ -54,8 +54,8 @@ class CombinationPlanner:
                upper_bound: int) -> list[tuple[str, str]]:
         if not combos:
             return []
-        for c in set(combos).difference(self.prior_counts):
-            self.prior_counts[c] = 0
+        for c in combos:  # list order keeps the state's key order stable
+            self.prior_counts.setdefault(c, 0)
         kept = sorted(combos, key=self.prior_counts.get)[:upper_bound]
         for c in kept:
             self.prior_counts[c] += 1

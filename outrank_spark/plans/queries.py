@@ -21,28 +21,37 @@ pytest against exact aggregates.
 """
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 __all__ = ["QUERIES", "ORACLES", "load"]
 
 
-# (session, dir, table) -> lazy reader DataFrame.  This memoizes the
+# session -> {(dir, table): lazy reader plan}.  This memoizes the
 # UNEXECUTED scan plan only — `spark.read.parquet` re-reads the footer
 # for schema inference on every call (measured 90-280 ms per table),
 # which a suite that constructs ~24 query plans per run pays over and
 # over for frozen, read-only inputs.  No data or results are cached:
-# every action on a derived plan re-scans the parquet.  Keyed on the
-# live session object so a new session never sees a stale plan.
-_READER_MEMO: dict = {}
+# every action on a derived plan re-scans the parquet.  Keyed weakly
+# on the live session so a new session never sees a stale plan and a
+# dropped one is freed; the values are the JVM plan handles, not
+# DataFrames, because a DataFrame holds its session strongly and
+# would keep the weak key alive forever.
+_READER_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark, sf_dir, name)
-    df = _READER_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _READER_MEMO[key] = df
-    return df
+    """Lazy reader of ``<sf_dir>/<name>.parquet``, memoized per session.
+
+    Assumes the input files are frozen: the memoized plan keeps the
+    file listing and schema of the first call, so files added,
+    removed or rewritten later are not seen by this session."""
+    tables = _READER_MEMO.setdefault(spark, {})
+    key = (sf_dir, name)
+    if key not in tables:
+        tables[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")._jdf
+    return DataFrame(tables[key], spark)
 
 
 def _dec(col, scale=2):

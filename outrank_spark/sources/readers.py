@@ -9,7 +9,12 @@ string feature columns plus the resolved numeric-column set.
 | ob-vw        | sparse Vowpal-Wabbit lines + vw_namespace_map.csv |
 | ob-raw-dump  | raw_data/1_train/* TSV shards + header file       |
 
-The vw reader is the only nontrivial one: sparse ``|NS v1 v2`` groups
+Both CSV layouts share one read path (:func:`_read_csv`) that always
+checks line width: each line is parsed once, and lines whose width
+differs from the header's are dropped from ``df`` and kept as
+``DatasetInfo.invalid_lines`` (reference core_ranking.py:641-653).
+
+The vw reader is the other nontrivial one: sparse ``|NS v1 v2`` groups
 pivot to dense named columns through the namespace map
 (core_utils.py:161-201 semantics).  Lines stream through
 ``spark.read.text`` + ``mapInPandas`` — the group split is pandas
@@ -47,8 +52,8 @@ class DatasetInfo:
     column_names: list[str]
     numeric_columns: set[str] = field(default_factory=set)
     fw_map: dict[str, str] | None = None
-    # PERMISSIVE-mode corrupt rows (valid-line filter; lazy relation,
-    # None when the reader ran without validation)
+    # wrong-width csv lines (lazy relation of raw ``line`` strings;
+    # None for sources without a line-width check)
     invalid_lines: DataFrame | None = None
 
 
@@ -129,39 +134,45 @@ def read_zst_lines(spark: SparkSession, path: str) -> DataFrame:
     return bf.select("content").mapInPandas(fn, schema="value string")
 
 
-def _csv_header(path: str, encoding: str = "iso-8859-1") -> list[str]:
-    _require_local_file(path, "csv header probe")
-    with open(path, encoding=encoding, newline="") as f:
-        return next(csv.reader(f))
-
-
-def _read_csv_validated(spark: SparkSession, path: str,
-                        header: list[str]) -> tuple[DataFrame, DataFrame]:
-    """Valid-line filter, Spark-first (reference core_ranking.py:648-653
-    keeps lines whose parsed width matches the header and queues the
-    rest).
+def _read_csv(spark: SparkSession, path: str) -> DatasetInfo:
+    """The one CSV read path: every line parsed once, wrong-width
+    lines split out (reference core_ranking.py:648-653 keeps lines
+    whose parsed width matches the header and queues the rest).
 
     ONE ``text`` scan + a ``from_csv`` corrupt-record expression drives
-    both relations, so valid and invalid use the SAME parser judgment
-    (the csv SOURCE's DROPMALFORMED null-pads under-width lines instead
-    of dropping them, and PERMISSIVE csv scans hit Spark's
-    QUERY_ONLY_CORRUPT_RECORD_COLUMN restriction — ``from_csv`` is an
-    expression, exempt from both):
+    both relations, so valid and invalid lines get the SAME parser
+    verdict.  Spark's native CSV source is not used: with column
+    pruning it stops checking the width of fields a query does not
+    read (wrong-width lines pass as valid when only ``label`` is
+    selected), its DROPMALFORMED null-pads under-width lines, and a
+    query of its corrupt-record column alone raises
+    QUERY_ONLY_CORRUPT_RECORD_COLUMN; ``from_csv`` is an expression,
+    exempt from all three.
 
-    * valid rows: corrupt column null, header line excluded (any data
-      line byte-identical to the header is dropped too — documented
-      divergence from the reference's skip-first-line, negligible on
-      real data);
-    * invalid rows: corrupt column set; the ORIGINAL line is reported
-      like the reference's invalid_line_queue.
+    * valid rows (``df``): corrupt column null, header line excluded
+      (any data line byte-identical to the header is dropped too —
+      documented divergence from the reference's skip-first-line,
+      negligible on real data);
+    * invalid rows (``invalid_lines``): corrupt column set; the
+      ORIGINAL line is reported like the reference's
+      invalid_line_queue.
+
+    The parsed struct is expanded by a Generate (``inline``) rather
+    than by field accesses: Catalyst inlines ``from_csv`` into every
+    ``p.field`` access, and pushes filters that read the fields (the
+    subsample's hash) below a projection and even below a shuffle
+    barrier — k fields read = k CSV parsers per row.  It pushes
+    nothing below a Generate, so each scan parses a line once, with no
+    shuffle.
 
     Contract: ``path`` must be one local file (enforced) — the header
     line is read driver-side and excluded by byte-match, which is only
     well-defined for a single file.
     """
-    _require_local_file(path, "validated csv read")
+    _require_local_file(path, "csv read")
     with open(path, encoding="iso-8859-1", newline="") as f:
         raw_header = f.readline().rstrip("\r\n")
+    header = next(csv.reader([raw_header]))
     schema = ", ".join(f"`{c}` string" for c in header)
     opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_c"}
     # spark.read.text splits on \n and keeps a trailing \r from CRLF
@@ -175,20 +186,14 @@ def _read_csv_validated(spark: SparkSession, path: str,
     valid = (
         parsed.filter(F.col("p._c").isNull()
                       & (F.col("value") != raw_header))
-        .select("p")
-        # materialization barrier: without it, downstream plans that
-        # read k fields inline k copies of from_csv — k CSV parsers
-        # per task (OOMs a default-heap executor at ~100 columns).
-        # One cheap shuffle makes the struct concrete so every field
-        # access is a GetStructField on parsed rows.
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(*[F.col(f"p.`{c}`").alias(c) for c in header])
+        .select(F.inline(F.array("p")))
+        .drop("_c")
     )
     invalid = (
         parsed.filter(F.col("p._c").isNotNull())
         .select(F.col("value").alias("line"))
     )
-    return valid, invalid
+    return DatasetInfo(df=valid, column_names=header, invalid_lines=invalid)
 
 
 def invalid_line_summary(info: DatasetInfo,
@@ -205,27 +210,12 @@ def invalid_line_summary(info: DatasetInfo,
     return count, samples
 
 
-def read_csv_raw(spark: SparkSession, data_path: str,
-                 validate: bool = False) -> DatasetInfo:
-    """Header-row CSV folder (core_utils.py:389-400).  ``validate=True``
-    adds the PERMISSIVE valid-line filter."""
-    path = os.path.join(data_path, "data.csv")
-    if validate:
-        header = _csv_header(path)
-        valid, invalid = _read_csv_validated(spark, path, header)
-        return DatasetInfo(df=valid, column_names=header,
-                           invalid_lines=invalid)
-    df = (
-        spark.read.option("header", True)
-        .option("encoding", "iso-8859-1")
-        .option("quote", '"')
-        .csv(path)
-    )
-    return DatasetInfo(df=df, column_names=list(df.columns))
+def read_csv_raw(spark: SparkSession, data_path: str) -> DatasetInfo:
+    """Header-row CSV folder (core_utils.py:389-400)."""
+    return _read_csv(spark, os.path.join(data_path, "data.csv"))
 
 
-def read_ob_csv(spark: SparkSession, data_path: str,
-                validate: bool = False) -> DatasetInfo:
+def read_ob_csv(spark: SparkSession, data_path: str) -> DatasetInfo:
     """CSV + dataset_desc.json typed descriptor (core_utils.py:369-386)."""
     with open(os.path.join(data_path, "dataset_desc.json")) as f:
         desc = json.load(f)
@@ -235,19 +225,9 @@ def read_ob_csv(spark: SparkSession, data_path: str,
         column_names.append(name)
         if "float" in feature.get("type", "").lower():
             numeric.add(name)
-    path = os.path.join(data_path, "data.csv")
-    if validate:
-        header = _csv_header(path)
-        valid, invalid = _read_csv_validated(spark, path, header)
-        return DatasetInfo(df=valid, column_names=column_names,
-                           numeric_columns=numeric, invalid_lines=invalid)
-    df = (
-        spark.read.option("header", True)
-        .option("encoding", "iso-8859-1")
-        .csv(path)
-    )
-    return DatasetInfo(df=df, column_names=column_names,
-                       numeric_columns=numeric)
+    info = _read_csv(spark, os.path.join(data_path, "data.csv"))
+    info.column_names, info.numeric_columns = column_names, numeric
+    return info
 
 
 def parse_namespace_file(namespace_path: str) -> tuple[set[str], dict[str, str]]:
@@ -354,18 +334,12 @@ _READERS = {
 
 
 def read_dataset(spark: SparkSession, data_path: str,
-                 data_source: str, validate: bool = False) -> DatasetInfo:
-    """``validate=True`` routes csv sources through the PERMISSIVE
-    valid-line filter (wrong-arity rows dropped + a bounded invalid
-    sample kept, reference core_ranking.py:648-653); non-csv sources
-    ignore the flag."""
+                 data_source: str) -> DatasetInfo:
+    """Dispatch on the reference's ``data_source`` name.  The csv
+    sources drop wrong-width lines and expose them as
+    ``invalid_lines``."""
     if data_source not in _READERS:
         raise ValueError(
             f"unknown data source {data_source!r}; one of {sorted(_READERS)}",
         )
-    reader = _READERS[data_source]
-    import inspect
-
-    if validate and "validate" in inspect.signature(reader).parameters:
-        return reader(spark, data_path, validate=True)
-    return reader(spark, data_path)
+    return _READERS[data_source](spark, data_path)

@@ -63,6 +63,17 @@ class TestPlanner:
         q.restore(p.state())
         assert q.prior_counts == p.prior_counts
 
+    def test_state_follows_enumeration_order(self):
+        # the state's key order reaches combination_estimation_counts
+        # .json and the pickled stream state; it must not depend on
+        # string hashing (PYTHONHASHSEED)
+        p = CombinationPlanner()
+        cols = [f"f{i}" for i in range(30)] + ["label"]
+        combos = p.enumerate(cols, "label", "MI", False)
+        p.sample(combos, 10)
+        expected = [f"{a}\x1f{b}" for a, b in dict.fromkeys(combos)]
+        assert list(p.state()) == expected
+
 
 class TestHeuristics:
     def test_exact_mi_identity(self):

@@ -96,3 +96,42 @@ class TestDecimalHygiene:
         assert not offenders, (
             f"queries emitting DecimalType at the output boundary: "
             f"{offenders} — cast to double (see q107)")
+
+
+class TestReaderMemo:
+    def test_hit_rebinds_plan_to_session(self, spark, tmp_path):
+        from outrank_spark.plans.queries import load
+
+        spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
+        a = load(spark, str(tmp_path), "t")
+        b = load(spark, str(tmp_path), "t")
+        assert b._jdf is a._jdf and b.sparkSession is spark
+        assert b.count() == 3
+
+    def test_dropped_session_is_collected(self):
+        """The memo must not keep a session alive, although the
+        DataFrame it returns refers to its session."""
+        import gc
+        import weakref
+
+        from outrank_spark.plans.queries import _READER_MEMO, load
+
+        class FakeSession:
+            _sc = None
+
+            def __init__(self):
+                self.read = self
+
+            def parquet(self, path):
+                return FakeFrame()
+
+        class FakeFrame:
+            _jdf = object()
+
+        session = FakeSession()
+        df = load(session, "dir", "t")
+        assert df.sparkSession is session and session in _READER_MEMO
+        ref = weakref.ref(session)
+        del session, df
+        gc.collect()
+        assert ref() is None

@@ -180,8 +180,7 @@ class TestValidLineFilter:
             read_csv_raw,
         )
 
-        info = read_csv_raw(spark, self._write_dirty_csv(tmp_path),
-                            validate=True)
+        info = read_csv_raw(spark, self._write_dirty_csv(tmp_path))
         assert info.column_names == ["a", "b", "c"]
         valid = info.df.orderBy("a").collect()
         assert [r["a"] for r in valid] == ["1", "10"]
@@ -198,7 +197,7 @@ class TestValidLineFilter:
         d = tmp_path / "clean"
         d.mkdir()
         (d / "data.csv").write_text("a,b\n1,2\n3,4\n")
-        info = read_csv_raw(spark, str(d), validate=True)
+        info = read_csv_raw(spark, str(d))
         assert info.df.count() == 2
         count, samples = invalid_line_summary(info)
         assert count == 0 and samples == []

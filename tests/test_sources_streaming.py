@@ -59,6 +59,43 @@ class TestCsvRaw:
         info = read_csv_raw(spark, str(d))
         assert info.column_names == ["f1", "f2,quoted", "f3"]
 
+    def test_subsample_plan_parses_once_without_shuffle(self, spark,
+                                                         tmp_path):
+        """The subsample hash reads every column; the plan must neither
+        shuffle the input nor grow a CSV parser per column read."""
+        from outrank_spark.operators.pair_scoring import (
+            deterministic_subsample,
+        )
+
+        def plan_of(width):
+            d = tmp_path / f"w{width}"
+            d.mkdir()
+            names = [f"f{i}" for i in range(width - 1)] + ["label"]
+            rows = [",".join(str((r + i) % 3) for i in range(width))
+                    for r in range(50)]
+            (d / "data.csv").write_text(
+                "\n".join([",".join(names), *rows, "1,2"]) + "\n",
+            )
+            df = read_dataset(spark, str(d), "csv-raw").df
+            sub = deterministic_subsample(df, 10)
+            return sub._jdf.queryExecution().executedPlan().toString()
+
+        narrow, wide = plan_of(3), plan_of(40)
+        assert "Exchange" not in narrow and "Exchange" not in wide
+        assert narrow.count("from_csv") == wide.count("from_csv") > 0
+
+    def test_wrong_width_lines_dropped_under_pruning(self, spark, tmp_path):
+        d = tmp_path / "dirty"
+        d.mkdir()
+        (d / "data.csv").write_text(
+            "a,b,label\n1,2,0\nx,bad\n3,4,1\nx,y,bad,z\n",
+        )
+        info = read_csv_raw(spark, str(d))
+        labels = [r["label"] for r in info.df.select("label").collect()]
+        assert sorted(labels) == ["0", "1"]
+        # the invalid relation alone is countable, no cache needed
+        assert info.invalid_lines.count() == 2
+
 
 class TestObCsv:
     def test_descriptor_types(self, spark, tmp_path):
@@ -199,9 +236,9 @@ class TestStreamingSketches:
 
 class TestReadDatasetValidation:
     def test_validate_flag_reaches_csv_reader(self, spark, tmp_path):
-        """The CLI passes validate=True through read_dataset — corrupt
-        lines must surface in info.invalid_lines (regression: the
-        PERMISSIVE filter used to be unreachable from the CLI)."""
+        """The CLI reads through read_dataset — corrupt lines must
+        surface in info.invalid_lines (regression: the PERMISSIVE
+        filter used to be unreachable from the CLI)."""
         d = tmp_path / "csvdata"
         d.mkdir()
         (d / "data.csv").write_text(
@@ -212,16 +249,12 @@ class TestReadDatasetValidation:
             read_dataset,
         )
 
-        info = read_dataset(spark, str(d), "csv-raw", validate=True)
+        info = read_dataset(spark, str(d), "csv-raw")
         assert info.invalid_lines is not None
         n_bad, samples = invalid_line_summary(info)
         assert n_bad == 1
         assert any("badline" in s for s in samples)
         assert info.df.count() == 2
-
-        # default stays permissive-off (library callers unchanged)
-        info2 = read_dataset(spark, str(d), "csv-raw")
-        assert info2.invalid_lines is None
 
 
 class TestReadPagesTable:
@@ -269,21 +302,21 @@ def test_read_pages_unknown_fmt_rejected(spark, tmp_path):
 
 
 class TestLocalFileContract:
-    """The validated csv readers peek at the header driver-side, so
+    """The csv readers peek at the header driver-side, so
     they accept exactly one local file — globs/dirs/remote URIs must
     fail with an actionable error, not a late FileNotFoundError."""
 
     def test_remote_uri_rejected(self, spark):
         with pytest.raises(ValueError, match="remote URI"):
-            read_csv_raw(spark, "s3://bucket/data", validate=True)
+            read_csv_raw(spark, "s3://bucket/data")
 
     def test_glob_rejected(self, spark, tmp_path):
         with pytest.raises(ValueError, match="glob or directory"):
-            read_csv_raw(spark, str(tmp_path / "part-*"), validate=True)
+            read_csv_raw(spark, str(tmp_path / "part-*"))
 
     def test_missing_file_clear_error(self, spark, tmp_path):
         with pytest.raises(FileNotFoundError, match="no such file"):
-            read_csv_raw(spark, str(tmp_path / "nope"), validate=True)
+            read_csv_raw(spark, str(tmp_path / "nope"))
 
 
 class TestZstInput:

@@ -159,6 +159,21 @@ class TestBuildSketches:
             assert cms.query(lang) >= cnt
             assert cms.query(lang) <= cnt + cms.epsilon * N
 
+    def test_numeric_missing_symbol_same_on_both_paths(self, spark):
+        """A symbol a number prints as ("-1") marks a long column's
+        values missing whether flags are computed JVM-side or not."""
+        df = spark.createDataFrame([(-1,), (5,), (-1,), (None,)], "x long")
+        plan = SketchPlan(
+            columns=["x"],
+            sketches={"coverage": {"missing_symbols": ("-1",)}},
+        )
+        cov = {
+            prehash: build_sketches(df, plan, jvm_prehash=prehash)
+            [("x", "coverage")].coverage()
+            for prehash in (True, False)
+        }
+        assert cov[True] == cov[False] == pytest.approx(25.0)
+
     def test_summary_frame(self, feats):
         plan = SketchPlan(columns=["lang"], sketches={"hll": {"p": 12}})
         df = build_sketches(feats, plan).summary()
