@@ -27,7 +27,8 @@ def qcol(name: str):
     ``F.col(name)`` parses dots as struct-field access, so derived
     feature names containing dots (e.g. the verbose vault's
     ``f1_tr_boxcox_lambda_0.5``) resolve to nothing.  Quoting makes
-    the name literal; backticks inside the name are escaped."""
+    the name literal; backticks inside the name are escaped.  For
+    single-column references; wide projections use :func:`sql_ident`."""
     from pyspark.sql import functions as F
 
     return F.col("`" + name.replace("`", "``") + "`")
@@ -36,7 +37,10 @@ def qcol(name: str):
 def sql_ident(name: str) -> str:
     """Backtick-quote an identifier for splicing into a SQL/DDL
     string (``selectExpr``, ``stack`` cells): backticks inside the
-    name are doubled, everything else is literal."""
+    name are doubled, everything else is literal.  Rule: build a
+    projection wider than a few columns as SQL text and pass it in one
+    ``selectExpr``/``filter``/``F.expr`` call — each PySpark ``Column``
+    (``qcol``, ``F.*``) costs ~14 py4j round trips to build."""
     return "`" + name.replace("`", "``") + "`"
 
 

@@ -40,7 +40,7 @@ import os
 import shutil
 import time
 
-from outrank_spark.hashing import qcol
+from outrank_spark.hashing import sql_ident
 
 logging.basicConfig(format="%(asctime)s - %(message)s",
                     datefmt="%d-%b-%y %H:%M:%S")
@@ -240,8 +240,7 @@ def _run_ranking_checkpointed(spark, df, cfg, args):
     ``checkpoint_slices`` times (the filter pushes to the scan but
     parquet decode repeats) — the price of slice-granular resume;
     size slices to the failure domain, not the core count."""
-    from pyspark.sql import functions as F
-
+    from outrank_spark.operators.pair_scoring import _xxhash64_sql
     from outrank_spark.streaming.ranking_stream import (
         StreamingRankingAccumulator,
     )
@@ -249,11 +248,9 @@ def _run_ranking_checkpointed(spark, df, cfg, args):
     columns = cfg.feature_columns or list(df.columns)
     # subsampling happens inside process_batch (the accumulator owns
     # it), so slices are cut from the full relation
-    sub = df.select(*[qcol(c).alias(c) for c in columns])
+    sub = df.selectExpr(*map(sql_ident, columns))
     n = max(1, args.checkpoint_slices)
-    slice_expr = F.pmod(
-        F.xxhash64(*[qcol(c) for c in columns]), F.lit(n),
-    )
+    slice_key = f"pmod({_xxhash64_sql(columns)}, {n})"
     acc = StreamingRankingAccumulator(
         cfg, state_dir=args.checkpoint_dir,
         context=f"cli-slices={n}",
@@ -263,7 +260,7 @@ def _run_ranking_checkpointed(spark, df, cfg, args):
         logger.info("checkpoint resume: slices %s already done",
                     sorted(done))
     for i in range(n):
-        acc.process_batch(sub.where(slice_expr == i), batch_id=i)
+        acc.process_batch(sub.where(f"{slice_key} = {i}"), batch_id=i)
     result = acc.result()
     os.makedirs(args.output_folder, exist_ok=True)
     with open(os.path.join(args.output_folder,

@@ -23,7 +23,7 @@ import itertools
 from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
-from outrank_spark.hashing import qcol
+from outrank_spark.hashing import qcol, sql_ident
 
 __all__ = [
     "with_interaction_features",
@@ -107,17 +107,20 @@ def with_interaction_features(
     # ONE select for all combos: chained withColumn would nest the
     # logical plan |combos| deep and analyzer time grows superlinearly
     # (hundreds of order-3 combos dominate small-batch jobs)
+    token = "lower(hex(xxhash64({})))" if as_hex else "xxhash64({})"
     for combo in combos:
         name = join_string.join(combo)
-        cat = F.concat(*[F.col(f"`{c}`").cast("string") for c in combo])
+        cat = "concat(" + ", ".join(
+            f"CAST({sql_ident(c)} AS STRING)" for c in combo) + ")"
         if parity_hashes:
-            exprs.append(_xxh64_hex(cat).alias(name))
+            exprs.append(_xxh64_hex(F.expr(cat)).alias(name))
         else:
-            h = F.xxhash64(cat)
-            exprs.append((F.lower(F.hex(h)) if as_hex else h).alias(name))
+            exprs.append(token.format(cat) + f" AS {sql_ident(name)}")
         new_names.append(name)
-    out = df.select("*", *exprs) if exprs else df
-    return out, new_names
+    if exprs:
+        df = (df.select("*", *exprs) if parity_hashes
+              else df.selectExpr("*", *exprs))
+    return df, new_names
 
 
 def explode_multivalue_features(

@@ -24,9 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from outrank_spark.hashing import qcol
-
-
+from outrank_spark.hashing import sql_ident
 from outrank_spark.functions.heuristics import score_pair
 
 __all__ = ["deterministic_subsample", "assign_batches", "score_batches",
@@ -47,19 +45,21 @@ def deterministic_subsample(df: DataFrame, every_nth: int,
     """
     if every_nth <= 1:
         return df
-    key = (F.xxhash64(*[qcol(c) for c in key_cols]) if key_cols
-           else F.xxhash64(*[qcol(c) for c in df.columns]))
-    return df.filter(F.pmod(key, F.lit(every_nth)) == 0)
+    key = _xxhash64_sql(key_cols or df.columns)
+    return df.filter(f"pmod({key}, {int(every_nth)}) = 0")
+
+
+def _xxhash64_sql(columns: Sequence[str]) -> str:
+    return "xxhash64(" + ", ".join(map(sql_ident, columns)) + ")"
 
 
 def assign_batches(df: DataFrame, n_batches: int,
                    key_cols: Sequence[str] | None = None) -> DataFrame:
     """Add ``batch_id`` + stable intra-batch order key ``_rk``."""
-    cols = [qcol(c) for c in (key_cols or df.columns)]
-    key = F.xxhash64(*cols)
+    key = _xxhash64_sql(key_cols or df.columns)
     return (
-        df.withColumn("_rk", key)
-        .withColumn("batch_id", F.pmod(F.col("_rk"), F.lit(n_batches)))
+        df.withColumn("_rk", F.expr(key))
+        .withColumn("batch_id", F.expr(f"pmod(_rk, {int(n_batches)})"))
     )
 
 
@@ -254,11 +254,10 @@ def score_batches(df: DataFrame, columns: Sequence[str],
     # derived feature names containing dots); pandas renames them back
     # to the real feature names inside the worker
     safe = {c: f"__f{i}" for i, c in enumerate(columns)}
-    base = df.select(*[qcol(c).alias(safe[c]) for c in columns])
-    if precode:
-        base = base.select(
-            *[F.xxhash64(F.col(safe[c])).alias(safe[c]) for c in columns],
-        )
+    value = "xxhash64({})" if precode else "{}"
+    base = df.selectExpr(
+        *[value.format(sql_ident(c)) + f" AS {safe[c]}" for c in columns],
+    )
     batch_keys = ([safe[c] for c in columns] if key_cols is None
                   else [safe.get(c, c) for c in key_cols])
     batched = assign_batches(base, n_batches, key_cols=batch_keys)

@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 
 from outrank_spark.sketches import SKETCH_REGISTRY, sketch_from_bytes
-from outrank_spark.hashing import qcol
+from outrank_spark.hashing import qcol, sql_ident, sql_str
 
 __all__ = ["SketchPlan", "SketchCollection", "build_sketches",
            "build_grouped_sketches", "rollup_grouped_sketches",
@@ -124,25 +124,26 @@ class SketchCollection(dict):
 _HASH_INPUT = {"hll", "parity_hll", "theta"}
 
 
-def _chan(col: str) -> str:
-    """Internal channel name for a feature column: dots replaced, so
-    classic pyspark's mapInPandas (which re-resolves every column by
-    name, parsing dots as struct access) accepts derived feature names
-    like ``f1_tr_boxcox_lambda_0.5``.  The blob output still carries
-    the ORIGINAL column name."""
-    return col.replace(".", "\x1f")
+def _channels(plan: SketchPlan) -> dict[str, int]:
+    """Positional channel number per feature column.  Classic
+    pyspark's mapInPandas re-resolves every column by name, parsing
+    dots as struct access and rejecting unpaired backticks, so the
+    channels are named by position; the blob output still carries the
+    ORIGINAL column name."""
+    return {c: i for i, c in enumerate(dict.fromkeys(plan.columns))}
 
 
 def _build_partition(plan: SketchPlan):
     """Stage-1 worker: one pass over the partition's Arrow batches.
 
-    Input channels per (column, kind):
-      * ``__h_<col>``  int64 xxhash64  -> hll / parity_hll (fast path)
-      * ``__m_<col>``  0/1 missing    -> coverage (fast path)
-      * ``<col>``      raw values     -> counter / cms / bloom / kll /
-                                         tdigest, and any kind whose
-                                         fast-path column is absent
+    Input channels per (column number i, kind):
+      * ``__h<i>``  int64 xxhash64  -> hll / parity_hll (fast path)
+      * ``__m<i>``  0/1 missing    -> coverage (fast path)
+      * ``__c<i>``  raw values     -> counter / cms / bloom / kll /
+                                      tdigest, and any kind whose
+                                      fast-path column is absent
     """
+    chans = _channels(plan)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local = {key: plan.make(kind) for key in plan.keys()
@@ -151,15 +152,15 @@ def _build_partition(plan: SketchPlan):
         for pdf in batches:
             saw = True
             for (col, kind), sk in local.items():
-                ch = _chan(col)
-                if kind in _HASH_INPUT and f"__h_{ch}" in pdf.columns:
-                    h = pdf[f"__h_{ch}"].to_numpy(np.int64).astype(np.uint64)
+                i = chans[col]
+                if kind in _HASH_INPUT and f"__h{i}" in pdf.columns:
+                    h = pdf[f"__h{i}"].to_numpy(np.int64).astype(np.uint64)
                     sk.update_hashes(h)
                     continue
-                if kind == "coverage" and f"__m_{ch}" in pdf.columns:
-                    sk.update_flags(pdf[f"__m_{ch}"].to_numpy())
+                if kind == "coverage" and f"__m{i}" in pdf.columns:
+                    sk.update_flags(pdf[f"__m{i}"].to_numpy())
                     continue
-                vals = pdf[ch]
+                vals = pdf[f"__c{i}"]
                 if kind in _NUMERIC_ONLY:
                     sk.update(pd.to_numeric(vals, errors="coerce").to_numpy())
                 elif kind == "coverage":
@@ -190,9 +191,9 @@ def _parses_as_number(symbol: str) -> bool:
 
 def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
     """Project exactly the channels the build needs: raw columns only
-    for kinds that require values, hash/flag longs for the rest."""
-    from pyspark.sql import functions as F
-
+    for kinds that require values, hash/flag longs for the rest.  The
+    projection is SQL text, one ``selectExpr`` for every channel."""
+    from pyspark.sql.types import NumericType, StringType
 
     keys = plan.keys()
     raw_needed = set()
@@ -206,21 +207,22 @@ def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
             flag_specs.append((col, plan.sketches[kind]))
         else:
             raw_needed.add(col)
-    exprs = [qcol(c).alias(_chan(c)) for c in dict.fromkeys(plan.columns)
+    chans = _channels(plan)
+    exprs = [f"{sql_ident(c)} AS __c{i}" for c, i in chans.items()
              if c in raw_needed]
     for c in hash_cols:
-        exprs.append(F.xxhash64(qcol(c)).alias(f"__h_{_chan(c)}"))
-    from pyspark.sql.types import NumericType, StringType
-
+        exprs.append(f"xxhash64({sql_ident(c)}) AS __h{chans[c]}")
     types = {f.name: f.dataType for f in df.schema.fields}
     for c, params in flag_specs:
         missing = tuple(params.get("missing_symbols", ("", "{}")))
-        cond = qcol(c).isNull()
+        ident = sql_ident(c)
+        cond = f"{ident} IS NULL"
         if missing:
             dt = types.get(c)
+            symbols = ", ".join(map(sql_str, missing))
             if isinstance(dt, StringType):
                 # already a string — drop the no-op cast
-                cond = cond | qcol(c).isin(*missing)
+                cond += f" OR {ident} IN ({symbols})"
             elif (isinstance(dt, NumericType)
                   and not any(map(_parses_as_number, missing))):
                 # no number prints as "" or "{}": skip the per-row
@@ -229,12 +231,10 @@ def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
                 # "{}", so other types keep the cast below.
                 pass
             else:
-                cond = cond | qcol(c).cast("string").isin(*missing)
-        exprs.append(
-            F.when(cond, F.lit(1)).otherwise(F.lit(0))
-            .cast("tinyint").alias(f"__m_{_chan(c)}"),
-        )
-    return df.select(*exprs)
+                cond += f" OR CAST({ident} AS STRING) IN ({symbols})"
+        exprs.append(f"CAST(CASE WHEN {cond} THEN 1 ELSE 0 END AS TINYINT)"
+                     f" AS __m{chans[c]}")
+    return df.selectExpr(*exprs)
 
 
 def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:

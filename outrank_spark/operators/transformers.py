@@ -270,13 +270,6 @@ def enrich_with_transformations(
     return out, kept
 
 
-def _numeric_sql(col: str) -> str:
-    return (
-        f"CASE WHEN length(regexp_replace(CAST(`{col}` AS STRING), '\"', '')) = 0 "
-        f"THEN 0.0 ELSE CAST(regexp_replace(CAST(`{col}` AS STRING), '\"', '') AS DOUBLE) END"
-    )
-
-
 def with_baseline_features(
     df: DataFrame,
     missing_value_symbols=("",),

@@ -36,7 +36,7 @@ from outrank_spark.operators.pair_scoring import (
 )
 from outrank_spark.operators.sketch_build import SketchPlan, build_sketches
 from outrank_spark.plans.combinations import CombinationPlanner
-from outrank_spark.hashing import qcol
+from outrank_spark.hashing import sql_ident
 
 __all__ = ["RankingConfig", "RankingResult", "run_ranking",
            "feature_singles_summary", "aggregate_interactions"]
@@ -139,8 +139,8 @@ def run_ranking(spark, df: DataFrame, cfg: RankingConfig,
     # the sketch job's tail back-fills executor slots while the
     # scoring stages run, and vice versa) — measured 4.5 s -> ~3.3 s
     # on the 300k-page bench job (OPTIMIZATION_r06.md)
-    sub = deterministic_subsample(df.select(*[qcol(c).alias(c) for c in columns]), cfg.subsampling,
-                                  key_cols=columns)
+    sub = deterministic_subsample(df.selectExpr(*map(sql_ident, columns)),
+                                  cfg.subsampling, key_cols=columns)
 
     # --- sketch scan (background): cardinality + counts + coverage --
     plan = sketch_plan_for(cfg, columns)
@@ -150,7 +150,7 @@ def run_ranking(spark, df: DataFrame, cfg: RankingConfig,
 
     pool = ThreadPoolExecutor(max_workers=1)
     sketch_future = pool.submit(
-        inheritable_thread_target(lambda: build_sketches(sub, plan)))
+        inheritable_thread_target(spark)(lambda: build_sketches(sub, plan)))
 
     try:
         # one cheap metadata job (count of the subsample — row-count

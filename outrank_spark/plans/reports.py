@@ -24,8 +24,9 @@ import json
 import os
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from outrank_spark.hashing import sql_ident
 from outrank_spark.plans.ranking_job import (
     RankingConfig,
     RankingResult,
@@ -51,18 +52,16 @@ def feature_memory_estimate(df: DataFrame, columns: list[str]) -> dict[str, floa
     """Average encoded bytes per value per column — exact one-pass
     version of ``compute_feature_memory_consumption``
     (core_ranking.py:394-406)."""
-    from outrank_spark.hashing import qcol
-
     out: dict[str, float] = {}
     # chunked (vault-enriched relations reach 400+ columns; one agg
     # with that many expressions strains codegen); positional aliases
     # because feature names may contain dots
     for lo in range(0, len(columns), 192):
         part = columns[lo:lo + 192]
-        row = df.agg(
+        row = df.selectExpr(
             *[
-                F.avg(F.length(F.encode(qcol(c).cast("string"), "utf-8")))
-                .alias(f"s{i}")
+                f"avg(length(encode(CAST({sql_ident(c)} AS STRING),"
+                f" 'utf-8'))) AS s{i}"
                 for i, c in enumerate(part)
             ],
         ).first()
@@ -94,22 +93,24 @@ def numeric_feature_statistics(df: DataFrame,
 
     if not numeric_columns:
         return None
-    uniq = F.count_distinct if exact_unique else F.approx_count_distinct
+    uniq = ("count(DISTINCT {})" if exact_unique
+            else "approx_count_distinct({})")
     aggs = []
-    for c in numeric_columns:
-        v = F.col(c).cast("double")
-        aggs += [F.min(v).alias(f"__mn_{c}"), F.max(v).alias(f"__mx_{c}"),
-                 F.avg(v).alias(f"__me_{c}"), uniq(v).alias(f"__nu_{c}")]
-    row = df.agg(*aggs).first()
+    for i, c in enumerate(numeric_columns):
+        v = f"CAST({sql_ident(c)} AS DOUBLE)"
+        aggs += [f"min({v}) AS mn{i}", f"max({v}) AS mx{i}",
+                 f"avg({v}) AS me{i}", uniq.format(v) + f" AS nu{i}"]
+    # aggregate-only selectExpr: one global aggregate, like df.agg
+    row = df.selectExpr(*aggs).first()
     out = [
         {
             "Feature": c,
-            "Minimum": _round_half_away(row[f"__mn_{c}"], 2),
-            "Maximum": _round_half_away(row[f"__mx_{c}"], 2),
-            "Median": _round_half_away(row[f"__me_{c}"], 2),
-            "Num avg. unique (batch)": int(row[f"__nu_{c}"]),
+            "Minimum": _round_half_away(row[f"mn{i}"], 2),
+            "Maximum": _round_half_away(row[f"mx{i}"], 2),
+            "Median": _round_half_away(row[f"me{i}"], 2),
+            "Num avg. unique (batch)": int(row[f"nu{i}"]),
         }
-        for c in numeric_columns
+        for i, c in enumerate(numeric_columns)
     ]
     return pd.DataFrame(
         out, columns=["Feature", "Minimum", "Maximum", "Median",

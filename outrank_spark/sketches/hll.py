@@ -62,8 +62,9 @@ class HyperLogLog:
     sparse blobs shuffle ~5 bytes per distinct value.  The wire format
     is canonical for the family (sparse iff count <= m/5, entries in
     sorted index order), so bitwise merge order-independence is
-    preserved.  The flag is part of the family contract (like p):
-    mixed-mode merges raise, and the flag survives serialization.
+    preserved.  The flag is part of the family contract (like p) and
+    survives serialization; merging a sparse and a dense sketch
+    promotes the result to the dense family.
     """
 
     kind = "hll"
@@ -150,8 +151,9 @@ class HyperLogLog:
     def merge(self, other: "HyperLogLog") -> "HyperLogLog":
         if other.p != self.p:
             raise ValueError("cannot merge HLLs with different precision")
-        if other.sparse != self.sparse:
-            raise ValueError("cannot merge sparse and dense HLL families")
+        if other.sparse != self.sparse:   # promote to the dense family
+            self._densify()
+            self.sparse = False
         if self._entries is not None and other._entries is not None:
             d = self._entries
             for ji, ri in other._entries.items():

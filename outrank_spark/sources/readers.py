@@ -37,6 +37,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from outrank_spark.hashing import sql_ident
 
 __all__ = ["DatasetInfo", "read_csv_raw", "read_ob_csv", "read_ob_vw",
            "read_ob_raw_dump", "parse_namespace_file", "read_dataset",
@@ -173,7 +174,7 @@ def _read_csv(spark: SparkSession, path: str) -> DatasetInfo:
     with open(path, encoding="iso-8859-1", newline="") as f:
         raw_header = f.readline().rstrip("\r\n")
     header = next(csv.reader([raw_header]))
-    schema = ", ".join(f"`{c}` string" for c in header)
+    schema = ", ".join(f"{sql_ident(c)} string" for c in header)
     opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_c"}
     # spark.read.text splits on \n and keeps a trailing \r from CRLF
     # files — strip it, or the header byte-match misses and the last

@@ -37,7 +37,7 @@ import time
 import pandas as pd
 
 from outrank_spark.operators.pair_scoring import score_batches
-from outrank_spark.hashing import qcol
+from outrank_spark.hashing import sql_ident
 from outrank_spark.operators.sketch_build import (
     SketchCollection,
     build_sketches,
@@ -136,7 +136,7 @@ class StreamingRankingAccumulator:
         t0 = time.time()
         cfg = self.cfg
         columns = cfg.feature_columns or list(batch_df.columns)
-        sub = batch_df.select(*[qcol(c).alias(c) for c in columns])
+        sub = batch_df.selectExpr(*map(sql_ident, columns))
         if cfg.subsampling > 1:
             from outrank_spark.operators.pair_scoring import (
                 deterministic_subsample,

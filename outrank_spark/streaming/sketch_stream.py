@@ -139,8 +139,8 @@ def keyed_sketch_stream(stream, key_col: str, value_col: str,
     params = dict(params or {})
     if kind == "hll":
         # match build_grouped_sketches' sparse default so streaming
-        # per-key blobs stay bitwise-comparable/mergeable with the
-        # batch build (sparse and dense HLL families do not merge)
+        # per-key blobs stay bitwise-comparable with the batch build
+        # (a sparse/dense merge promotes to the dense wire format)
         params.setdefault("sparse", True)
     if not hasattr(SKETCH_REGISTRY[kind](**params), "estimate"):
         raise ValueError(f"kind {kind!r} has no estimate(); "

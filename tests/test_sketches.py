@@ -602,13 +602,22 @@ class TestSparseHLL:
         assert len(d.to_bytes()) >= 16384
         assert len(s.to_bytes()) < 1024
 
-    def test_mixed_family_merge_raises(self):
-        s = HyperLogLog(p=10, sparse=True)
-        d = HyperLogLog(p=10)
-        with pytest.raises(ValueError):
-            s.merge(d)
-        with pytest.raises(ValueError):
-            d.merge(s)
+    def test_mixed_family_merge_promotes(self):
+        rng = np.random.default_rng(11)
+        a, b = rng.integers(0, 10**9, size=(2, 60))
+        ref = HyperLogLog(p=10)
+        ref.update(np.concatenate([a, b]))
+
+        def build(vals, sparse):
+            out = HyperLogLog(p=10, sparse=sparse)
+            out.update(vals)
+            return out
+
+        for merged in (build(a, True).merge(build(b, False)),
+                       build(b, False).merge(build(a, True))):
+            assert merged.sparse is False
+            np.testing.assert_array_equal(merged.registers, ref.registers)
+            assert merged.to_bytes() == ref.to_bytes()
 
     def test_union_helper_handles_sparse(self):
         from outrank_spark.sketches.hll import hll_union
