@@ -318,7 +318,7 @@ def _task_ranking(spark, args) -> None:
     numeric_stats = numeric_feature_statistics(
         df, sorted(info.numeric_columns),
     ) if info.numeric_columns else None
-    memory = feature_memory_estimate(df, columns)
+    memory = feature_memory_estimate(result.sketches, columns)
     write_reports(
         result, cfg, args.output_folder, memory=memory, timings=timings,
         three_mr=three_mr, numeric_stats=numeric_stats,

@@ -23,7 +23,7 @@ import itertools
 from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
-from outrank_spark.hashing import qcol, sql_ident
+from outrank_spark.hashing import sql_ident
 
 __all__ = [
     "with_interaction_features",
@@ -223,33 +223,27 @@ def with_noise_features(
     draws (reproducibility upgrade); the int-sequence control uses
     ``monotonically_increasing_id`` (a stable per-row ordinal, not a
     contiguous range — order is undefined for distributed data)."""
-    exprs = [
-        F.lit(0).cast("string").alias("CONTROL-constant0"),
-        F.randn(seed).cast("string").alias("CONTROL-gaussian"),
-        F.rand(seed + 1).cast("string").alias("CONTROL-uniform"),
-        (F.rand(seed + 2) * 2).cast("int").cast("string")
-        .alias("CONTROL-random-binary"),
-        (F.rand(seed + 3) * 101).cast("int").cast("string")
-        .alias("CONTROL-random-card100"),
-        (F.rand(seed + 4) * 2001).cast("int").cast("string")
-        .alias("CONTROL-random-card2k"),
-        (F.rand(seed + 5) * 10001).cast("int").cast("string")
-        .alias("CONTROL-random-card10k"),
-        (F.rand(seed + 6) * 50001).cast("int").cast("string")
-        .alias("CONTROL-random-card50k"),
-        F.monotonically_increasing_id().cast("string")
-        .alias("CONTROL-int-sequence"),
-        F.lower(
-            F.hex(F.xxhash64(*[qcol(c).cast("string") for c in df.columns])),
-        ).alias("CONTROL-volume"),
-    ]
-    names = [
-        "CONTROL-constant0", "CONTROL-gaussian", "CONTROL-uniform",
-        "CONTROL-random-binary", "CONTROL-random-card100",
-        "CONTROL-random-card2k", "CONTROL-random-card10k",
-        "CONTROL-random-card50k", "CONTROL-int-sequence", "CONTROL-volume",
-    ]
+    volume = ", ".join(f"CAST({sql_ident(c)} AS STRING)" for c in df.columns)
+    exprs = {
+        "CONTROL-constant0": "CAST(0 AS STRING)",
+        "CONTROL-gaussian": f"CAST(randn({seed}) AS STRING)",
+        "CONTROL-uniform": f"CAST(rand({seed + 1}) AS STRING)",
+        "CONTROL-random-binary": _rand_int(seed + 2, 2),
+        "CONTROL-random-card100": _rand_int(seed + 3, 101),
+        "CONTROL-random-card2k": _rand_int(seed + 4, 2001),
+        "CONTROL-random-card10k": _rand_int(seed + 5, 10001),
+        "CONTROL-random-card50k": _rand_int(seed + 6, 50001),
+        "CONTROL-int-sequence":
+            "CAST(monotonically_increasing_id() AS STRING)",
+        "CONTROL-volume": f"lower(hex(xxhash64({volume})))",
+    }
     if label_column and label_column in df.columns:
-        exprs.append(F.col(label_column).cast("string").alias("CONTROL-target"))
-        names.append("CONTROL-target")
-    return df.select("*", *exprs), names
+        exprs["CONTROL-target"] = f"CAST({sql_ident(label_column)} AS STRING)"
+    return (df.selectExpr("*", *[f"{e} AS {sql_ident(n)}"
+                                 for n, e in exprs.items()]),
+            list(exprs))
+
+
+def _rand_int(seed: int, n: int) -> str:
+    """A uniform integer in [0, n) as a string, from ``rand(seed)``."""
+    return f"CAST(CAST(rand({seed}) * {n} AS INT) AS STRING)"

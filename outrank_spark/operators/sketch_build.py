@@ -2,34 +2,30 @@
 
 The reference accumulates its sketches in module-level dicts mutated
 batch-by-batch on one process (core_ranking.py:41-44, 439-462).  Here
-the same state is a *mergeable UDAF* executed in three stages
+the same state is a *mergeable UDAF* executed in two stages
 (SURVEY.md §3.1 "Spark lifecycle equivalent"):
 
   stage 1  ``mapInPandas`` over only the requested columns (Catalyst
            prunes the scan to exactly those) — each partition builds
            one local sketch per (column, kind) in a single vectorized
            pass and emits it as a serialized blob row;
-  stage 2  associative merge of the blobs, either
-           * ``grouped``: ``groupBy(column, kind)`` + ``applyInPandas``
-             reduce — merges all columns' partials in parallel across
-             the cluster (one small shuffle of P x C x K blob rows), or
-           * ``tree``: ``RDD.treeAggregate`` of {key -> blob} dicts
-             with logarithmic depth — the north-rule treeReduce path,
-             best when C x K is small and P is huge;
-  stage 3  tiny final collect -> :class:`SketchCollection` on the
-           driver.
+  stage 2  ``collect`` of the P x K partial blobs and an associative
+           fold per (column, kind) on the driver, giving the
+           :class:`SketchCollection`.  The driver holds P partitions x
+           per-partition state — the bytes a shuffle merge would move
+           — and the build is one Spark job with no shuffle stage.
 
 Because every kernel's merge is associative + commutative (max / or /
 add), any partitioning or merge order produces identical final state —
 tested bitwise in tests/test_spark_sketch_build.py.
 
-Skewed *grouped* sketches (per-host etc.) are handled in
-:func:`build_grouped_sketches` by salting the hot keys before a
-two-level merge — sketches are mergeable, so salting is exact.
+Per-key sketches (per-host etc.) have an unbounded key count, so
+:func:`build_grouped_sketches` keeps a shuffle merge and defuses skew
+by salting the hot keys before a two-level merge — sketches are
+mergeable, so salting is exact.
 """
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 from typing import Iterable, Iterator, Sequence
 
@@ -139,6 +135,7 @@ def _build_partition(plan: SketchPlan):
     Input channels per (column number i, kind):
       * ``__h<i>``  int64 xxhash64  -> hll / parity_hll (fast path)
       * ``__m<i>``  0/1 missing    -> coverage (fast path)
+      * ``__b<i>``  UTF-8 length of the string form -> bytes
       * ``__c<i>``  raw values     -> counter / cms / bloom / kll /
                                       tdigest, and any kind whose
                                       fast-path column is absent
@@ -159,6 +156,9 @@ def _build_partition(plan: SketchPlan):
                     continue
                 if kind == "coverage" and f"__m{i}" in pdf.columns:
                     sk.update_flags(pdf[f"__m{i}"].to_numpy())
+                    continue
+                if kind == "bytes":
+                    sk.update(pdf[f"__b{i}"])
                     continue
                 vals = pdf[f"__c{i}"]
                 if kind in _NUMERIC_ONLY:
@@ -199,8 +199,12 @@ def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
     raw_needed = set()
     hash_cols: list[str] = []
     flag_specs: list[tuple[str, dict]] = []
+    length_cols: list[str] = []
     for col, kind in keys:
-        if jvm_prehash and kind in _HASH_INPUT:
+        if kind == "bytes":
+            # the JVM's string form, whatever the column type
+            length_cols.append(col)
+        elif jvm_prehash and kind in _HASH_INPUT:
             if col not in hash_cols:
                 hash_cols.append(col)
         elif jvm_prehash and kind == "coverage":
@@ -212,6 +216,9 @@ def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
              if c in raw_needed]
     for c in hash_cols:
         exprs.append(f"xxhash64({sql_ident(c)}) AS __h{chans[c]}")
+    for c in length_cols:
+        exprs.append(f"octet_length(CAST({sql_ident(c)} AS STRING))"
+                     f" AS __b{chans[c]}")
     types = {f.name: f.dataType for f in df.schema.fields}
     for c, params in flag_specs:
         missing = tuple(params.get("missing_symbols", ("", "{}")))
@@ -238,21 +245,21 @@ def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
 
 
 def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Stage-2 grouped reducer: fold a group's partial blobs."""
-    acc = None
+    """Grouped reducer: fold a (column, kind) group's partial blobs."""
     kind = pdf["kind"].iloc[0]
-    for blob in pdf["blob"]:
-        sk = sketch_from_bytes(kind, bytes(blob))
-        acc = sk if acc is None else acc.merge(sk)
     return pd.DataFrame(
         {"column": [pdf["column"].iloc[0]], "kind": [kind],
-         "blob": [acc.to_bytes()]},
+         "blob": [_fold_blobs(kind, pdf["blob"])]},
     )
 
 
-def build_sketches(df, plan: SketchPlan, merge: str = "grouped",
+def build_sketches(df, plan: SketchPlan,
                    jvm_prehash: bool = True) -> SketchCollection:
     """Build all sketches in ``plan`` over ``df`` in one scan.
+
+    The per-partition partial blobs are collected and folded per
+    (column, kind) on the driver, which therefore holds P partitions x
+    per-partition state at once (for K keys, at most P x K blobs).
 
     ``jvm_prehash`` routes cardinality sketches through JVM-side
     xxhash64 longs and coverage through JVM missing-flags — Arrow then
@@ -260,46 +267,14 @@ def build_sketches(df, plan: SketchPlan, merge: str = "grouped",
     objects for every kind that never needs the raw value.
     """
     pruned = _scan_inputs(df, plan, jvm_prehash)
-    blobs = pruned.mapInPandas(_build_partition(plan), schema=_BLOB_SCHEMA)
-
-    if merge == "grouped":
-        merged = (
-            blobs.groupBy("column", "kind")
-            .applyInPandas(_merge_group, schema=_BLOB_SCHEMA)
-            .collect()
-        )
-        out = SketchCollection()
-        for row in merged:
-            out[(row["column"], row["kind"])] = sketch_from_bytes(
-                row["kind"], bytes(row["blob"]),
-            )
-        return out
-
-    if merge == "tree":
-        rdd = blobs.rdd.map(
-            lambda r: {(r["column"], r["kind"]): bytes(r["blob"])},
-        )
-        n_parts = max(rdd.getNumPartitions(), 2)
-        depth = max(2, int(math.ceil(math.log(n_parts, 4))))
-
-        def seq_comb(a: dict, b: dict) -> dict:
-            for key, blob in b.items():
-                if key in a:
-                    merged_sk = sketch_from_bytes(key[1], a[key]).merge(
-                        sketch_from_bytes(key[1], blob),
-                    )
-                    a[key] = merged_sk.to_bytes()
-                else:
-                    a[key] = blob
-            return a
-
-        final = rdd.treeAggregate({}, seq_comb, seq_comb, depth=depth)
-        return SketchCollection(
-            {key: sketch_from_bytes(key[1], blob)
-             for key, blob in final.items()},
-        )
-
-    raise ValueError(f"unknown merge strategy {merge!r}")
+    rows = pruned.mapInPandas(_build_partition(plan),
+                              schema=_BLOB_SCHEMA).collect()
+    partials: dict[tuple[str, str], list] = {}
+    for row in rows:
+        partials.setdefault((row["column"], row["kind"]), []).append(
+            row["blob"])
+    return SketchCollection(
+        {key: _fold(key[1], blobs) for key, blobs in partials.items()})
 
 
 def probe_bloom(df, col: str, blob: bytes):
@@ -384,12 +359,16 @@ def build_grouped_sketches(df, key_col: str, value_col: str,
     return final
 
 
-def _fold_blobs(kind: str, blobs: Iterable[bytes]) -> bytes:
+def _fold(kind: str, blobs: Iterable[bytes]):
     acc = None
     for b in blobs:
         sk = sketch_from_bytes(kind, bytes(b))
         acc = sk if acc is None else acc.merge(sk)
-    return acc.to_bytes()
+    return acc
+
+
+def _fold_blobs(kind: str, blobs: Iterable[bytes]) -> bytes:
+    return _fold(kind, blobs).to_bytes()
 
 
 def rollup_grouped_sketches(blobs, key_map, kind: str = "hll"):
@@ -482,8 +461,7 @@ def grouped_quantiles(df, key_col: str, value_col: str,
 
 
 def exact_heavy_hitters(df, col: str, threshold: int,
-                        k: int = 4096, merge: str = "grouped",
-                        count_alias: str = "n"):
+                        k: int = 4096, count_alias: str = "n"):
     """EXACT distributed heavy-hitter enumeration via Misra-Gries
     candidate-verify: every value occurring >= ``threshold`` times,
     with its exact count, WITHOUT a full-width groupBy shuffle.
@@ -509,7 +487,7 @@ def exact_heavy_hitters(df, col: str, threshold: int,
     from pyspark.sql import functions as F
 
     plan = SketchPlan(columns=[col], sketches={"mg": {"k": k}})
-    mg = build_sketches(df, plan, merge=merge)[(col, "mg")]
+    mg = build_sketches(df, plan)[(col, "mg")]
     exact = (
         df.select(qcol(col).alias(col))
         .where(qcol(col).isNotNull())

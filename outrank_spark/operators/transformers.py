@@ -26,7 +26,7 @@ from outrank_spark.functions.expr_vault import (
     ExprError, ParsedExpr, _SparkTranslator, parse_expr,
 )
 from outrank_spark.functions.vault import resolve_preset
-from outrank_spark.hashing import qcol
+from outrank_spark.hashing import qcol, sql_ident, sql_str
 
 __all__ = ["BatchTransformer", "enrich_with_transformations",
            "with_baseline_features"]
@@ -284,23 +284,21 @@ def with_baseline_features(
       Spark frames carry real nulls where pandas frames held '');
     * ``BASELINE-DUMMY`` — constant 0.
 
-    One flat ``select``; both land as strings like every other derived
-    feature column.
+    One flat ``selectExpr`` of SQL text; both land as strings like every
+    other derived feature column.
     """
     cols = [c for c in (columns or df.columns)]
-    missing = tuple(missing_value_symbols)
+    symbols = ", ".join(map(sql_str, missing_value_symbols))
     flags = []
     for c in cols:
-        cond = qcol(c).isNull()
-        if missing:
-            cond = cond | qcol(c).cast("string").isin(*missing)
-        flags.append(F.when(cond, 1).otherwise(0))
-    prop = F.round(
-        sum(flags[1:], flags[0]) / F.lit(float(len(cols))), 1,
-    ).cast("string")
-    out = df.select(
+        cond = f"{sql_ident(c)} IS NULL"
+        if symbols:
+            cond += f" OR CAST({sql_ident(c)} AS STRING) IN ({symbols})"
+        flags.append(f"CASE WHEN {cond} THEN 1 ELSE 0 END")
+    prop = f"round(({' + '.join(flags)}) / {float(len(cols))!r}D, 1)"
+    out = df.selectExpr(
         "*",
-        prop.alias("BASELINE-MISSING-PROPORTION"),
-        F.lit(0).cast("string").alias("BASELINE-DUMMY"),
+        f"CAST({prop} AS STRING) AS `BASELINE-MISSING-PROPORTION`",
+        "CAST(0 AS STRING) AS `BASELINE-DUMMY`",
     )
     return out, ["BASELINE-MISSING-PROPORTION", "BASELINE-DUMMY"]

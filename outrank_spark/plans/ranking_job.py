@@ -6,8 +6,9 @@ SURVEY.md §3.1):
 
   1. deterministic subsample of the input (hash-mod, order-free);
   2. ONE vectorized scan building all per-column sketches
-     (parity-HLL cardinality, bounded counter, CMS) via the mergeable
-     sketch operator + exact one-pass coverage/bounds aggregates;
+     (parity-HLL cardinality, bounded counter, coverage, encoded
+     bytes) via the mergeable sketch operator, its partials folded on
+     the driver;
   3. minibatch pair scoring: batch assignment -> ``applyInPandas``
      scoring of the planned pair list -> symmetrized triplets;
   4. median-of-batches aggregation: ``groupBy(a, b).agg(median)``;
@@ -16,8 +17,9 @@ SURVEY.md §3.1):
      normalization for MI heuristics (task_summary.py:33-48),
      interaction re-aggregation, 3MR post-processing.
 
-Stages 2 and 3 are the only passes over data; both shuffle a tiny
-fraction of the input (sketch blobs / subsampled scoring columns).
+Stages 2 and 3 are the only passes over the data.  Only stage 3
+shuffles (the subsampled scoring columns); stage 2 collects one small
+blob per partition and (column, kind).
 """
 from __future__ import annotations
 
@@ -101,12 +103,14 @@ class RankingResult:
 
 def sketch_plan_for(cfg: RankingConfig, columns: list[str]) -> SketchPlan:
     """The ranking job's per-column sketch plan: cardinality (parity
-    HLL), bounded value counts, coverage, optional rare-value counter,
-    with exact-count kinds guarded off derived (near-unique) columns."""
+    HLL), bounded value counts, coverage, mean encoded bytes (for
+    ``memory.tsv``), optional rare-value counter, with exact-count
+    kinds guarded off derived (near-unique) columns."""
     sketch_kinds = {
         "parity_hll": ({} if cfg.hll_p is None else {"p": cfg.hll_p}),
         "counter": {"bound": cfg.max_unique_hist_constraint},
         "coverage": {"missing_symbols": cfg.missing_value_symbols},
+        "bytes": {},
         **(cfg.extra_sketches or {}),
     }
     if cfg.rare_value_count_upper_bound is not None:
@@ -134,7 +138,7 @@ def run_ranking(spark, df: DataFrame, cfg: RankingConfig,
     # two lazy passes over the (possibly upstream-cached) input —
     # a cache write of wide string columns costs more than the scans,
     # and the sketch scan and the scoring scan are INDEPENDENT jobs
-    # (cardinality/coverage only feed the post-hoc feature renaming),
+    # (the sketches only feed the post-hoc renaming and reports),
     # so they run concurrently on one scheduler (guide §2.6 overlap:
     # the sketch job's tail back-fills executor slots while the
     # scoring stages run, and vice versa) — measured 4.5 s -> ~3.3 s
@@ -142,7 +146,7 @@ def run_ranking(spark, df: DataFrame, cfg: RankingConfig,
     sub = deterministic_subsample(df.selectExpr(*map(sql_ident, columns)),
                                   cfg.subsampling, key_cols=columns)
 
-    # --- sketch scan (background): cardinality + counts + coverage --
+    # --- sketch scan (background): cardinality, counts, coverage, bytes
     plan = sketch_plan_for(cfg, columns)
     from concurrent.futures import ThreadPoolExecutor
 

@@ -48,27 +48,16 @@ def _round_half_away(x, nd: int = 2):
 
     scale = 10 ** nd
     return math.copysign(math.floor(abs(x) * scale + 0.5), x) / scale
-def feature_memory_estimate(df: DataFrame, columns: list[str]) -> dict[str, float]:
-    """Average encoded bytes per value per column — exact one-pass
-    version of ``compute_feature_memory_consumption``
-    (core_ranking.py:394-406)."""
-    out: dict[str, float] = {}
-    # chunked (vault-enriched relations reach 400+ columns; one agg
-    # with that many expressions strains codegen); positional aliases
-    # because feature names may contain dots
-    for lo in range(0, len(columns), 192):
-        part = columns[lo:lo + 192]
-        row = df.selectExpr(
-            *[
-                f"avg(length(encode(CAST({sql_ident(c)} AS STRING),"
-                f" 'utf-8'))) AS s{i}"
-                for i, c in enumerate(part)
-            ],
-        ).first()
-        for i, c in enumerate(part):
-            v = row[f"s{i}"]
-            out[c] = float(v) if v is not None else 0.0
-    return out
+
+
+def feature_memory_estimate(sketches, columns: list[str]) -> dict[str, float]:
+    """Average encoded bytes per value per column, read from the
+    ranking scan's ``bytes`` sketches (the reference's
+    ``compute_feature_memory_consumption``, core_ranking.py:394-406).
+    As in the reference, the average is taken over the subsampled rows
+    the ranking scored, not over the whole input; nulls are skipped,
+    as SQL ``avg`` skips them."""
+    return {c: sketches[(c, "bytes")].mean() for c in columns}
 
 
 def numeric_feature_statistics(df: DataFrame,
@@ -215,7 +204,7 @@ def write_reports(result: RankingResult, cfg: RankingConfig,
     # (task_ranking.py:282-288): per column, how many distinct values
     # repeat more than {0, 1, 10, 100, ...} times
     out_dict = {}
-    for (col, kind), sk in result.sketches.items():
+    for (col, kind), sk in sorted(result.sketches.items()):
         if kind != "counter":
             continue
         hist = np.array(list(sk.counts.values())) if len(sk) else np.array([0])

@@ -2,12 +2,12 @@
 
 Every sketch follows the same mergeable-accumulator contract, which is
 what lets the Spark layer (``outrank_spark.operators.sketch_build``)
-build per-partition state in a single ``mapInPandas`` pass and merge it
-associatively with ``treeReduce``/grouped reduction:
+build per-partition state in a single ``mapInPandas`` pass and fold the
+partials associatively on the driver:
 
     update(values)            -- absorb a 1-D array (vectorized)
     merge(other) -> self      -- associative + commutative combine
-    to_bytes() / from_bytes() -- stable wire format for shuffle/driver
+    to_bytes() / from_bytes() -- stable wire format for collect/state
     estimate()/query(...)     -- finalizer
 
 Re-expressed from scratch against the behavior of the reference's
@@ -25,6 +25,7 @@ from outrank_spark.sketches.kll import KLLSketch
 from outrank_spark.sketches.tdigest import TDigest
 from outrank_spark.sketches.counters import BoundedCounter
 from outrank_spark.sketches.coverage import CoverageCounter
+from outrank_spark.sketches.bytesize import ByteSize
 from outrank_spark.sketches.rare import RareValueCounter
 from outrank_spark.sketches.frequent import FrequentItems, WeightedFrequentItems
 from outrank_spark.sketches.theta import ThetaSketch
@@ -43,6 +44,7 @@ SKETCH_REGISTRY = {
     "tdigest": TDigest,
     "counter": BoundedCounter,
     "coverage": CoverageCounter,
+    "bytes": ByteSize,
     "rare": RareValueCounter,
     "mg": FrequentItems,
     "theta": ThetaSketch,
@@ -63,7 +65,7 @@ def sketch_from_bytes(kind: str, blob: bytes):
 
 __all__ = [
     "HyperLogLog", "ParityHyperLogLog", "CountMinSketch", "BloomFilter",
-    "KLLSketch", "TDigest", "BoundedCounter", "CoverageCounter",
+    "KLLSketch", "TDigest", "BoundedCounter", "CoverageCounter", "ByteSize",
     "RareValueCounter", "FrequentItems", "ThetaSketch", "CountSketch",
     "FrequentDirections", "DDSketch", "SlidingHyperLogLog",
     "CountingBloomFilter", "WeightedFrequentItems",

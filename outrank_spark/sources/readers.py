@@ -204,11 +204,11 @@ def invalid_line_summary(info: DatasetInfo,
     ``invalid_lines`` counter + bounded ``invalid_line_queue``."""
     if info.invalid_lines is None:
         return 0, []
-    inv = info.invalid_lines.cache()
-    count = inv.count()
-    samples = [r["line"] for r in inv.limit(max_samples).collect()]
-    inv.unpersist()
-    return count, samples
+    count = info.invalid_lines.count()
+    if not count:
+        return 0, []
+    return count, [r["line"] for r in
+                   info.invalid_lines.limit(max_samples).collect()]
 
 
 def read_csv_raw(spark: SparkSession, data_path: str) -> DatasetInfo:

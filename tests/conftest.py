@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -25,3 +27,33 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``with count_jobs() as n: ...`` fills ``n`` with the Spark jobs
+    and tasks the block ran: the block runs in its own job group
+    (threads started through ``inheritable_thread_target`` inherit
+    it), counted afterwards from the status tracker."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    @contextmanager
+    def counted():
+        group = f"counted-{id(groups)}-{next(groups)}"
+        sc.setJobGroup(group, group)
+        counts = {}
+        try:
+            yield counts
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            tracker = sc.statusTracker()
+            jobs = tracker.getJobIdsForGroup(group)
+            stages = [s for j in jobs if tracker.getJobInfo(j)
+                      for s in tracker.getJobInfo(j).stageIds]
+            counts["jobs"] = len(jobs)
+            counts["tasks"] = sum(tracker.getStageInfo(s).numTasks
+                                  for s in stages
+                                  if tracker.getStageInfo(s))
+
+    return counted

@@ -48,6 +48,34 @@ class TestCliParser:
             main(["--task", "ranking"])
 
 
+class TestCliJobBudget:
+    def test_csv_raw_ranking_call_job_budget(self, spark, tmp_path,
+                                             count_jobs):
+        """One in-process ``--task ranking --data_source csv-raw`` call
+        on a small clean file runs at most 8 Spark jobs: the sketch
+        scan folds its partials on the driver (no shuffle), memory.tsv
+        comes from that scan, and a clean file's invalid-line summary
+        is a single count."""
+        from outrank_spark.jobs import rank_job
+
+        data = tmp_path / "data"
+        data.mkdir()
+        rows = [",".join(["label", *[f"f{k}" for k in range(6)]])]
+        rows += [",".join([str(i % 2), *[str((i * (k + 3)) % (k + 5))
+                                         for k in range(6)]])
+                 for i in range(400)]
+        (data / "data.csv").write_text("\n".join(rows) + "\n")
+        args = rank_job.build_parser().parse_args([
+            "--task", "ranking", "--data_source", "csv-raw",
+            "--data_path", str(data), "--subsampling", "2",
+            "--output_folder", str(tmp_path / "out"), "--tldr", "False",
+        ])
+        with count_jobs() as n:
+            rank_job.run_task(spark, args)
+        assert os.path.exists(tmp_path / "out" / "memory.tsv")
+        assert n["jobs"] <= 8, n
+
+
 @pytest.mark.slow
 class TestCliSelftestGolden:
     def test_selftest_through_subprocess(self, tmp_path):

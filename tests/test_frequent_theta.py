@@ -236,9 +236,9 @@ def test_theta_group_overlap_vs_exact(spark):
             assert abs(r["est_intersection"] - true_i) / true_i < 0.2
 
 
-def test_mg_theta_through_build_sketches_tree_and_grouped(spark):
-    """Both new kinds flow through the generic one-scan build on both
-    merge strategies; theta rides the JVM-prehash channel."""
+def test_mg_theta_through_build_sketches(spark):
+    """Both new kinds flow through the generic one-scan build; theta
+    rides the JVM-prehash channel."""
     from outrank_spark.operators.sketch_build import SketchPlan, build_sketches
 
     rng = np.random.default_rng(6)
@@ -251,19 +251,18 @@ def test_mg_theta_through_build_sketches_tree_and_grouped(spark):
         sketches={"mg": {"k": 512}, "theta": {"k": 2048}, "hll": {"p": 14}},
     )
     true_distinct = pdf["s"].nunique()
-    for merge in ("grouped", "tree"):
-        skc = build_sketches(df, plan, merge=merge)
-        theta = skc[("s", "theta")]
-        assert abs(theta.estimate() - true_distinct) / true_distinct \
-            < 4 * theta.rse
-        mg = skc[("s", "mg")]
-        assert mg.n == len(pdf)
-        assert mg.err <= mg.worst_case_err
-        vc = pdf["s"].value_counts()
-        top = vc.index[0]
-        assert mg.query(top) <= vc.iloc[0] <= mg.query(top) + mg.err
-        summary = skc.summary()
-        assert set(summary["kind"]) == {"mg", "theta", "hll"}
+    skc = build_sketches(df, plan)
+    theta = skc[("s", "theta")]
+    assert abs(theta.estimate() - true_distinct) / true_distinct \
+        < 4 * theta.rse
+    mg = skc[("s", "mg")]
+    assert mg.n == len(pdf)
+    assert mg.err <= mg.worst_case_err
+    vc = pdf["s"].value_counts()
+    top = vc.index[0]
+    assert mg.query(top) <= vc.iloc[0] <= mg.query(top) + mg.err
+    summary = skc.summary()
+    assert set(summary["kind"]) == {"mg", "theta", "hll"}
 
 
 class TestWeightedFrequentItems:

@@ -188,6 +188,34 @@ class TestValidLineFilter:
         assert count == 2
         assert set(samples) == {"4,5", "6,7,8,9"}
 
+    def test_summary_counts_once_and_samples_only_bad_files(
+            self, spark, tmp_path, count_jobs):
+        """A clean file's summary runs only the count of its invalid
+        lines; the samples are collected only when a line is
+        invalid."""
+        from outrank_spark.sources.readers import (
+            invalid_line_summary,
+            read_csv_raw,
+        )
+
+        bad = ["4,5", "6,7,8,9", "13,14,15,16,17"]
+        summaries, jobs = {}, {}
+        for name, lines in (("clean", []), ("dirty", bad)):
+            d = tmp_path / name
+            d.mkdir()
+            (d / "data.csv").write_text(
+                "\n".join(["a,b,c", "1,2,3", *lines, "10,11,12"]) + "\n")
+            info = read_csv_raw(spark, str(d))
+            with count_jobs() as jobs[name]:
+                summaries[name] = invalid_line_summary(info)
+            with count_jobs() as jobs[name + " count"]:
+                info.invalid_lines.count()
+        assert summaries["clean"] == (0, [])
+        count, samples = summaries["dirty"]
+        assert count == 3 and sorted(samples) == sorted(bad)
+        assert jobs["clean"] == jobs["clean count"], jobs
+        assert jobs["dirty"]["jobs"] > jobs["dirty count"]["jobs"], jobs
+
     def test_clean_file_has_no_invalid(self, spark, tmp_path):
         from outrank_spark.sources.readers import (
             invalid_line_summary,

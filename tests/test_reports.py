@@ -2,6 +2,7 @@
 the expected shape from a small end-to-end ranking run."""
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 
@@ -20,7 +21,7 @@ def run(spark):
                                  variant="naive")
     cfg = RankingConfig(subsampling=1)
     res = run_ranking(spark, df, cfg)
-    mem = feature_memory_estimate(df, list(df.columns))
+    mem = feature_memory_estimate(res.sketches, list(df.columns))
     return df, cfg, res, mem
 
 
@@ -61,6 +62,33 @@ class TestReports:
         df, cfg, res, mem = run
         assert all(v >= 1.0 for v in mem.values())
         assert mem["f0"] == pytest.approx(2.0, abs=0.2)  # 2-digit ints
+
+    def test_memory_estimate_is_mean_encoded_length(self, run):
+        """memory.tsv comes from the ranking scan's ``bytes`` sketches:
+        the mean UTF-8 length of the scored rows' values (all rows at
+        subsampling 1)."""
+        df, cfg, res, mem = run
+        pdf = df.toPandas()
+        assert list(mem) == list(pdf.columns)
+        for c in pdf.columns:
+            want = pdf[c].dropna().astype(str).map(
+                lambda v: len(v.encode("utf-8"))).mean()
+            assert mem[c] == pytest.approx(want), c
+
+    def test_value_repetitions_independent_of_insertion_order(
+            self, run, tmp_path):
+        df, cfg, res, mem = run
+        keys = list(res.sketches)
+        written = []
+        for i, order in enumerate((keys, keys[::-1])):
+            permuted = dataclasses.replace(
+                res, sketches={k: res.sketches[k] for k in order})
+            out = str(tmp_path / f"order{i}")
+            write_reports(permuted, cfg, out)
+            with open(os.path.join(out, "value_repetitions.json"), "rb") as f:
+                written.append(f.read())
+        assert written[0] == written[1]
+        assert list(json.loads(written[0])) == sorted(json.loads(written[0]))
 
     def test_3mr_file(self, run, tmp_path):
         df, cfg, res, mem = run

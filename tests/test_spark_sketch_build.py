@@ -12,7 +12,11 @@ from outrank_spark.operators.derived import (
     with_web_features,
 )
 from outrank_spark.operators.sketch_build import (
+    _BLOB_SCHEMA,
     SketchPlan,
+    _build_partition,
+    _fold,
+    _scan_inputs,
     build_grouped_sketches,
     build_sketches,
 )
@@ -113,16 +117,38 @@ class TestBuildSketches:
             est = skc.cardinality(col)
             assert abs(est - exact) / max(exact, 1) < 4 * 1.04 / np.sqrt(2 ** 14), col
 
-    def test_grouped_equals_tree_bitwise(self, feats):
+    def test_driver_fold_order_invariance_bitwise(self, feats):
+        """The driver fold gives the same blobs for one partition, for
+        sixteen, and for the partial blobs folded in reverse order."""
         plan = SketchPlan(
-            columns=["host", "lang"],
-            sketches={"hll": {"p": 12}, "cms": {"depth": 4, "width": 2 ** 12}},
+            columns=["host", "lang", "text_len"],
+            sketches={"hll": {"p": 12}, "cms": {"depth": 4, "width": 2 ** 12},
+                      "coverage": {}, "bytes": {}},
         )
-        a = build_sketches(feats, plan, merge="grouped")
-        b = build_sketches(feats, plan, merge="tree")
-        assert set(a) == set(b)
-        for key in a:
-            assert a[key].to_bytes() == b[key].to_bytes(), key
+        one = build_sketches(feats.repartition(1), plan)
+        many = build_sketches(feats.repartition(16), plan)
+        rows = _scan_inputs(feats.repartition(16), plan, True).mapInPandas(
+            _build_partition(plan), schema=_BLOB_SCHEMA).collect()
+        assert len(rows) > len(plan.keys())   # several partials per key
+        reverse = {key: _fold(key[1], [bytes(r["blob"]) for r in rows[::-1]
+                                       if (r["column"], r["kind"]) == key])
+                   for key in plan.keys()}
+        assert set(one) == set(many) == set(reverse) == set(plan.keys())
+        for key in one:
+            assert one[key].to_bytes() == many[key].to_bytes(), key
+            assert one[key].to_bytes() == reverse[key].to_bytes(), key
+
+    def test_bytes_sketch_matches_octet_length(self, feats):
+        """The ``bytes`` kind averages the UTF-8 length of each value's
+        string form, skipping nulls, like SQL ``avg(octet_length)``."""
+        cols = ["host", "text_len"]
+        plan = SketchPlan(columns=cols, sketches={"bytes": {}})
+        skc = build_sketches(feats.repartition(5), plan)
+        want = feats.selectExpr(
+            *[f"avg(octet_length(CAST({c} AS STRING))) AS {c}"
+              for c in cols]).first()
+        for c in cols:
+            assert skc[(c, "bytes")].mean() == pytest.approx(want[c]), c
 
     def test_repartition_invariance_bitwise(self, feats):
         plan = SketchPlan(columns=["host"], sketches={"hll": {"p": 12}})

@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from outrank_spark.hashing import qcol
+from outrank_spark.operators.interactions import with_noise_features
 from outrank_spark.operators.pair_scoring import (
     deterministic_subsample,
     score_batches,
@@ -29,6 +30,7 @@ from outrank_spark.operators.sketch_build import (
     _scan_inputs,
     build_sketches,
 )
+from outrank_spark.operators.transformers import with_baseline_features
 from outrank_spark.plans.ranking_job import (
     RankingConfig,
     run_ranking,
@@ -94,7 +96,9 @@ class TestOutsideInputEscaping:
     def test_memory_estimate_matches_encoded_lengths(self, spark, odd_csv):
         folder, pdf = odd_csv
         df = read_dataset(spark, folder, "csv-raw").df
-        got = feature_memory_estimate(df, list(pdf.columns))
+        plan = SketchPlan(columns=list(pdf.columns), sketches={"bytes": {}})
+        got = feature_memory_estimate(build_sketches(df, plan),
+                                      list(pdf.columns))
         for c in pdf.columns:
             # NULL (empty field) is skipped by avg, as in SQL
             vals = pdf[c][pdf[c] != ""]
@@ -122,10 +126,10 @@ def count_round_trips():
 
 
 def test_plan_building_round_trip_budget(spark):
-    """Building (not executing) the sketch scan, the subsample filter
-    and the scoring plan over a 100-column frame costs fewer than two
-    py4j round trips per expression they project (a ``Column`` each
-    would cost ~36)."""
+    """Building (not executing) the sketch scan, the subsample filter,
+    the scoring plan and the noise and baseline controls over a
+    100-column frame costs fewer than two py4j round trips per
+    expression they project (a ``Column`` each would cost ~36)."""
     cols = [f"f{i}" for i in range(100)] + ["label"]
     df = spark.range(4).selectExpr(
         *[f"CAST(id AS STRING) AS {c}" for c in cols])
@@ -142,6 +146,10 @@ def test_plan_building_round_trip_budget(spark):
                                   "MI-numba-randomized", "label",
                                   n_batches=2),
             len(cols)),                         # scoring channels
+        "with_baseline_features": (lambda: with_baseline_features(df),
+                                   len(cols)),  # missing flags
+        "with_noise_features": (lambda: with_noise_features(df, "label"),
+                                len(cols)),     # CONTROL-volume inputs
     }
     trips = {}
     for name, (build, _) in builds.items():
