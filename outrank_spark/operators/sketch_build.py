@@ -9,11 +9,13 @@ the same state is a *mergeable UDAF* executed in two stages
            prunes the scan to exactly those) — each partition builds
            one local sketch per (column, kind) in a single vectorized
            pass and emits it as a serialized blob row;
-  stage 2  ``collect`` of the P x K partial blobs and an associative
-           fold per (column, kind) on the driver, giving the
-           :class:`SketchCollection`.  The driver holds P partitions x
-           per-partition state — the bytes a shuffle merge would move
-           — and the build is one Spark job with no shuffle stage.
+  stage 2  ``RDD.treeAggregate`` of per-partition {(column, kind) ->
+           sketch} dicts with depth ~log4(P): executors fold the P
+           partials level by level, so the driver receives at most ~5
+           dicts of K sketches whatever P is, and folds them into the
+           :class:`SketchCollection`.  Up to 5 partitions there is no
+           merge level: the build is one ``collect`` of the P x K
+           partial blobs, folded on the driver.
 
 Because every kernel's merge is associative + commutative (max / or /
 add), any partitioning or merge order produces identical final state —
@@ -26,6 +28,7 @@ mergeable, so salting is exact.
 """
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 from typing import Iterable, Iterator, Sequence
 
@@ -46,6 +49,8 @@ __all__ = ["SketchPlan", "SketchCollection", "build_sketches",
 
 _NUMERIC_ONLY = {"kll", "tdigest", "ddsketch"}
 _BLOB_SCHEMA = "column string, kind string, blob binary"
+# build_sketches: partial dicts the driver merges itself, at most
+_MAX_DRIVER_PARTIALS = 5
 
 
 @dataclass
@@ -257,9 +262,11 @@ def build_sketches(df, plan: SketchPlan,
                    jvm_prehash: bool = True) -> SketchCollection:
     """Build all sketches in ``plan`` over ``df`` in one scan.
 
-    The per-partition partial blobs are collected and folded per
-    (column, kind) on the driver, which therefore holds P partitions x
-    per-partition state at once (for K keys, at most P x K blobs).
+    The per-partition partial blobs are merged per (column, kind): up
+    to 5 partitions on the driver, beyond that by a ``treeAggregate``
+    whose depth grows with the partition count P.  Either way neither
+    the driver nor any merge task holds more than ~5 partial dicts
+    (each at most K sketches for K keys) at once, for any P.
 
     ``jvm_prehash`` routes cardinality sketches through JVM-side
     xxhash64 longs and coverage through JVM missing-flags — Arrow then
@@ -267,14 +274,34 @@ def build_sketches(df, plan: SketchPlan,
     objects for every kind that never needs the raw value.
     """
     pruned = _scan_inputs(df, plan, jvm_prehash)
-    rows = pruned.mapInPandas(_build_partition(plan),
-                              schema=_BLOB_SCHEMA).collect()
-    partials: dict[tuple[str, str], list] = {}
-    for row in rows:
-        partials.setdefault((row["column"], row["kind"]), []).append(
-            row["blob"])
-    return SketchCollection(
-        {key: _fold(key[1], blobs) for key, blobs in partials.items()})
+    blobs = pruned.mapInPandas(_build_partition(plan), schema=_BLOB_SCHEMA)
+    n_parts = blobs.rdd.getNumPartitions()
+    if n_parts <= _MAX_DRIVER_PARTIALS:
+        # what the tree does at this P (it has no merge level), minus
+        # the RDD conversion's extra Python pass per task
+        merged: dict = {}
+        for row in blobs.collect():
+            _add_partial(merged, row)
+    else:
+        depth = max(2, math.ceil(math.log(n_parts, 4)))
+        merged = blobs.rdd.treeAggregate({}, _add_partial, _merge_partials,
+                                         depth=depth)
+    return SketchCollection(merged)
+
+
+def _add_partial(acc: dict, row) -> dict:
+    """Decode one partial blob row into a {(column, kind): sketch} dict
+    (each blob is decoded once; merge levels pass the sketches on)."""
+    key = (row["column"], row["kind"])
+    return _merge_partials(
+        acc, {key: sketch_from_bytes(key[1], bytes(row["blob"]))})
+
+
+def _merge_partials(acc: dict, other: dict) -> dict:
+    """Merge ``other``'s sketches into ``acc`` per (column, kind)."""
+    for key, sk in other.items():
+        acc[key] = acc[key].merge(sk) if key in acc else sk
+    return acc
 
 
 def probe_bloom(df, col: str, blob: bytes):
@@ -359,16 +386,12 @@ def build_grouped_sketches(df, key_col: str, value_col: str,
     return final
 
 
-def _fold(kind: str, blobs: Iterable[bytes]):
+def _fold_blobs(kind: str, blobs: Iterable[bytes]) -> bytes:
     acc = None
     for b in blobs:
         sk = sketch_from_bytes(kind, bytes(b))
         acc = sk if acc is None else acc.merge(sk)
-    return acc
-
-
-def _fold_blobs(kind: str, blobs: Iterable[bytes]) -> bytes:
-    return _fold(kind, blobs).to_bytes()
+    return acc.to_bytes()
 
 
 def rollup_grouped_sketches(blobs, key_map, kind: str = "hll"):

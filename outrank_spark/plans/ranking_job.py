@@ -8,7 +8,7 @@ SURVEY.md §3.1):
   2. ONE vectorized scan building all per-column sketches
      (parity-HLL cardinality, bounded counter, coverage, encoded
      bytes) via the mergeable sketch operator, its partials folded on
-     the driver;
+     the driver (a ``treeAggregate`` past 5 partitions);
   3. minibatch pair scoring: batch assignment -> ``applyInPandas``
      scoring of the planned pair list -> symmetrized triplets;
   4. median-of-batches aggregation: ``groupBy(a, b).agg(median)``;
@@ -17,9 +17,10 @@ SURVEY.md §3.1):
      normalization for MI heuristics (task_summary.py:33-48),
      interaction re-aggregation, 3MR post-processing.
 
-Stages 2 and 3 are the only passes over the data.  Only stage 3
-shuffles (the subsampled scoring columns); stage 2 collects one small
-blob per partition and (column, kind).
+Stages 2 and 3 are the only passes over the data.  Stage 3 shuffles
+the subsampled scoring columns; stage 2 merges one small blob per
+partition and (column, kind), on the executors once there are more
+than ~5 partitions.
 """
 from __future__ import annotations
 

@@ -3,11 +3,11 @@
 Every sketch follows the same mergeable-accumulator contract, which is
 what lets the Spark layer (``outrank_spark.operators.sketch_build``)
 build per-partition state in a single ``mapInPandas`` pass and fold the
-partials associatively on the driver:
+partials associatively (on the driver, or in a ``treeAggregate``):
 
     update(values)            -- absorb a 1-D array (vectorized)
     merge(other) -> self      -- associative + commutative combine
-    to_bytes() / from_bytes() -- stable wire format for collect/state
+    to_bytes() / from_bytes() -- stable wire format for merge/state
     estimate()/query(...)     -- finalizer
 
 Re-expressed from scratch against the behavior of the reference's

@@ -74,7 +74,9 @@ class StreamingRankingAccumulator:
 
     def _fingerprint(self) -> str:
         """Everything a restored run must agree on — resuming with a
-        different plan would silently skip mismatched batches."""
+        different plan would silently skip mismatched batches, and
+        state from another sketch plan (other kinds or parameters, as
+        written by an older version) cannot be merged into."""
         cfg = self.cfg
         return "|".join(str(x) for x in (
             cfg.heuristic, cfg.label_column, cfg.subsampling,
@@ -82,6 +84,7 @@ class StreamingRankingAccumulator:
             cfg.combination_number_upper_bound,
             cfg.mi_stratified_sampling_ratio,
             sorted(cfg.feature_columns or []), self.context,
+            sketch_plan_for(cfg, []).sketches, cfg.counter_exclude_derived,
         ))
 
     # -- state persistence -------------------------------------------
@@ -118,6 +121,7 @@ class StreamingRankingAccumulator:
         if saved is not None and saved != self._fingerprint():
             raise ValueError(
                 "ranking checkpoint was written under a different config "
+                "or sketch plan "
                 f"(saved {saved!r} != current {self._fingerprint()!r}); "
                 "resuming would silently skip mismatched batches — use a "
                 "fresh state_dir or rerun with the original config",

@@ -3,11 +3,12 @@ from __future__ import annotations
 import itertools
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_JOB_GROUPS = itertools.count()
 
 
 @pytest.fixture(scope="session")
@@ -32,28 +33,10 @@ def spark():
 @pytest.fixture
 def count_jobs(spark):
     """``with count_jobs() as n: ...`` fills ``n`` with the Spark jobs
-    and tasks the block ran: the block runs in its own job group
-    (threads started through ``inheritable_thread_target`` inherit
-    it), counted afterwards from the status tracker."""
-    sc = spark.sparkContext
-    groups = itertools.count()
+    and tasks the block ran, counted the way the benchmark counts them
+    (``perfbench.spark_env.JobCounter``): the block runs in its own job
+    group (threads started through ``inheritable_thread_target``
+    inherit it), read back from the status tracker."""
+    from perfbench.spark_env import JobCounter
 
-    @contextmanager
-    def counted():
-        group = f"counted-{id(groups)}-{next(groups)}"
-        sc.setJobGroup(group, group)
-        counts = {}
-        try:
-            yield counts
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            tracker = sc.statusTracker()
-            jobs = tracker.getJobIdsForGroup(group)
-            stages = [s for j in jobs if tracker.getJobInfo(j)
-                      for s in tracker.getJobInfo(j).stageIds]
-            counts["jobs"] = len(jobs)
-            counts["tasks"] = sum(tracker.getStageInfo(s).numTasks
-                                  for s in stages
-                                  if tracker.getStageInfo(s))
-
-    return counted
+    return JobCounter(spark, f"counted-{next(_JOB_GROUPS)}").group

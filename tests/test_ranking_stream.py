@@ -221,6 +221,48 @@ class TestCheckpointedCliRanking:
             _cfg(), state_dir=state_dir, context="cli-slices=8")
         assert [b["batch_id"] for b in again.batches_seen] == [0]
 
+    def test_resume_from_state_of_older_sketch_plan_refuses(
+            self, spark, tmp_path, count_jobs):
+        """A state written before the ``bytes`` kind existed has no
+        ``bytes`` blobs and a fingerprint without the sketch plan; the
+        checkpointed CLI path refuses it before running any Spark job,
+        instead of failing in ``memory.tsv`` after the ranking or
+        averaging over only the slices run since.  A changed sketch
+        parameter (``hll_p``) is refused the same way."""
+        import os
+        import pickle
+        from dataclasses import replace
+
+        from outrank_spark.jobs.rank_job import _run_ranking_checkpointed
+
+        rng = np.random.default_rng(9)
+        df = spark.createDataFrame(_chunk(rng, 300))
+        args = self._args(tmp_path)
+        acc = StreamingRankingAccumulator(
+            _cfg(), state_dir=args.checkpoint_dir, context="cli-slices=4")
+        acc.process_batch(df, batch_id=0)
+        path = os.path.join(args.checkpoint_dir, "ranking_state.bin")
+        with open(path, "rb") as f:
+            record = pickle.load(f)
+        # the older writer: no plan fields in the fingerprint, no bytes
+        record["fingerprint"] = record["fingerprint"].rsplit("|", 2)[0]
+        record["blobs"] = {k: v for k, v in record["blobs"].items()
+                           if not k.endswith("\x1fbytes")}
+        with open(path, "wb") as f:
+            pickle.dump(record, f, protocol=4)
+        with count_jobs() as n:
+            with pytest.raises(ValueError, match="sketch plan"):
+                _run_ranking_checkpointed(spark, df, _cfg(), args)
+        assert n["jobs"] == 0
+        os.remove(path)
+        StreamingRankingAccumulator(
+            _cfg(), state_dir=args.checkpoint_dir,
+            context="cli-slices=4").process_batch(df, batch_id=0)
+        with pytest.raises(ValueError, match="sketch plan"):
+            StreamingRankingAccumulator(
+                replace(_cfg(), hll_p=10), state_dir=args.checkpoint_dir,
+                context="cli-slices=4")
+
     def test_empty_micro_batch_is_recorded_not_crashed(self, spark, tmp_path):
         """Empty micro-batches are normal in foreachBatch (idle
         triggers; empty resume slices) — they must be journaled for

@@ -15,7 +15,7 @@ from outrank_spark.operators.sketch_build import (
     _BLOB_SCHEMA,
     SketchPlan,
     _build_partition,
-    _fold,
+    _merge_partials,
     _scan_inputs,
     build_grouped_sketches,
     build_sketches,
@@ -117,9 +117,11 @@ class TestBuildSketches:
             est = skc.cardinality(col)
             assert abs(est - exact) / max(exact, 1) < 4 * 1.04 / np.sqrt(2 ** 14), col
 
-    def test_driver_fold_order_invariance_bitwise(self, feats):
-        """The driver fold gives the same blobs for one partition, for
-        sixteen, and for the partial blobs folded in reverse order."""
+    def test_tree_merge_order_invariance_bitwise(self, feats):
+        """The merge gives the same blobs for one partition (folded on
+        the driver), for sixteen (a ``treeAggregate`` with one executor
+        merge level), and for the partial blobs merged in reverse
+        order."""
         plan = SketchPlan(
             columns=["host", "lang", "text_len"],
             sketches={"hll": {"p": 12}, "cms": {"depth": 4, "width": 2 ** 12},
@@ -130,13 +132,37 @@ class TestBuildSketches:
         rows = _scan_inputs(feats.repartition(16), plan, True).mapInPandas(
             _build_partition(plan), schema=_BLOB_SCHEMA).collect()
         assert len(rows) > len(plan.keys())   # several partials per key
-        reverse = {key: _fold(key[1], [bytes(r["blob"]) for r in rows[::-1]
-                                       if (r["column"], r["kind"]) == key])
-                   for key in plan.keys()}
+        reverse = {}
+        for r in rows[::-1]:
+            _merge_partials(reverse, {(r["column"], r["kind"]):
+                                      sketch_from_bytes(r["kind"], bytes(r["blob"]))})
         assert set(one) == set(many) == set(reverse) == set(plan.keys())
         for key in one:
             assert one[key].to_bytes() == many[key].to_bytes(), key
             assert one[key].to_bytes() == reverse[key].to_bytes(), key
+
+    def test_driver_receives_few_partials_at_many_partitions(
+            self, feats, monkeypatch):
+        """At P = 64 partitions the executors fold the partials, so the
+        driver merges 2 to 5 partial dicts, not 64 (the driver's
+        share of the merge is the final ``reduce`` over what it
+        collected; the executors run their own copy of the function)."""
+        from outrank_spark.operators import sketch_build
+
+        calls = []
+
+        def counted(acc, other):
+            calls.append(len(other))
+            return _merge_partials(acc, other)
+
+        monkeypatch.setattr(sketch_build, "_merge_partials", counted)
+        plan = SketchPlan(columns=["host", "lang"],
+                          sketches={"hll": {"p": 12}, "coverage": {}})
+        got = build_sketches(feats.repartition(64), plan)
+        assert 2 <= len(calls) + 1 <= 5, len(calls) + 1
+        want = build_sketches(feats.repartition(1), plan)
+        for key in plan.keys():
+            assert got[key].to_bytes() == want[key].to_bytes(), key
 
     def test_bytes_sketch_matches_octet_length(self, feats):
         """The ``bytes`` kind averages the UTF-8 length of each value's
