@@ -249,15 +249,6 @@ def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
     return df.selectExpr(*exprs)
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped reducer: fold a (column, kind) group's partial blobs."""
-    kind = pdf["kind"].iloc[0]
-    return pd.DataFrame(
-        {"column": [pdf["column"].iloc[0]], "kind": [kind],
-         "blob": [_fold_blobs(kind, pdf["blob"])]},
-    )
-
-
 def build_sketches(df, plan: SketchPlan,
                    jvm_prehash: bool = True) -> SketchCollection:
     """Build all sketches in ``plan`` over ``df`` in one scan.

@@ -10,17 +10,21 @@ SURVEY.md §3.1):
      bytes) via the mergeable sketch operator, its partials folded on
      the driver (a ``treeAggregate`` past 5 partitions);
   3. minibatch pair scoring: batch assignment -> ``applyInPandas``
-     scoring of the planned pair list -> symmetrized triplets;
-  4. median-of-batches aggregation: ``groupBy(a, b).agg(median)``;
-  5. driver-side finalization: ``name-(card; cov)`` feature renaming
-     (task_ranking.py:247-268), singles summary with min-max
-     normalization for MI heuristics (task_summary.py:33-48),
-     interaction re-aggregation, 3MR post-processing.
+     scoring of the planned pair list -> symmetrized triplets,
+     collected to the driver;
+  4. ``finalize`` on the driver: pandas median of each pair's
+     minibatch scores (core_ranking.py:572-580), ``name-(card; cov)``
+     feature renaming (task_ranking.py:247-268), singles summary with
+     min-max normalization for MI heuristics (task_summary.py:33-48).
+     Interaction re-aggregation and 3MR post-processing follow in the
+     CLI.
 
 Stages 2 and 3 are the only passes over the data.  Stage 3 shuffles
 the subsampled scoring columns; stage 2 merges one small blob per
 partition and (column, kind), on the executors once there are more
-than ~5 partitions.
+than ~5 partitions.  The stream and the checkpointed CLI run
+(``streaming/ranking_stream.py``) plan their pairs with ``plan_pairs``
+and finalise with ``finalize`` too.
 """
 from __future__ import annotations
 
@@ -41,8 +45,8 @@ from outrank_spark.operators.sketch_build import SketchPlan, build_sketches
 from outrank_spark.plans.combinations import CombinationPlanner
 from outrank_spark.hashing import sql_ident
 
-__all__ = ["RankingConfig", "RankingResult", "run_ranking",
-           "feature_singles_summary", "aggregate_interactions"]
+__all__ = ["RankingConfig", "RankingResult", "run_ranking", "plan_pairs",
+           "finalize", "feature_singles_summary", "aggregate_interactions"]
 
 
 @dataclass
@@ -171,21 +175,7 @@ def run_ranking(spark, df: DataFrame, cfg: RankingConfig,
         n_batches = min(n_batches, max(1, n_rows // cfg.min_batch_rows))
 
         # --- pair scoring --------------------------------------------
-        pairs = planner.plan(columns, cfg.label_column, cfg.heuristic,
-                             cfg.target_ranking_only,
-                             cfg.combination_number_upper_bound)
-        model_features: list[str] = []
-        if cfg.reference_model_json:
-            from outrank_spark.plans.reference_model import (
-                filter_pairs,
-                model_feature_names,
-            )
-
-            model_features = [
-                m for m in model_feature_names(cfg.reference_model_json)
-                if m in columns
-            ]
-            pairs = filter_pairs(pairs, model_features)
+        pairs, model_features = plan_pairs(planner, cfg, columns)
         if cfg.heuristic == "MI-table-exact":
             # fully-distributed exact plug-in MI over the WHOLE
             # (sampled) table — no minibatching, no per-batch median;
@@ -206,24 +196,56 @@ def run_ranking(spark, df: DataFrame, cfg: RankingConfig,
                 n_batches, cfg.mi_stratified_sampling_ratio,
                 model_features=model_features,
             )
-        grouped = (
-            symmetrize(triplets)
-            .groupBy("feature_a", "feature_b")
-            .agg(F.median("score").alias("score"))
-            .toPandas()
-        )
+        sym = symmetrize(triplets).toPandas()
         # join the concurrent sketch job (raises here if it failed)
         sketches = sketch_future.result()
     finally:
         pool.shutdown(wait=True)
-    cards = {c: sketches[(c, "parity_hll")].estimate() for c in columns}
-    coverage = {
-        c: sketches[(c, "coverage")].coverage() for c in columns
-    }
+    return finalize(sym, sketches, cfg, planner)
 
-    # --- finalize (driver-side, small) -------------------------------
+
+def plan_pairs(planner: CombinationPlanner, cfg: RankingConfig,
+               columns: list[str]) -> tuple[list, list[str]]:
+    """One batch's pairs to score (``planner.plan`` updates the
+    planner's prior counts), minus pairs touching the reference
+    model's features, and those features (core_ranking.py:205-215)."""
+    pairs = planner.plan(columns, cfg.label_column, cfg.heuristic,
+                         cfg.target_ranking_only,
+                         cfg.combination_number_upper_bound)
+    if not cfg.reference_model_json:
+        return pairs, []
+    from outrank_spark.plans.reference_model import (
+        filter_pairs,
+        model_feature_names,
+    )
+
+    model_features = [m for m in model_feature_names(cfg.reference_model_json)
+                      if m in columns]
+    return filter_pairs(pairs, model_features), model_features
+
+
+def finalize(sym: pd.DataFrame, sketches, cfg: RankingConfig,
+             planner: CombinationPlanner) -> RankingResult:
+    """The ranking from symmetrised per-minibatch triplets ``sym``
+    (``feature_a, feature_b, score``, both orders of every pair), as the
+    reference finalises it (core_ranking.py:572-580): the median score
+    per ``(feature_a, feature_b)`` over the minibatches, NaN scores
+    skipped; features renamed ``name-(card; cov)`` from the merged
+    sketches (task_ranking.py:247-268); rows sorted by score; the
+    singles summary.
+
+    Driver memory: ``sym`` holds 2 x pairs x minibatches rows, the
+    same rows the stream accumulates and the reference keeps.
+    """
+    grouped = (
+        sym.groupby(["feature_a", "feature_b"], as_index=False)["score"]
+        .median()
+    )
     grouped.columns = ["FeatureA", "FeatureB", "Score"]
     raw = grouped.copy()
+    columns = [c for (c, k) in sketches if k == "parity_hll"]
+    cards = {c: sketches[(c, "parity_hll")].estimate() for c in columns}
+    coverage = {c: sketches[(c, "coverage")].coverage() for c in columns}
     if cfg.include_cardinality_in_feature_names:
         def rename(name: str) -> str:
             cov = int(round(coverage[name], 1))

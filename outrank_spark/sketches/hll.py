@@ -245,8 +245,11 @@ class ParityHyperLogLog:
 
     Mirrors ``HyperLogLogWCache`` (counting_ultiloglog.py:10-59):
     p = 19 fixed, exact until m/2 distincts, then linear counting
-    ``ceil(m * ln(m / V)) - 1`` capped at 2^p.  The ``error_rate`` ctor
-    argument is accepted and ignored exactly like the reference.
+    ``ceil(m * ln(m / V)) - 1`` over the V empty of m buckets.  Its
+    largest finite estimate, at one empty bucket, is about m * ln m
+    (6.9M at p=19); with no empty bucket it returns 2^p.  The
+    ``error_rate`` ctor argument is accepted and ignored exactly like
+    the reference.
 
     Mergeable upgrade: warmup stores uint64 value-hashes (set union on
     merge); bucket occupancy is a packed bitmap (OR on merge).  All

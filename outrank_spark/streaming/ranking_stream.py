@@ -19,10 +19,14 @@ micro-batch
    file, so a replayed batch after restart is recognized and skipped —
    never double-counted.
 
-``result()`` finalizes exactly like the batch job: median across all
-accumulated batch triplets, cardinality/coverage feature renaming from
-the merged sketches, singles summary.  The running median-so-far after
-every batch mirrors the reference's ``ranking_checkpoint_tmp.tsv``.
+Pairs are planned with the batch job's ``plan_pairs`` (reference-model
+features are dropped from the pairs and condition the scores), and
+``result()`` symmetrises the accumulated triplets and hands them to the
+batch job's ``finalize``: median across all batches, cardinality/coverage
+feature renaming from the merged sketches, singles summary.  The
+running median-so-far after every batch mirrors the reference's
+``ranking_checkpoint_tmp.tsv``.  ``MI-table-exact`` scores the whole
+table at once and has no per-batch form, so it is refused here.
 
 Scale notes: executor-side work per micro-batch is identical to the
 batch job (sketch scan + scoring fan-out); driver state is small (one
@@ -46,7 +50,9 @@ from outrank_spark.plans.combinations import CombinationPlanner
 from outrank_spark.plans.ranking_job import (
     RankingConfig,
     RankingResult,
-    feature_singles_summary,
+    feature_singles_summary,  # noqa: F401 -- perfbench's tracer wraps it here
+    finalize,
+    plan_pairs,
     sketch_plan_for,
 )
 from outrank_spark.sketches import sketch_from_bytes
@@ -61,6 +67,12 @@ class StreamingRankingAccumulator:
 
     def __init__(self, cfg: RankingConfig, state_dir: str | None = None,
                  context: str = ""):
+        if cfg.heuristic == "MI-table-exact":
+            raise ValueError(
+                "heuristic 'MI-table-exact' scores the whole table in one "
+                "pass and has no per-batch form; the stream and the "
+                "checkpointed run need a minibatch heuristic",
+            )
         self.cfg = cfg
         self.state_dir = state_dir
         self.context = context
@@ -84,6 +96,7 @@ class StreamingRankingAccumulator:
             cfg.combination_number_upper_bound,
             cfg.mi_stratified_sampling_ratio,
             sorted(cfg.feature_columns or []), self.context,
+            cfg.reference_model_json,
             sketch_plan_for(cfg, []).sketches, cfg.counter_exclude_derived,
         ))
 
@@ -168,14 +181,12 @@ class StreamingRankingAccumulator:
                 self.sketches[key] = sk
         n_rows = delta[(columns[0], "coverage")].total
 
-        pairs = self.planner.plan(
-            columns, cfg.label_column, cfg.heuristic,
-            cfg.target_ranking_only, cfg.combination_number_upper_bound,
-        )
+        pairs, model_features = plan_pairs(self.planner, cfg, columns)
         n_batches = max(1, -(-n_rows // max(cfg.minibatch_size, 1)))
         batch_triplets = score_batches(
             sub, columns, pairs, cfg.heuristic, cfg.label_column,
             n_batches, cfg.mi_stratified_sampling_ratio,
+            model_features=model_features,
         ).toPandas()
         batch_triplets["batch_key"] = (
             str(int(batch_id)) + ":" + batch_triplets["batch_id"].astype(str)
@@ -207,45 +218,15 @@ class StreamingRankingAccumulator:
 
     # -- finalization (median-so-far, callable after any batch) -------
     def result(self) -> RankingResult:
-        cfg = self.cfg
         if not len(self.triplets):
             raise ValueError("no batches processed yet")
         # both orders unconditionally, exactly like the batch path's
         # symmetrize (duplicating the diagonal leaves medians unchanged)
+        cols = ["feature_a", "feature_b", "score"]
         sym = pd.concat([
-            self.triplets[["feature_a", "feature_b", "score"]],
+            self.triplets[cols],
             self.triplets.rename(columns={
                 "feature_a": "feature_b", "feature_b": "feature_a",
-            })[["feature_a", "feature_b", "score"]],
+            })[cols],
         ], ignore_index=True)
-        grouped = (
-            sym.groupby(["feature_a", "feature_b"], as_index=False)["score"]
-            .median()
-        )
-        grouped.columns = ["FeatureA", "FeatureB", "Score"]
-        raw = grouped.copy()
-        columns = sorted({
-            c for (c, k) in self.sketches if k == "parity_hll"
-        })
-        cards = {
-            c: self.sketches[(c, "parity_hll")].estimate() for c in columns
-        }
-        coverage = {
-            c: self.sketches[(c, "coverage")].coverage() for c in columns
-        }
-        if cfg.include_cardinality_in_feature_names:
-            def rename(name: str) -> str:
-                cov = int(round(coverage[name], 1))
-                return f"{name}-({cards[name]}; {cov})"
-
-            grouped["FeatureA"] = grouped["FeatureA"].map(rename)
-            grouped["FeatureB"] = grouped["FeatureB"].map(rename)
-        pairwise = grouped.sort_values(by=["Score"]).reset_index(drop=True)
-        singles = feature_singles_summary(
-            pairwise, cfg.label_column, cfg.heuristic,
-        )
-        return RankingResult(
-            pairwise=pairwise, singles=singles, sketches=self.sketches,
-            coverage=coverage, cardinalities=cards, planner=self.planner,
-            triplets_raw=raw,
-        )
+        return finalize(sym, self.sketches, self.cfg, self.planner)

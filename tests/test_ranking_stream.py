@@ -150,6 +150,15 @@ class TestStreamingRanking:
             "batches_seen",
         }
 
+    def test_whole_table_heuristic_refused_at_construction(self):
+        """``MI-table-exact`` has no per-batch form: the accumulator
+        refuses it by name before any batch runs."""
+        from dataclasses import replace
+
+        with pytest.raises(ValueError, match="MI-table-exact"):
+            StreamingRankingAccumulator(
+                replace(_cfg(), heuristic="MI-table-exact"))
+
 
 class TestCheckpointedCliRanking:
     """jobs/rank_job._run_ranking_checkpointed: deterministic hash

@@ -59,31 +59,64 @@ class TestConditioning:
         """End-to-end: model features are excluded from the pair list
         and candidates score through the conditioning matrix (scores
         differ from the unconditioned run)."""
-        import pandas as pd
-
         from outrank_spark.plans import RankingConfig, run_ranking
 
-        rng = np.random.default_rng(5)
-        n = 4000
-        label = rng.integers(0, 2, n)
-        f0 = label * 3 + rng.integers(0, 2, n)      # model feature
-        cand = label * 5 + rng.integers(0, 3, n)    # candidate
-        pdf = pd.DataFrame({
-            "f0": f0, "cand": cand, "label": label,
-        }).astype(str)
-        df = spark.createDataFrame(pdf)
-        cond = run_ranking(
-            spark, df,
-            RankingConfig(subsampling=1, reference_model_json=model_json),
-        ).triplets_raw
-        plain = run_ranking(
-            spark, df, RankingConfig(subsampling=1),
-        ).triplets_raw
-        # model feature f0 excluded from pairs entirely
-        assert not (cond.FeatureA == "f0").any()
-        s_cond = cond[(cond.FeatureA == "cand")
-                      & (cond.FeatureB == "label")].Score.iloc[0]
-        s_plain = plain[(plain.FeatureA == "cand")
-                        & (plain.FeatureB == "label")].Score.iloc[0]
-        assert np.isfinite(s_cond)
-        assert s_cond != s_plain  # conditioning changed the score
+        df = _conditioning_frame(spark)
+        _assert_conditioned(
+            lambda **kw: run_ranking(
+                spark, df, RankingConfig(subsampling=1, **kw),
+            ).triplets_raw,
+            model_json,
+        )
+
+    def test_checkpointed_ranking_honours_model(self, spark, model_json,
+                                                tmp_path):
+        """The checkpointed CLI run (the stream accumulator, one batch
+        per hash slice) drops the model's features from the pairs and
+        conditions the candidates on them, as the batch run does."""
+        import argparse
+
+        from outrank_spark.jobs.rank_job import _run_ranking_checkpointed
+        from outrank_spark.plans import RankingConfig
+
+        df = _conditioning_frame(spark)
+
+        def checkpointed(**kw):
+            out = tmp_path / ("cond" if kw else "plain")
+            args = argparse.Namespace(
+                checkpoint_dir=str(out / "state"), checkpoint_slices=2,
+                output_folder=str(out / "out"),
+            )
+            return _run_ranking_checkpointed(
+                spark, df, RankingConfig(subsampling=1, **kw), args,
+            ).triplets_raw
+
+        _assert_conditioned(checkpointed, model_json)
+
+
+def _conditioning_frame(spark):
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    n = 4000
+    label = rng.integers(0, 2, n)
+    f0 = label * 3 + rng.integers(0, 2, n)      # model feature
+    cand = label * 5 + rng.integers(0, 3, n)    # candidate
+    return spark.createDataFrame(pd.DataFrame({
+        "f0": f0, "cand": cand, "label": label,
+    }).astype(str))
+
+
+def _assert_conditioned(rank, model_json):
+    """``rank(**cfg_fields)`` returns a run's ``triplets_raw``."""
+    cond = rank(reference_model_json=model_json)
+    plain = rank()
+    # model feature f0 excluded from pairs entirely
+    assert not (cond.FeatureA == "f0").any()
+    assert (plain.FeatureA == "f0").any()
+    s_cond = cond[(cond.FeatureA == "cand")
+                  & (cond.FeatureB == "label")].Score.iloc[0]
+    s_plain = plain[(plain.FeatureA == "cand")
+                    & (plain.FeatureB == "label")].Score.iloc[0]
+    assert np.isfinite(s_cond)
+    assert s_cond != s_plain  # conditioning changed the score

@@ -62,6 +62,30 @@ class TestParityHLL:
         assert h.warmup is None
         assert abs(len(h) - n) / n < 0.02  # HYPERLL_ERROR_BOUND
 
+    @pytest.mark.parametrize("t", [1, 5])
+    def test_linear_counting_error_past_warmup(self, t):
+        """Past warm-up at the CLI's p=19 the estimate is linear
+        counting on the bucket bitmap; its relative error stays within
+        3 standard errors, sqrt(m (e^t - t - 1)) / n at load t = n / m
+        (Whang, Vander-Zanden and Taylor, 1990)."""
+        m = 1 << ParityHyperLogLog.P
+        n = t * m
+        bound = 3 * np.sqrt(m * (np.exp(t) - t - 1)) / n
+        for seed in range(3):
+            # n distinct, well-mixed hashes: a bijective 64-bit mix
+            # (odd multiplier, then splitmix64's finaliser) of counters
+            x = np.arange(n, dtype=np.uint64) + np.uint64(seed * n)
+            with np.errstate(over="ignore"):
+                x = x * np.uint64(0x9E3779B97F4A7C15)
+                x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+                x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+            x ^= x >> np.uint64(31)
+            h = ParityHyperLogLog()
+            for chunk in np.array_split(x, 4 * t):
+                h.update_hashes(chunk)
+            assert h.warmup is None
+            assert abs(len(h) - n) / n <= bound, (seed, len(h), bound)
+
     def test_merge_matches_single_pass_bitwise(self):
         vals = np.arange(300_000)
         single = ParityHyperLogLog().update(vals)
