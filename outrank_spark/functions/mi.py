@@ -32,9 +32,12 @@ truncate to the actually-filled prefix instead.
 """
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 
-__all__ = ["mutual_info_estimator", "stratified_subsampling", "densify"]
+__all__ = ["mutual_info_estimator", "mutual_info_from_stats", "ColumnStats",
+           "stratified_subsampling", "densify"]
 
 
 def densify(a: np.ndarray) -> np.ndarray:
@@ -130,6 +133,74 @@ def _conditional_entropy_sum(
     return float(contrib.sum())
 
 
+class ColumnStats:
+    """The estimator's per-column pieces for one densified code vector:
+    ascending values and their counts, LUT codes, the ``keep`` mask
+    (values seen more than once) and the column sum.  The spoof
+    permutation is derived on first use.
+
+    A pair scorer builds one per column and batch and hands two to
+    :func:`mutual_info_from_stats` per pair, so a column that sits in
+    many pairs is counted once (``operators/pair_scoring.py``)."""
+
+    __slots__ = ("values", "counts", "keep", "sum", "code", "_lut",
+                 "_spoof")
+
+    def __init__(self, a: np.ndarray):
+        self.values, self.counts = _unique_counts(a)
+        # dense-domain LUTs beat searchsorted ~5x (codes are densified)
+        self._lut = np.zeros(int(self.values[-1]) + 1, dtype=np.int64)
+        self._lut[self.values] = np.arange(len(self.values))
+        self.code = self._lut[a]
+        self.keep = self.counts > 1
+        self.sum = int(np.sum(a.astype(np.int64)))
+        self._spoof = None
+
+    def subsample(self, a: np.ndarray) -> "ColumnStats":
+        """Stats of the subsampled rows ``a``: their codes, with the
+        value domain, counts and ``keep`` mask of the full column (the
+        reference's pre-subsample denominators)."""
+        sub = copy.copy(self)
+        sub.code, sub._spoof = self._lut[a], None
+        return sub
+
+    @property
+    def spoof(self) -> np.ndarray:
+        """Row i's spoofed label index: i shifted by its value's
+        pre-subsample count, modulo n (ranking_mi_numba.py:87-90)."""
+        if self._spoof is None:
+            n = len(self.code)
+            self._spoof = (np.arange(n, dtype=np.int64)
+                           + self.counts[self.code]) % n
+        return self._spoof
+
+
+def mutual_info_from_stats(
+    sy: ColumnStats, sx: ColumnStats, all_events: int,
+    approximation_factor: float, cardinality_correction: bool,
+) -> np.float32:
+    """Score of Y given X from their :class:`ColumnStats`.
+
+    ``all_events`` is the pre-subsample row count.  The caller has
+    already turned the correction off for diagonal pairs."""
+    n_x, n_cls = len(sx.counts), len(sy.counts)
+    cond = _conditional_entropy_sum(
+        sx.code, sy.code, n_x, n_cls, sx.counts, all_events, sx.keep,
+    )
+    if not cardinality_correction:
+        p = sy.counts / all_events
+        full_entropy = float(-(p * np.log(p)).sum())
+        return np.float32(approximation_factor * (full_entropy - cond))
+
+    # Background (spoofed) conditional entropy: shift each row's label
+    # index by its x value's pre-subsample count, modulo n.
+    background = _conditional_entropy_sum(
+        sx.code, sy.code[sx.spoof], n_x, n_cls, sx.counts, all_events,
+        sx.keep,
+    )
+    return np.float32(approximation_factor * (-cond + background))
+
+
 def mutual_info_estimator(
     Y: np.ndarray, X: np.ndarray,
     approximation_factor: float = 1.0,
@@ -146,44 +217,15 @@ def mutual_info_estimator(
     X = densify(X)
     Y = densify(Y)
     all_events = len(X)
-    f_values, f_value_counts = _unique_counts(X)
+    sx, sy = ColumnStats(X), ColumnStats(Y)
 
     # Diagonal entries disable the correction (ranking_mi_numba.py:160-161).
-    if int(np.sum(X.astype(np.int64) - Y.astype(np.int64))) == 0:
-        cardinality_correction = False
+    correction = cardinality_correction and sx.sum != sy.sum
 
     if approximation_factor < 1.0:
-        Y, X = stratified_subsampling(Y, X, approximation_factor, f_values)
+        Y, X = stratified_subsampling(Y, X, approximation_factor,
+                                      sx.values)
+        sx, sy = sx.subsample(X), ColumnStats(Y)
 
-    n = len(X)
-    class_values, class_counts = _unique_counts(Y)
-    n_cls = len(class_values)
-    # dense-domain LUTs beat searchsorted ~5x (X/Y are densified)
-    x_lut = np.zeros(int(f_values[-1]) + 1, dtype=np.int64)
-    x_lut[f_values] = np.arange(len(f_values))
-    x_code = x_lut[X]
-    y_lut = np.zeros(int(class_values[-1]) + 1, dtype=np.int64)
-    y_lut[class_values] = np.arange(n_cls)
-    y_code = y_lut[Y]
-    keep = f_value_counts > 1
-
-    cond = _conditional_entropy_sum(
-        x_code, y_code, len(f_values), n_cls,
-        f_value_counts, all_events, keep,
-    )
-
-    if not cardinality_correction:
-        p = class_counts / all_events
-        full_entropy = float(-(p * np.log(p)).sum())
-        return np.float32(approximation_factor * (full_entropy - cond))
-
-    # Background (spoofed) conditional entropy: shift each row's label
-    # index by its x value's pre-subsample count, modulo n.
-    pre_counts_per_row = f_value_counts[x_code]
-    spoof_idx = (np.arange(n, dtype=np.int64) + pre_counts_per_row) % n
-    y_spoof_code = y_code[spoof_idx]
-    background = _conditional_entropy_sum(
-        x_code, y_spoof_code, len(f_values), n_cls,
-        f_value_counts, all_events, keep,
-    )
-    return np.float32(approximation_factor * (-cond + background))
+    return mutual_info_from_stats(sy, sx, all_events, approximation_factor,
+                                  correction)

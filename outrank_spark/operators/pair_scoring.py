@@ -99,34 +99,13 @@ _RELABEL_INVARIANT = {
 _DENSIFY_FIRST = {"MI", "MI-numba", "MI-numba-randomized",
                   "MI-numba-3mr", "AMI"}
 
-# MI-numba family: estimator internals (value counts, LUT codes,
-# spoof permutation, column sums) depend on ONE column each, so a
-# batch scoring ~|columns|^2 pairs recomputes each column's stats
-# ~|columns| times.  _mi_col_stats hoists them; the pair loop then
-# replays mutual_info_estimator's exact arithmetic on the cached
-# pieces — same arrays, same op order, bit-identical scores (pinned
-# by the differential test in tests/test_mi.py).
+# MI-numba family: the estimator's per-column pieces (value counts,
+# LUT codes, spoof permutation, column sum) depend on ONE column each,
+# so a batch scoring ~|columns|^2 pairs builds each column's
+# ColumnStats once and scores every pair from them with the
+# estimator's own arithmetic (functions/mi.py) — bit-identical to
+# score_pair (pinned by the differential test in tests/test_mi.py).
 _MI_NUMBA = {"MI-numba", "MI-numba-randomized", "MI-numba-3mr"}
-
-
-def _mi_col_stats(arr: np.ndarray) -> dict:
-    """Per-column pieces of mutual_info_estimator for a DENSIFIED
-    int32 code vector: exactly what the estimator derives from each
-    argument before the per-pair entropy sums."""
-    from outrank_spark.functions.mi import _unique_counts
-
-    n = len(arr)
-    vals, counts = _unique_counts(arr)
-    lut = np.zeros(int(vals[-1]) + 1, dtype=np.int64)
-    lut[vals] = np.arange(len(vals))
-    code = lut[arr]
-    pre_rows = counts[code]
-    spoof = (np.arange(n, dtype=np.int64) + pre_rows) % n
-    return {
-        "n_vals": len(vals), "counts": counts, "code": code,
-        "spoof": spoof, "keep": counts > 1,
-        "sum": int(np.sum(arr.astype(np.int64))),
-    }
 
 
 def _score_block_mi_cached(codes: dict[str, np.ndarray],
@@ -136,14 +115,14 @@ def _score_block_mi_cached(codes: dict[str, np.ndarray],
     """MI-numba family fast path: identical scores to score_pair ->
     mutual_info_estimator, with the per-column stats computed once.
 
-    Mirrors the estimator line by line (functions/mi.py): first
-    argument is Y (the candidate), second is X (the conditioning);
-    approximation_factor is 1.0 / float32(ratio>=1) so the subsample
-    branch never fires; the diagonal check disables the correction.
+    First argument is Y (the candidate), second is X (the
+    conditioning); approximation_factor is 1.0 / float32(ratio>=1) so
+    the subsample branch never fires; the diagonal check disables the
+    correction.
     """
-    from outrank_spark.functions.mi import _conditional_entropy_sum
+    from outrank_spark.functions.mi import ColumnStats, mutual_info_from_stats
 
-    stats = {c: _mi_col_stats(v) for c, v in codes.items()}
+    stats = {c: ColumnStats(v) for c, v in codes.items()}
     n = len(next(iter(codes.values())))
     randomized = heuristic == "MI-numba-randomized"
     # factor as the estimator receives it: np.float32(ratio) for the
@@ -153,24 +132,8 @@ def _score_block_mi_cached(codes: dict[str, np.ndarray],
     for a, b in pairs:
         f1, f2 = (b, label_column) if a == label_column else (a, b)
         sy, sx = stats[f1], stats[f2]   # estimator: Y=first, X=second
-        correction = randomized
-        if sx["sum"] - sy["sum"] == 0:
-            correction = False
-        cond = _conditional_entropy_sum(
-            sx["code"], sy["code"], sx["n_vals"], sy["n_vals"],
-            sx["counts"], n, sx["keep"],
-        )
-        if not correction:
-            p = sy["counts"] / n
-            full_entropy = float(-(p * np.log(p)).sum())
-            score = np.float32(factor * (full_entropy - cond))
-        else:
-            y_spoof = sy["code"][sx["spoof"]]
-            background = _conditional_entropy_sum(
-                sx["code"], y_spoof, sx["n_vals"], sy["n_vals"],
-                sx["counts"], n, sx["keep"],
-            )
-            score = np.float32(factor * (-cond + background))
+        score = mutual_info_from_stats(
+            sy, sx, n, factor, randomized and sx.sum != sy.sum)
         out.append((a, b, float(score)))
     return out
 

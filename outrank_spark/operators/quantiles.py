@@ -174,12 +174,20 @@ def exact_grouped_quantiles(
             picked_rows = (
                 data.withColumn("__mid", F.monotonically_increasing_id())
                 .where(F.col("__mid").isin(*id_meta.keys()))
-                .select("__mid", "__v").collect()
+                .select("__g", "__mid", "__v").collect()
             )
-            idx_of = {
-                id_meta[int(r["__mid"])]: float(r["__v"])
-                for r in picked_rows
-            }
+            idx_of = {}
+            for r in picked_rows:
+                g, gi = id_meta[int(r["__mid"])]
+                # an id that lands on another group's row means the
+                # counts no longer describe the partitions
+                if r["__g"] != g:
+                    raise RuntimeError(
+                        f"order-statistic pick mismatch: row "
+                        f"{int(r['__mid'])} wanted for group {g!r} "
+                        f"holds group {r['__g']!r} — partition "
+                        "contents changed between passes")
+                idx_of[(g, gi)] = float(r["__v"])
         else:
             picked = _pick_order_statistics(data, "__g", "__v", wanted)
             idx_of = {

@@ -68,16 +68,19 @@ class RankingConfig:
     seed: int = 123
     # extra sketch kinds beyond the reference's HLL + bounded counter
     # (e.g. {"cms": {"depth": 6, "width": 2**13}}); kept OUT of the
-    # default plan — per-partition CMS blobs dominate shuffle bytes and
-    # the reference's ranking flow never consumes a CMS
+    # default plan — every partition's CMS blob is collected to the
+    # driver (tree-merged past 5 partitions) and the reference's
+    # ranking flow never consumes a CMS
     extra_sketches: dict | None = None
     # parity-HLL precision: p=19 reproduces the reference bitwise;
-    # smaller p bounds the per-partition blob for very wide feature
-    # sets (name cardinalities cap at 2^p, like the reference's 2^19)
+    # smaller p bounds the per-partition blob collected (or
+    # tree-merged) for very wide feature sets (name cardinalities cap
+    # at 2^p, like the reference's 2^19)
     hll_p: int | None = None
     # exact value counters only make sense for base columns — derived
     # feature values (interaction hashes, transformer outputs) are
-    # near-unique and blow up the partial-counter shuffle
+    # near-unique and blow up the per-partition counter partials that
+    # are collected to the driver (tree-merged past 5 partitions)
     counter_exclude_derived: bool = True
     # scoring fan-out floor: ensure at least this many minibatch groups
     # per core so the applyInPandas stage saturates the cluster (each

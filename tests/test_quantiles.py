@@ -166,6 +166,29 @@ class TestExactGroupedQuantiles:
         assert (got[["q01", "q5", "q99"]].values
                 == ref[["p0", "p1", "p2"]].values).all()
 
+    def test_pick_checks_each_row_group(self, spark, monkeypatch):
+        """Counts that keep a partition's total but move rows between
+        two groups of unequal size make every requested id resolve —
+        to the other group's rows.  The pick must notice the group."""
+        from outrank_spark.operators import quantiles
+
+        df = spark.createDataFrame(
+            [("a", float(i)) for i in range(30)]
+            + [("b", 100.0 + i) for i in range(10)],
+            "g string, v double")
+        real = quantiles._partition_group_counts
+
+        def shifted(data, group_col):
+            out = real(data, group_col)
+            out.loc[out["__g"] == "a", "cnt"] -= 10
+            out.loc[out["__g"] == "b", "cnt"] += 10
+            return out
+
+        monkeypatch.setattr(quantiles, "_partition_group_counts", shifted)
+        with pytest.raises(RuntimeError, match="pick mismatch"):
+            exact_grouped_quantiles(df, "g", "v", [0.5, 0.9],
+                                    num_partitions=1)
+
 
 class TestWinsorize:
     def test_clamps_at_numpy_quantiles(self, spark):

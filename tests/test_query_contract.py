@@ -6,9 +6,23 @@ the fast always-on guard against a broken registration.)
 """
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def _headline(path: Path) -> list[str]:
+    """A script's ``HEADLINE`` list, read without running the script."""
+    for node in ast.parse(path.read_text()).body:
+        if (isinstance(node, ast.Assign)
+                and any(getattr(t, "id", None) == "HEADLINE"
+                        for t in node.targets)):
+            return ast.literal_eval(node.value)
+    raise AssertionError(f"{path} has no HEADLINE list")
 
 
 class TestDriverContract:
@@ -29,6 +43,16 @@ class TestDriverContract:
             rows = df.collect()
             assert df.schema.fieldNames(), name
             assert rows is not None, name
+
+    @pytest.mark.parametrize("script", ["bench.py",
+                                        "tools/profile_queries.py"])
+    def test_headline_queries_are_registered(self, script):
+        from outrank_spark.plans.queries import QUERIES
+
+        headline = _headline(ROOT / script)
+        assert headline
+        assert set(headline) <= set(QUERIES), (
+            sorted(set(headline) - set(QUERIES)))
 
     def test_entry_contract(self, spark):
         import __spark_entry__ as e
