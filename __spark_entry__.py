@@ -1,10 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship feature-ranking query; ``queries`` /
-``oracle_sql`` expose the query suite of ``plans/queries.py`` (the
-ranking engine's sketches, relational and temporal operators) with
-DuckDB oracles for every SQL-expressible query (sketch/ranking results
-are rows-only by nature — their accuracy is bound-tested in tests/).
+``oracle_sql`` expose the operator suite from SURVEY.md §2 with DuckDB
+oracles for every SQL-expressible operator (sketch/ranking results are
+rows-only by nature — their accuracy is bound-tested in tests/).
 """
 from __future__ import annotations
 

@@ -10,16 +10,16 @@ applyInPandas), and driver-side planning for pair enumeration and 3MR.
 Layers (SURVEY.md §7.1):
   sketches/   pure-numpy mergeable kernels (HLL, CMS, Bloom, KLL,
               t-digest, bounded counter) — zero Spark dependency
-  functions/  scoring + scalar kernels (MI estimator, coverage,
-              surrogates) — zero Spark dependency
+  functions/  scoring + scalar kernels (MI estimators, coverage,
+              text analysis) — zero Spark dependency
   operators/  Spark operators (sketch build/merge, pair scoring,
-              derived features, transformers, temporal, validation)
+              dedup, similarity, derived features, transformers)
   sources/    readers + deterministic synthetic generators (pages,
               ranking matrices, csv-raw/vw parsers)
   plans/      driver-side planning: combinations, prior sampling,
-              3MR, ranking pipeline, reports, the query suite
-  streaming/  Structured Streaming variants (foreachBatch sketch and
-              ranking accumulation)
+              3MR, ranking pipeline, checkpoint/resume
+  streaming/  Structured Streaming variants (foreachBatch sketch
+              accumulation)
 """
 from __future__ import annotations
 

@@ -197,8 +197,9 @@ def extract_links(df: DataFrame, html_col: str = "html",
                   out: str = "links",
                   attrs: tuple[str, ...] = ("href",)) -> DataFrame:
     """All link targets from an HTML column as an ``array<string>`` —
-    the edge extractor feeding host link graphs, outlink-count quality
-    features, and crawl-frontier dedup.
+    the edge extractor feeding host link graphs (PageRank over
+    ``operators.graph``), outlink-count quality features, and
+    crawl-frontier dedup.
 
     Pure JVM regex (``regexp_extract_all``), zero shuffle, so it runs
     inside the scan partition at corpus scale; accepts either a

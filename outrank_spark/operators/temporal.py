@@ -522,7 +522,9 @@ def sessionize(df: DataFrame, ts_col: str, by: str,
     per-key ``session_idx`` (1-based, in time order) that increments
     whenever the gap to the PREVIOUS event of the same key exceeds
     ``gap_secs`` — the standard web-analytics session definition
-    (GA's 30-minute timeout).
+    (GA's 30-minute timeout) and the batch twin of the streaming
+    sessionizer in streaming/event_streams.py (same gap rule, so a
+    batch backfill and the live stream agree on session boundaries).
 
     Exactness across engines: the gap compares INTEGER microseconds
     (``unix_micros`` here, ``epoch_us`` in DuckDB) — no float

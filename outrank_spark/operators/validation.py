@@ -32,7 +32,7 @@ strings — never a cross-engine float-to-string formatting, so the
 DuckDB oracles (q130/q131) compare values, not formatting dialects.
 
 No reference-repo counterpart; this extends the engine's operations
-family (CDC snapshot_diff) from
+family (drift monitoring operators/drift.py, CDC snapshot_diff) from
 "did the distribution move" to "is this table admissible at all".
 """
 from __future__ import annotations

@@ -749,7 +749,7 @@ def generate_cc_dataframe(spark, n_features: int, n_samples: int,
         raise ValueError(
             "distributed path supports linear/nonlinear label relations "
             "(cluster labels need iterative k-means — use "
-            "CategoricalClassification.generate_labels)",
+            "outrank_spark.operators.similarity.ivf_topk's trainer)",
         )
     scored = feats.withColumn("_dec", decision)
     thresh = scored.agg(

@@ -384,8 +384,8 @@ def pages_from_warc(spark: SparkSession, path: str,
                     reader: str = "binaryfile") -> DataFrame:
     """North-rule pages shape from raw WARC archives: response
     payloads as ``html``, ``text`` via the deterministic extractor
-    (byte-identity invariant preserved), ``lang`` null (for a
-    downstream language identifier).  ``reader='stream'`` routes
+    (byte-identity invariant preserved), ``lang`` null (downstream
+    langid fills it — operators/text.py).  ``reader='stream'`` routes
     through :func:`read_warc_stream` (bounded memory, local/NFS
     paths); ``'binaryfile'`` through :func:`read_warc` (object
     stores)."""

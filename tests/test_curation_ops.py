@@ -1,7 +1,7 @@
 """Round-4b curation/analytics operators: densify_time_series,
-merge_intervals, sessionize, rolling_stats (temporal) and
-host_suffix_blocklist (derived) — hand-computed and python-model
-oracles, partition invariance, edge/validation paths.
+merge_intervals (temporal), ngram_diversity, zipf_fit (text),
+containment_join (dedup), hash_split (sampling) — hand-computed and
+python-model oracles, partition invariance, edge/validation paths.
 """
 from __future__ import annotations
 
@@ -10,10 +10,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from outrank_spark.operators.dedup import containment_join
+from outrank_spark.operators.sampling import hash_split
 from outrank_spark.operators.temporal import (
     densify_time_series,
     merge_intervals,
 )
+from outrank_spark.operators.text import ngram_diversity, zipf_fit
 
 
 class TestDensifyTimeSeries:
@@ -122,6 +125,204 @@ class TestMergeIntervals:
             for k in want:
                 assert out[k][0] == want[k][0]
                 assert out[k][1] == pytest.approx(want[k][1], abs=1e-6)
+
+
+class TestNgramDiversity:
+    def test_hand_bigrams(self, spark):
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1, 2, 3],
+            "text": ["a b a b", "w x y z", "solo"],
+        }))
+        out = {r["doc_id"]: r for r in
+               ngram_diversity(df, "text", "doc_id", n=2).collect()}
+        # "a b a b": bigrams (a b, b a, a b) -> 3 total, 2 distinct
+        assert (out[1]["n_ngrams"], out[1]["n_distinct"]) == (3, 2)
+        assert out[1]["diversity"] == pytest.approx(2 / 3)
+        assert out[2]["diversity"] == pytest.approx(1.0)
+        # sub-n docs: NULL, never 0 (0 would fake "max repetitive")
+        assert out[3]["n_ngrams"] is None
+        assert out[3]["diversity"] is None
+
+    def test_unigrams_and_monotone_repetition(self, spark):
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1, 2],
+            "text": ["a a a a b", "a b c d e"],
+        }))
+        out = {r["doc_id"]: r["diversity"] for r in
+               ngram_diversity(df, "text", "doc_id", n=1).collect()}
+        assert out[1] == pytest.approx(2 / 5)
+        assert out[2] == pytest.approx(1.0)
+        assert out[1] < out[2]
+
+    def test_validation(self, spark):
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1], "text": ["a b"]}))
+        with pytest.raises(ValueError, match="n must be"):
+            ngram_diversity(df, "text", "doc_id", n=0)
+        bad = df.withColumn("__toks", F.lit(1))
+        with pytest.raises(ValueError, match="collide"):
+            ngram_diversity(bad, "text", "doc_id")
+
+
+class TestZipfFit:
+    def test_known_counts_vs_numpy(self, spark):
+        # exact token frequencies: a:8, b:4, c:2, hapax:1 (floored out)
+        text = " ".join(["a"] * 8 + ["b"] * 4 + ["c"] * 2 + ["hapax"])
+        df = spark.createDataFrame(pd.DataFrame({"text": [text]}))
+        row = zipf_fit(df, "text", min_count=2).collect()[0]
+        assert (row["n_types"], row["n_tokens"]) == (3, 14)
+        x = np.log(np.array([1.0, 2.0, 3.0]))     # ranks of a, b, c
+        y = np.log(np.array([8.0, 4.0, 2.0]))
+        slope, intercept = np.polyfit(x, y, 1)
+        r2 = np.corrcoef(x, y)[0, 1] ** 2
+        assert row["slope"] == pytest.approx(slope, abs=1e-6)
+        assert row["intercept"] == pytest.approx(intercept, abs=1e-6)
+        assert row["r2"] == pytest.approx(r2, abs=1e-6)
+
+    def test_top_k_cap_and_validation(self, spark):
+        text = " ".join(["a"] * 8 + ["b"] * 4 + ["c"] * 2)
+        df = spark.createDataFrame(pd.DataFrame({"text": [text]}))
+        row = zipf_fit(df, "text", min_count=2, top_k=2).collect()[0]
+        assert row["n_types"] == 2 and row["n_tokens"] == 12
+        with pytest.raises(ValueError, match="min_count"):
+            zipf_fit(df, "text", min_count=0)
+
+    def test_partition_invariance(self, spark):
+        rng = np.random.default_rng(11)
+        vocab = [f"w{i}" for i in range(30)]
+        texts = [" ".join(rng.choice(vocab, 40)) for _ in range(50)]
+        pdf = pd.DataFrame({"text": texts})
+        a = zipf_fit(spark.createDataFrame(pdf).repartition(1),
+                     "text").collect()[0]
+        b = zipf_fit(spark.createDataFrame(pdf).repartition(8),
+                     "text").collect()[0]
+        assert a.asDict() == b.asDict()
+
+
+class TestContainmentJoin:
+    def test_planted_superset(self, spark):
+        base = "the quick brown fox jumps over the lazy dog"
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1, 2, 3],
+            "text": [base,
+                     base + " and then some extra trailing words here",
+                     "completely different content with no overlap at all"],
+        }))
+        out = {(r["id_a"], r["id_b"]): r for r in
+               containment_join(df, "text", "doc_id", n=3,
+                                threshold=0.9).collect()}
+        # doc 1 fully contained in doc 2; reverse direction is partial
+        assert (1, 2) in out
+        assert out[(1, 2)]["containment"] == pytest.approx(1.0)
+        assert (2, 1) not in out       # below 0.9 threshold
+        assert not any(3 in p for p in out)
+
+    def test_both_directions_and_distinct_grams(self, spark):
+        # identical docs: containment 1.0 BOTH ways; internal phrase
+        # repetition must not inflate shared counts (distinct grams)
+        t = "alpha beta gamma alpha beta gamma alpha beta gamma"
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1, 2], "text": [t, t]}))
+        rows = containment_join(df, "text", "doc_id", n=3,
+                                threshold=0.5).collect()
+        assert {(r["id_a"], r["id_b"]) for r in rows} == {(1, 2), (2, 1)}
+        for r in rows:
+            # 9 tokens -> 7 trigram positions but only 3 DISTINCT
+            assert r["size_a"] == 3 and r["shared"] == 3
+            assert r["containment"] == pytest.approx(1.0)
+
+    def test_threshold_validation(self, spark):
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1], "text": ["a b c"]}))
+        with pytest.raises(ValueError, match="threshold"):
+            containment_join(df, "text", "doc_id", threshold=0.0)
+
+    def test_matches_python_oracle(self, spark):
+        rng = np.random.default_rng(3)
+        vocab = [f"t{i}" for i in range(15)]
+        texts = [" ".join(rng.choice(vocab, rng.integers(4, 12)))
+                 for _ in range(30)]
+        texts[10] = texts[4] + " padding words beyond"   # planted
+        pdf = pd.DataFrame({"doc_id": range(30), "text": texts})
+
+        def grams(t, n=3):
+            tk = t.split(" ")
+            if len(tk) < n:
+                return {t}
+            return {" ".join(tk[i:i + n]) for i in range(len(tk) - n + 1)}
+
+        gs = {r.doc_id: grams(r.text) for r in pdf.itertuples()}
+        want = {}
+        for a in gs:
+            for b in gs:
+                if a == b:
+                    continue
+                c = len(gs[a] & gs[b]) / len(gs[a])
+                if c >= 0.5:
+                    want[(a, b)] = c
+        out = {(r["id_a"], r["id_b"]): r["containment"] for r in
+               containment_join(spark.createDataFrame(pdf), "text",
+                                "doc_id", n=3, threshold=0.5).collect()}
+        assert set(out) == set(want)
+        for k, v in want.items():
+            assert out[k] == pytest.approx(v, abs=1e-9)
+        assert (4, 10) in out
+
+
+class TestHashSplit:
+    def _docs(self, spark, n=2000):
+        return spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(n)}))
+
+    def test_exhaustive_disjoint_proportions(self, spark):
+        out = hash_split(self._docs(spark), "doc_id",
+                         {"train": 0.8, "val": 0.1, "test": 0.1})
+        counts = {r["split"]: r["n"] for r in
+                  out.groupBy("split").agg(
+                      F.count(F.lit(1)).alias("n")).collect()}
+        assert sum(counts.values()) == 2000
+        assert set(counts) == {"train", "val", "test"}
+        assert 0.74 < counts["train"] / 2000 < 0.86
+        assert 0.05 < counts["val"] / 2000 < 0.15
+
+    def test_deterministic_and_partition_invariant(self, spark):
+        df = self._docs(spark, 500)
+        a = dict(hash_split(df, "doc_id", {"a": 0.5, "b": 0.5})
+                 .select("doc_id", "split").collect())
+        b = dict(hash_split(df.repartition(7), "doc_id",
+                            {"a": 0.5, "b": 0.5})
+                 .select("doc_id", "split").collect())
+        assert a == b
+
+    def test_incremental_stability(self, spark):
+        # adding rows never moves an existing row across splits
+        small = hash_split(self._docs(spark, 300), "doc_id",
+                           {"train": 0.9, "test": 0.1})
+        big = hash_split(self._docs(spark, 600), "doc_id",
+                         {"train": 0.9, "test": 0.1})
+        sm = dict(small.select("doc_id", "split").collect())
+        bg = dict(big.select("doc_id", "split").collect())
+        assert all(bg[k] == v for k, v in sm.items())
+
+    def test_seed_changes_assignment(self, spark):
+        df = self._docs(spark, 400)
+        a = dict(hash_split(df, "doc_id", {"x": 0.5, "y": 0.5},
+                            seed="s1").select("doc_id", "split").collect())
+        b = dict(hash_split(df, "doc_id", {"x": 0.5, "y": 0.5},
+                            seed="s2").select("doc_id", "split").collect())
+        assert any(a[k] != b[k] for k in a)
+
+    def test_validation(self, spark):
+        df = self._docs(spark, 10)
+        with pytest.raises(ValueError, match="sum to 1"):
+            hash_split(df, "doc_id", {"a": 0.5, "b": 0.4})
+        with pytest.raises(ValueError, match="negative"):
+            hash_split(df, "doc_id", {"a": 1.5, "b": -0.5})
+        with pytest.raises(ValueError, match="at least one"):
+            hash_split(df, "doc_id", {})
+        with pytest.raises(ValueError, match="internal"):
+            hash_split(df.withColumn("split", F.lit("x")),
+                       "doc_id", {"a": 1.0})
 
 
 class TestSessionize:

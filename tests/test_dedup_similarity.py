@@ -1,9 +1,511 @@
-"""URL canonicalization (``operators.derived.canonicalize_url``), the
-JVM-only normal form crawl dedup and host grouping key on.
+"""Dedup + similarity-search + text-analysis + multimodal operator
+tests, against planted ground truth.
 """
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from outrank_spark.operators.dedup import (
+    embedding_neardup_candidates,
+    exact_dedup,
+    jaccard_prefix_join,
+    minhash_lsh_candidates,
+    minhash_signatures,
+    near_dedup_corpus,
+    ngram_jaccard_pairs,
+    simhash_candidates,
+    simhash_signatures,
+)
+from outrank_spark.operators.multimodal import (
+    DecoderRegistry,
+    decode_and_featurize,
+    deterministic_fake_decoder,
+    sample_video_frames,
+    with_media_metadata,
+)
+from outrank_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
+from outrank_spark.operators.text import (
+    fit_langid,
+    with_fingerprints,
+    with_language_id,
+    with_quality_features,
+    with_token_counts,
+)
+
+
+def _corpus(spark, n_base=60, seed=3):
+    """Documents with planted near-dup pairs: doc i and doc i+1000 share
+    ~95% of tokens for i in the first 10."""
+    rng = np.random.default_rng(seed)
+    vocab = np.array([f"w{i}" for i in range(500)], dtype=object)
+    rows = []
+    for i in range(n_base):
+        toks = list(rng.choice(vocab, size=60))
+        rows.append((i, " ".join(toks)))
+        if i < 10:
+            near = list(toks)
+            near[5] = "MUT1"
+            near[25] = "MUT2"
+            rows.append((i + 1000, " ".join(near)))
+    rows.append((5000, rows[0][1]))  # exact dup of doc 0
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["doc_id", "text"]),
+    )
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    df = _corpus(spark).cache()
+    df.count()
+    return df
+
+
+class TestExactDedup:
+    def test_finds_exact_dup(self, corpus):
+        res = exact_dedup(corpus).filter(F.col("n_copies") > 1).collect()
+        assert len(res) == 1
+        assert res[0]["keeper_doc_id"] == 0
+        assert res[0]["n_copies"] == 2
+
+
+class TestNgramJaccard:
+    def test_planted_pairs_found(self, corpus):
+        pairs = ngram_jaccard_pairs(corpus).filter(
+            F.col("jaccard") >= 0.7,
+        ).collect()
+        found = {(r["id_a"], r["id_b"]) for r in pairs}
+        for i in range(10):
+            assert (i, i + 1000) in found, f"missing planted pair {i}"
+        # exact dup pair has jaccard 1.0
+        assert (0, 5000) in found
+
+    def test_candidate_bounded_matches_full(self, corpus):
+        # The candidate-bounded verify path must return exactly the
+        # full-join Jaccard restricted to the candidate pairs.
+        full = {
+            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+            for r in ngram_jaccard_pairs(corpus).collect()
+        }
+        cand_keys = [(0, 5000), (0, 1000), (3, 1003), (7, 8)]
+        cand = corpus.sparkSession.createDataFrame(
+            pd.DataFrame(cand_keys, columns=["id_a", "id_b"]),
+        )
+        bounded = {
+            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+            for r in ngram_jaccard_pairs(
+                corpus, candidate_pairs=cand,
+            ).collect()
+        }
+        expected = {k: v for k, v in full.items() if k in set(cand_keys)}
+        assert bounded == expected
+
+
+class TestJaccardPrefixJoin:
+    """jaccard_prefix_join must equal the brute-force join filtered at
+    the threshold — the AllPairs/PPJoin prefix filter is exactness-
+    preserving, so ANY divergence is a bug, not noise."""
+
+    def _brute(self, df, t):
+        return {
+            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+            for r in ngram_jaccard_pairs(df, max_shingle_freq=None)
+            .filter(F.col("jaccard") >= t - 1e-12).collect()
+        }
+
+    @pytest.mark.parametrize("t", [0.3, 0.5, 0.8, 1.0])
+    def test_matches_brute_force(self, corpus, t):
+        got = {
+            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+            for r in jaccard_prefix_join(corpus, threshold=t).collect()
+        }
+        assert got == self._brute(corpus, t)
+
+    def test_random_corpus_sweep(self, spark):
+        # adversarial shape: tiny vocab -> dense overlap graph, doc
+        # sizes 2..30 so ceil(t*sz) hits integer boundaries (t*5 at
+        # t=0.4, t*10 at 0.3/0.5...) where a float-drifted prefix
+        # length would drop qualifying pairs
+        import random
+
+        rng = random.Random(11)
+        vocab = [f"v{i}" for i in range(40)]
+        rows = []
+        for i in range(100):
+            toks = [rng.choice(vocab)
+                    for _ in range(rng.randint(2, 30))]
+            rows.append((i, " ".join(toks)))
+        df = spark.createDataFrame(
+            pd.DataFrame(rows, columns=["doc_id", "text"]))
+        for t in (0.25, 0.4, 0.6):
+            got = {
+                (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+                for r in jaccard_prefix_join(df, threshold=t).collect()
+            }
+            assert got == self._brute(df, t), f"diverged at t={t}"
+
+    def test_short_docs_whole_text_shingle(self, spark):
+        # docs under n tokens fall back to one whole-text shingle:
+        # identical short docs are jaccard-1.0 pairs, disjoint ones
+        # never pair
+        df = spark.createDataFrame(
+            pd.DataFrame(
+                [(1, "ab cd"), (2, "ab cd"), (3, "xy"), (4, "zz qq")],
+                columns=["doc_id", "text"]))
+        got = {(r["id_a"], r["id_b"]): r["jaccard"]
+               for r in jaccard_prefix_join(df, threshold=0.5).collect()}
+        assert got == {(1, 2): 1.0}
+
+    def test_bad_threshold_raises(self, corpus):
+        with pytest.raises(ValueError):
+            jaccard_prefix_join(corpus, threshold=0.0)
+        with pytest.raises(ValueError):
+            jaccard_prefix_join(corpus, threshold=1.5)
+
+
+class TestMinHash:
+    def test_signature_similarity_tracks_jaccard(self, corpus):
+        sig = minhash_signatures(corpus, k=64).cache()
+        row0 = sig.filter(F.col("doc_id") == 0).first()
+        row_dup = sig.filter(F.col("doc_id") == 5000).first()
+        k = 64
+        same = sum(row0[f"mh{i}"] == row_dup[f"mh{i}"] for i in range(k))
+        assert same == k  # exact dup -> identical signature
+
+    def test_lsh_recall_on_planted(self, corpus):
+        res = minhash_lsh_candidates(
+            corpus, k=64, bands=16, verify_threshold=0.7,
+        ).collect()
+        found = {(r["id_a"], r["id_b"]) for r in res}
+        hits = sum((i, i + 1000) in found for i in range(10))
+        assert hits >= 9  # >= 90% recall on ~0.9-jaccard pairs
+        for r in res:
+            assert r["jaccard"] >= 0.7  # exact verification
+
+
+class TestSimHash:
+    def test_exact_dup_same_signature(self, corpus):
+        sig = {r["doc_id"]: r["simhash"]
+               for r in simhash_signatures(corpus).collect()}
+        assert sig[0] == sig[5000]
+
+    def test_pinned_signatures_version_stable(self, spark):
+        # Signatures are built from Spark's pinned xxhash64, so they
+        # must never change across pandas/numpy/Spark upgrades —
+        # dedup decisions depend on it.  Literals computed once.
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1, 2, 3],
+            "text": ["the quick brown fox jumps over the lazy dog",
+                     "hello world hello", ""],
+        }))
+        sig = {r["doc_id"]: r["simhash"]
+               for r in simhash_signatures(df).collect()}
+        assert sig == {1: -7573889167326994222,
+                       2: -4367754540140381902,
+                       3: -7444071767201028348}
+
+    def test_chunk_candidates_complete_at_guarantee(self, corpus):
+        # Pigeonhole: with 4 chunks over 64 bits, EVERY pair at
+        # Hamming <= 3 shares a chunk — candidate generation must be
+        # exhaustive there, with correct reported distances.
+        rows = simhash_signatures(corpus).collect()
+        sigs = sorted((r["doc_id"], r["simhash"]) for r in rows)
+        expected = {}
+        for i in range(len(sigs)):
+            for j in range(i + 1, len(sigs)):
+                d = bin((sigs[i][1] ^ sigs[j][1]) & (2 ** 64 - 1)).count("1")
+                if d <= 3:
+                    expected[(sigs[i][0], sigs[j][0])] = d
+        res = simhash_candidates(corpus, max_hamming=3).collect()
+        found = {(r["id_a"], r["id_b"]): r["hamming"] for r in res}
+        assert found == expected
+        assert (0, 5000) in found and found[(0, 5000)] == 0
+
+    def test_near_dup_recall_beyond_guarantee(self, corpus):
+        # Above Hamming 3 the chunk buckets are only probabilistic;
+        # planted 58/60-token near-dups should still mostly surface.
+        res = simhash_candidates(corpus, max_hamming=10).collect()
+        found = {(r["id_a"], r["id_b"]) for r in res}
+        hits = sum((i, i + 1000) in found for i in range(10))
+        assert hits >= 5
+
+
+def _embeddings(spark, n=200, dim=16, seed=9):
+    rng = np.random.default_rng(seed)
+    base = rng.standard_normal((n, dim))
+    # plant: vec i+10000 = vec i + tiny noise for i < 5
+    rows = [(i, base[i].tolist()) for i in range(n)]
+    for i in range(5):
+        rows.append((i + 10000, (base[i] + 0.01 * rng.standard_normal(dim)).tolist()))
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "embedding"]),
+    )
+
+
+@pytest.fixture(scope="module")
+def vectors(spark):
+    df = _embeddings(spark).cache()
+    df.count()
+    return df
+
+
+class TestEmbeddingNearDup:
+    def test_planted_neighbors_found(self, vectors):
+        res = embedding_neardup_candidates(
+            vectors, n_planes=10, n_tables=8, cos_threshold=0.95,
+        ).collect()
+        found = {(r["id_a"], r["id_b"]) for r in res}
+        hits = sum((i, i + 10000) in found for i in range(5))
+        assert hits >= 4
+        for r in res:
+            assert r["cosine"] >= 0.95
+
+
+class TestSimilaritySearch:
+    @pytest.fixture(scope="class")
+    def queries(self, spark, vectors):
+        q = vectors.filter(F.col("vec_id") < 3).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("qv"),
+        )
+        return q.cache()
+
+    def test_brute_force_self_is_top(self, vectors, queries):
+        res = brute_force_topk(vectors, queries, k=3).collect()
+        top = {r["query_id"]: r["vec_id"] for r in res if r["rank"] == 1}
+        for qid in range(3):
+            # nearest neighbor of vec i is its planted near-copy (or
+            # itself, which scores 1.0 and ranks first)
+            assert top[qid] in (qid, qid + 10000)
+
+    def test_lsh_matches_brute_force_top1(self, vectors, queries):
+        brute = {
+            r["query_id"]: r["vec_id"]
+            for r in brute_force_topk(vectors, queries, k=1).collect()
+        }
+        lsh = {
+            r["query_id"]: r["vec_id"]
+            for r in lsh_topk(
+                vectors, queries, k=1, n_planes=8, n_tables=12,
+            ).collect()
+        }
+        agree = sum(brute[q] == lsh.get(q) for q in brute)
+        assert agree >= 2  # high recall at 12 tables
+
+    def test_ivf_finds_planted(self, vectors, queries):
+        res = ivf_topk(vectors, queries, k=2, n_cells=8, n_probe=4).collect()
+        by_q = {}
+        for r in res:
+            by_q.setdefault(r["query_id"], []).append(r["vec_id"])
+        for qid in range(3):
+            assert qid in by_q[qid]  # self always found
+
+
+class TestTextAnalysis:
+    def test_langid_roundtrip(self, spark):
+        # synthesizable distinct languages: disjoint char distributions
+        rng = np.random.default_rng(4)
+        rows = []
+        for i in range(300):
+            if i % 2 == 0:
+                text = " ".join(
+                    "".join(rng.choice(list("abcdefgh"), 6)) for _ in range(30)
+                )
+                rows.append((i, text, "aa"))
+            else:
+                text = " ".join(
+                    "".join(rng.choice(list("stuvwxyz"), 6)) for _ in range(30)
+                )
+                rows.append((i, text, "zz"))
+        df = spark.createDataFrame(
+            pd.DataFrame(rows, columns=["doc_id", "text", "lang"]),
+        )
+        profiles = fit_langid(df, sample_per_lang=50)
+        pred = with_language_id(df, profiles)
+        acc = pred.filter(F.col("lang_pred") == F.col("lang")).count() / 300
+        assert acc > 0.95
+
+    def test_quality_features(self, spark):
+        df = spark.createDataFrame(
+            pd.DataFrame({"doc_id": [1], "text": ["the cat, the hat! 42"]}),
+        )
+        row = with_quality_features(df).first()
+        assert row["n_token_q"] == 5
+        assert row["stopword_ratio"] == pytest.approx(2 / 5)
+        assert row["digit_ratio"] > 0
+        assert row["punct_ratio"] > 0
+
+    def test_token_counts_modes(self, spark):
+        df = spark.createDataFrame(
+            pd.DataFrame({"doc_id": [1], "text": ["don't stop 123 now!"]}),
+        )
+        ws = with_token_counts(df, mode="whitespace").first()["n_tokens"]
+        bpe = with_token_counts(df, mode="bpe-ish").first()["n_tokens"]
+        assert ws == 4
+        assert bpe > ws  # splits contractions/digits/punct
+
+    def test_fingerprint_stability(self, corpus):
+        fps = {r["doc_id"]: r["fingerprint"]
+               for r in with_fingerprints(corpus).collect()}
+        assert fps[0] == fps[5000]  # identical docs -> identical fp
+        assert fps[0] != fps[1]
+
+
+class TestMultimodal:
+    @pytest.fixture(scope="class")
+    def media(self, spark):
+        rows = [
+            (1, "image", "image/png", b"fakepng1", 64, 48, 0),
+            (2, "image", "image/png", b"fakepng2", 32, 32, 0),
+            (3, "video", "video/mp4", b"fakemp4", 640, 480, 3500),
+        ]
+        return spark.createDataFrame(
+            rows,
+            "media_id long, kind string, mime string, payload binary, "
+            "width int, height int, duration_ms int",
+        )
+
+    def test_metadata_prunes_payload(self, media, spark):
+        import tempfile
+
+        with tempfile.TemporaryDirectory() as d:
+            media.write.mode("overwrite").parquet(f"{d}/media")
+            on_disk = spark.read.parquet(f"{d}/media")
+            plan = with_media_metadata(on_disk)._jdf.queryExecution() \
+                .executedPlan().toString()
+            assert "payload" not in plan.split("ReadSchema")[-1]
+
+    def test_decode_stub_raises_clearly(self, media):
+        reg = DecoderRegistry()
+        with pytest.raises(Exception, match="no decoder registered"):
+            decode_and_featurize(media, reg).collect()
+
+    def test_fake_decoder_plumbing(self, media):
+        reg = DecoderRegistry()
+        reg.register("image", deterministic_fake_decoder())
+        reg.register("video", deterministic_fake_decoder())
+        res = decode_and_featurize(media, reg).collect()
+        assert len(res) == 3
+        feats = {r["media_id"]: r["feature"] for r in res}
+        assert len(feats[1]) == 8
+        assert all(0 <= v <= 1 for v in feats[1])
+        # deterministic: same payload -> same feature
+        res2 = decode_and_featurize(media, reg).collect()
+        assert {r["media_id"]: r["feature"] for r in res2} == feats
+
+    def test_frame_sampling_shape(self, media):
+        reg = DecoderRegistry()
+        reg.register("video", deterministic_fake_decoder())
+        reg.register("image", deterministic_fake_decoder())
+        frames = sample_video_frames(media, reg, every_ms=1000).collect()
+        vid_frames = [r for r in frames if r["media_id"] == 3]
+        assert len(vid_frames) == 4  # 0,1000,2000,3000 ms
+        assert all(len(r["frame_feature"]) == 4 for r in vid_frames)
+
+
+class TestNearDedupCorpus:
+    """One-call pipeline: exact pass + LSH pass + connected components
+    + canonical keep (operators/dedup.near_dedup_corpus)."""
+
+    @staticmethod
+    def _corpus(spark):
+        import numpy as np
+
+        rng = np.random.default_rng(17)
+        vocab = [f"w{i:03d}" for i in range(400)]
+        rows = []
+        for i in range(40):  # 40 distinct base docs
+            toks = list(rng.choice(vocab, size=60))
+            rows.append((i, " ".join(toks)))
+        # planted cluster A: doc 100 = exact copy of 0,
+        # doc 101 = near copy of 100 (2 tokens swapped)
+        base0 = rows[0][1].split(" ")
+        rows.append((100, " ".join(base0)))
+        near = list(base0)
+        near[5], near[30] = "w399", "w398"
+        rows.append((101, " ".join(near)))
+        # planted cluster B: docs 200/201 exact copies of 7
+        rows.append((200, rows[7][1]))
+        rows.append((201, rows[7][1]))
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def test_planted_duplicates_collapse_to_canonicals(self, spark):
+        docs = self._corpus(spark)
+        cleaned = near_dedup_corpus(docs, threshold=0.5)
+        kept = sorted(r["doc_id"] for r in cleaned.collect())
+        # every planted duplicate gone, canonical (min id) kept
+        assert 0 in kept and 7 in kept
+        for dup in (100, 101, 200, 201):
+            assert dup not in kept
+        # chaining: 101 is near 100 which is exact-equal to 0 ->
+        # one component rooted at 0 (101 never compared to 0 directly
+        # above the threshold is fine — components chain it)
+        assert len(kept) == 40
+
+    def test_no_false_merges_on_distinct_docs(self, spark):
+        import numpy as np
+
+        rng = np.random.default_rng(23)
+        vocab = [f"t{i:03d}" for i in range(2000)]
+        rows = [
+            (i, " ".join(rng.choice(vocab, size=50)))
+            for i in range(30)
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        cleaned = near_dedup_corpus(docs, threshold=0.5)
+        assert cleaned.count() == 30  # nothing merged
+
+    def test_simhash_method_variant(self, spark):
+        docs = self._corpus(spark)
+        cleaned = near_dedup_corpus(docs, method="simhash", max_hamming=6)
+        kept = sorted(r["doc_id"] for r in cleaned.collect())
+        # exact copies always collapse (the exact pass is method-
+        # independent); canonicals survive
+        assert 0 in kept and 7 in kept
+        assert 100 not in kept and 200 not in kept and 201 not in kept
+
+    def test_unknown_method_rejected(self, spark):
+        docs = self._corpus(spark)
+        with pytest.raises(ValueError):
+            near_dedup_corpus(docs, method="phash")
+
+
+class TestTfidf:
+    def test_top_terms_hand_corpus(self, spark):
+        from outrank_spark.operators.text import tfidf_top_terms
+
+        docs = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1, 2, 3],
+            "text": [
+                "apple apple banana common",
+                "banana cherry common",
+                "cherry cherry cherry common",
+            ],
+        }))
+        out = tfidf_top_terms(docs, k=1).collect()
+        top = {r["doc_id"]: r["token"] for r in out}
+        # 'common' is in every doc (lowest idf); repeated distinctive
+        # terms must win
+        assert top == {1: "apple", 2: "banana", 3: "cherry"}
+        import numpy as np
+
+        # pinned score: doc 3, tf=3, df(cherry)=2, N=3
+        want = 3 * (np.log((1 + 3) / (1 + 2)) + 1)
+        got = {r["doc_id"]: r["tfidf"] for r in out}[3]
+        assert got == pytest.approx(want, abs=1e-9)
+
+    def test_rank_bounded_and_total_ordered(self, spark):
+        from outrank_spark.operators.text import tfidf_top_terms
+
+        docs = spark.createDataFrame(pd.DataFrame({
+            "doc_id": [1], "text": ["a b c d e f g"],
+        }))
+        out = tfidf_top_terms(docs, k=3).collect()
+        assert [r["rank"] for r in out] == [1, 2, 3]
+        # pure idf tie -> alphabetical tiebreak
+        assert [r["token"] for r in out] == ["a", "b", "c"]
 
 
 class TestCanonicalizeUrl:
@@ -48,3 +550,950 @@ class TestCanonicalizeUrl:
             .executedPlan().toString()
         for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
             assert marker not in plan
+
+
+class TestKmeansFit:
+    def test_recovers_separable_blobs(self, spark):
+        from outrank_spark.operators.similarity import kmeans_fit
+
+        rng = np.random.default_rng(21)
+        centers = np.array([[0.0, 0.0], [10.0, 10.0], [-10.0, 10.0]])
+        pts = np.vstack([
+            c + 0.5 * rng.standard_normal((200, 2)) for c in centers
+        ])
+        df = spark.createDataFrame(
+            pd.DataFrame({"embedding": list(pts)}),
+            "embedding array<double>",
+        ).repartition(6)
+        got, inertia = kmeans_fit(df, k=3, max_iter=25)
+        # every true center has a learned centroid within 0.5
+        for c in centers:
+            assert np.linalg.norm(got - c, axis=1).min() < 0.5
+        # inertia ~ n * d * sigma^2 = 600 * 2 * 0.25
+        assert inertia < 600
+
+    def test_partition_count_does_not_change_result(self, spark):
+        from outrank_spark.operators.similarity import kmeans_fit
+
+        rng = np.random.default_rng(4)
+        pts = rng.standard_normal((300, 3))
+        pdf = pd.DataFrame({"embedding": list(pts)})
+        a, ia = kmeans_fit(
+            spark.createDataFrame(pdf, "embedding array<double>")
+            .repartition(2), k=4)
+        b, ib = kmeans_fit(
+            spark.createDataFrame(pdf, "embedding array<double>")
+            .repartition(9), k=4)
+        assert np.allclose(a, b, atol=1e-9)
+        assert ia == pytest.approx(ib, rel=1e-12)
+
+    def test_requires_enough_rows(self, spark):
+        from outrank_spark.operators.similarity import kmeans_fit
+
+        df = spark.createDataFrame(
+            pd.DataFrame({"embedding": [[0.0, 0.0]]}),
+            "embedding array<double>")
+        with pytest.raises(ValueError):
+            kmeans_fit(df, k=5)
+
+    def test_ivf_distributed_training_recall(self, spark, vectors):
+        from outrank_spark.operators.similarity import (
+            brute_force_topk,
+            ivf_topk,
+        )
+
+        queries = vectors.filter(F.col("vec_id") < 3).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("qv"),
+        )
+        exact = {
+            (r["query_id"], r["vec_id"])
+            for r in brute_force_topk(vectors, queries, k=5).collect()
+        }
+        approx = {
+            (r["query_id"], r["vec_id"])
+            for r in ivf_topk(vectors, queries, k=5, n_cells=8,
+                              n_probe=4, train="distributed").collect()
+        }
+        recall = len(exact & approx) / len(exact)
+        assert recall >= 0.8
+
+
+class TestContamination:
+    """Benchmark-decontamination scores (train/test n-gram overlap)."""
+
+    def _frames(self, spark):
+        bench = spark.createDataFrame(
+            [(100, "alpha beta gamma delta epsilon zeta"),
+             (101, "one two three four five six seven")],
+            "doc_id long, text string",
+        )
+        corpus = spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon zeta"),   # exact copy
+             (2, "alpha beta gamma delta prime omega kappa"),  # partial
+             (3, "totally unrelated words appear here now")],  # clean
+            "doc_id long, text string",
+        )
+        return corpus, bench
+
+    def test_scores(self, spark):
+        from outrank_spark.operators.dedup import contamination_scores
+
+        corpus, bench = self._frames(spark)
+        rows = {r["doc_id"]: r for r in
+                contamination_scores(corpus, bench, n=3).collect()}
+        assert rows[1]["contamination"] == 1.0
+        # doc 2: 5 distinct 3-grams, 2 of them ("alpha beta gamma",
+        # "beta gamma delta") occur in the benchmark
+        assert rows[2]["n_shingles"] == 5
+        assert rows[2]["n_contaminated"] == 2
+        assert rows[2]["contamination"] == pytest.approx(0.4)
+        assert rows[3]["contamination"] == 0.0
+
+    def test_benchmark_side_broadcast(self, spark):
+        from outrank_spark.operators.dedup import contamination_scores
+
+        corpus, bench = self._frames(spark)
+        plan = contamination_scores(corpus, bench)._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        shuffle_fallback = contamination_scores(
+            corpus, bench, broadcast_benchmark=False)
+        assert shuffle_fallback.count() == 3
+
+
+class TestPIIRedaction:
+    def test_redacts_and_counts(self, spark):
+        from outrank_spark.operators.text import redact_pii
+
+        df = spark.createDataFrame(
+            [(1, "mail bob.smith+x@sub.example.org and alice@ex.io now"),
+             (2, "server 192.168.0.1 then call +44 (20) 7946-0958 ok"),
+             (3, "clean text with no personal data at all"),
+             (4, "edge 999.999.999.999 and order number 12345678901")],
+            "id long, text string",
+        )
+        rows = {r["id"]: r for r in redact_pii(df, "text").collect()}
+        assert rows[1]["n_email"] == 2
+        assert rows[1]["text"] == "mail [EMAIL] and [EMAIL] now"
+        assert rows[2]["n_ipv4"] == 1 and rows[2]["n_phone"] == 1
+        assert rows[2]["text"] == "server [IPV4] then call [PHONE] ok"
+        assert rows[3]["text"].startswith("clean")
+        assert (rows[3]["n_email"], rows[3]["n_ipv4"], rows[3]["n_phone"]) \
+            == (0, 0, 0)
+        # the dotted-quad pattern takes anything shaped like an IP
+        # (byte-range validation is downstream's job); long digit runs
+        # fall to the phone pattern
+        assert rows[4]["n_ipv4"] == 1 and rows[4]["n_phone"] == 1
+
+    def test_email_consumed_before_phone(self, spark):
+        from outrank_spark.operators.text import redact_pii
+
+        df = spark.createDataFrame(
+            [(1, "a12345678@example.com")], "id long, text string")
+        r = redact_pii(df, "text").collect()[0]
+        # digits inside the address must not double-count as a phone
+        assert r["n_email"] == 1 and r["n_phone"] == 0
+        assert r["text"] == "[EMAIL]"
+
+    def test_no_shuffle_in_plan(self, spark):
+        from outrank_spark.operators.text import redact_pii
+
+        df = spark.createDataFrame([(1, "x@y.io")], "id long, text string")
+        plan = redact_pii(df, "text")._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert "Exchange" not in plan  # scan-level projection only
+
+
+def test_redact_pii_output_collision_rejected(spark):
+    from outrank_spark.operators.text import redact_pii
+
+    df = spark.createDataFrame([(1, "x@y.io", 0)],
+                               "id long, text string, n_email int")
+    with pytest.raises(ValueError, match="n_email"):
+        redact_pii(df, "text")
+
+
+class TestContentKeyWidth:
+    def test_exact_dedup_key_is_128_bit(self, corpus):
+        """exact_dedup keys on two independent xxhash64 lanes (a single
+        64-bit key birthday-collides at multi-billion-doc scale); the
+        output exposes both lanes and they are not identical columns."""
+        res = exact_dedup(corpus)
+        assert {"content_hash", "content_hash2"} <= set(res.columns)
+        rows = res.collect()
+        assert any(r["content_hash"] != r["content_hash2"] for r in rows)
+        # grouping unchanged: one cluster of 2, rest singletons
+        assert sorted(r["n_copies"] for r in rows)[-1] == 2
+
+
+class TestRealCodecs:
+    """Pure-numpy PPM/WAV decoders — a REAL codec path end to end
+    (no image/audio library in this sandbox), exercised against
+    committed byte fixtures."""
+
+    def test_ppm_fixture_decodes_exact(self):
+        from outrank_spark.operators.multimodal import decode_ppm
+
+        payload = open("tests/fixtures/tiny.ppm", "rb").read()
+        arr = decode_ppm(payload)
+        assert arr.shape == (3, 4, 3)
+        assert arr.dtype == np.uint8
+        # deterministic gradient written by the fixture generator
+        assert np.array_equal(
+            arr.reshape(-1), np.arange(36, dtype=np.uint8))
+
+    def test_wav_fixture_decodes_exact(self):
+        from outrank_spark.operators.multimodal import (
+            decode_wav, wav_sample_rate,
+        )
+
+        payload = open("tests/fixtures/tiny.wav", "rb").read()
+        arr = decode_wav(payload)
+        assert arr.shape == (400, 1)
+        assert arr.dtype == np.int16
+        assert np.array_equal(
+            arr[:, 0], (np.arange(400, dtype=np.int16) * 7 - 1400))
+        assert wav_sample_rate(payload) == 8000
+
+    def test_corrupt_payloads_rejected(self):
+        from outrank_spark.operators.multimodal import (
+            decode_ppm, decode_wav,
+        )
+
+        with pytest.raises(ValueError, match="PPM"):
+            decode_ppm(b"GIF89a....")
+        with pytest.raises(ValueError, match="RIFF"):
+            decode_wav(b"not a wav")
+
+    def test_quality_gate_end_to_end(self, spark):
+        """decode-verified gate: good image kept, sub-floor image and
+        corrupt payload dropped, audio gated on sample count."""
+        from outrank_spark.operators.multimodal import (
+            decode_and_featurize,
+            default_registry,
+            media_quality_gate,
+        )
+
+        ppm = open("tests/fixtures/tiny.ppm", "rb").read()
+        wav = open("tests/fixtures/tiny.wav", "rb").read()
+        rows = [
+            (1, "image/ppm", "image/ppm", ppm, 4, 3, 0),
+            (2, "image/ppm", "image/ppm", b"garbage", 4, 3, 0),
+            (3, "audio/wav", "audio/wav", wav, 0, 0, 50),
+        ]
+        media = spark.createDataFrame(
+            rows,
+            "media_id long, kind string, mime string, payload binary, "
+            "width int, height int, duration_ms int",
+        )
+        reg = default_registry()
+        gate = media_quality_gate(media, reg, min_pixels=10,
+                                  min_audio_samples=256)
+        got = {r["media_id"]: r for r in gate.collect()}
+        assert got[1]["keep"] and got[1]["decoded_h"] == 3
+        assert not got[2]["keep"] and got[2]["decoded_h"] == -1
+        assert got[3]["keep"] and got[3]["decoded_h"] == 400
+        # strict floor drops the 12-pixel image
+        strict = media_quality_gate(media, reg, min_pixels=1000)
+        assert not [r for r in strict.collect()
+                    if r["media_id"] == 1][0]["keep"]
+        # the real codec also flows through decode_and_featurize
+        feats = decode_and_featurize(
+            media.where(F.col("media_id") == 1), reg).collect()
+        assert len(feats) == 1 and len(feats[0]["feature"]) == 8
+
+    def test_none_returning_decoder_drops_item(self, spark):
+        """ADVICE r3: a registered decoder that returns None WITHOUT
+        raising must read as 'drop' for that item — first in the batch
+        (previously NameError) and mid-batch (previously the prior
+        item's stale verdict)."""
+        from outrank_spark.operators.multimodal import (
+            DecoderRegistry,
+            deterministic_fake_decoder,
+            media_quality_gate,
+        )
+
+        reg = DecoderRegistry()
+        good = deterministic_fake_decoder(shape=(8, 8, 3))
+        reg.register("image/none", lambda payload: None)
+        reg.register("image/fake", good)
+        rows = [
+            (1, "image/none", b"\x01"),   # first item: None decode
+            (2, "image/fake", b"\x02"),   # kept
+            (3, "image/none", b"\x03"),   # after a keeper: still drop
+        ]
+        media = spark.createDataFrame(
+            rows, "media_id long, kind string, payload binary",
+        ).coalesce(1)
+        got = {r["media_id"]: r
+               for r in media_quality_gate(media, reg,
+                                           min_pixels=4).collect()}
+        assert not got[1]["keep"] and got[1]["decoded_h"] == -1
+        assert got[2]["keep"]
+        assert not got[3]["keep"] and got[3]["decoded_h"] == -1
+
+    def test_ppm_crlf_header(self):
+        """Windows-written P6 (CRLF header terminator) must decode the
+        raster from the right offset, not shift by one byte."""
+        from outrank_spark.operators.multimodal import decode_ppm
+
+        pix = np.arange(12, dtype=np.uint8)
+        arr = decode_ppm(b"P6\r\n2 2\r\n255\r\n" + pix.tobytes())
+        assert np.array_equal(arr.reshape(-1), pix)
+        with pytest.raises(ValueError, match="truncated"):
+            decode_ppm(b"P6\n2 2\n255\n" + b"\x00" * 5)
+
+
+class TestBigramLmQuality:
+    def test_frequent_transitions_score_higher(self, spark):
+        """A document made of corpus-frequent bigrams must out-score a
+        document of corpus-unique bigrams; counts follow the smoothed
+        formula exactly."""
+        import math
+
+        from outrank_spark.operators.text import ngram_logprob_scores
+
+        rows = (
+            [(i, "the cat sat on the mat") for i in range(20)]
+            + [(100, "zq xv qj wk pf gz")]       # unique transitions
+            + [(101, "solo")]                     # < 2 tokens: absent
+        )
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {r["doc_id"]: r for r in
+               ngram_logprob_scores(df).collect()}
+        assert 101 not in out
+        assert out[0]["avg_logprob"] > out[100]["avg_logprob"]
+        assert out[0]["n_bigrams"] == 5
+        # closed-form check on the rare doc: every bigram unique
+        # -> P = (1 + .5) / (1 + .5 * V) for each of its 5 bigrams
+        v = len({("cat"), ("sat"), ("on"), ("the"), ("mat"),
+                 ("xv"), ("qj"), ("wk"), ("pf"), ("gz")})
+        expected = math.log(1.5 / (1 + 0.5 * v))
+        assert abs(out[100]["avg_logprob"] - round(expected, 6)) < 1e-6
+
+
+class TestSemanticDedup:
+    def test_planted_semantic_dups_pruned(self, spark):
+        """Near-identical embedding pairs collapse to the minimum id;
+        distinct vectors survive."""
+        import pandas as pd
+
+        from outrank_spark.operators.similarity import semantic_dedup
+
+        rng = np.random.default_rng(17)
+        base = rng.standard_normal((40, 16))
+        rows = []
+        vid = 0
+        for i in range(40):
+            rows.append((vid, base[i].tolist())); vid += 1
+        # plant 10 near-duplicates of the first 10 vectors
+        for i in range(10):
+            dup = base[i] + rng.standard_normal(16) * 0.01
+            rows.append((vid, dup.tolist())); vid += 1
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        kept = semantic_dedup(df, k=4, cos_threshold=0.95).toPandas()
+        kept_ids = set(kept["vec_id"])
+        # all 40 originals kept, all 10 planted dups pruned
+        assert set(range(40)) <= kept_ids
+        assert kept_ids.isdisjoint(range(40, 50))
+
+    def test_threshold_one_keeps_everything(self, spark):
+        from outrank_spark.operators.similarity import semantic_dedup
+
+        rng = np.random.default_rng(3)
+        rows = [(i, rng.standard_normal(8).tolist()) for i in range(30)]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        assert semantic_dedup(df, k=2, cos_threshold=1.01).count() == 30
+
+    def test_blocked_prune_matches_full_matrix(self, spark):
+        """Forcing the per-cell cosine into many tiny column blocks
+        (pair_block_floats=64 -> block of 1-2 vectors) must keep the
+        drop set identical to the effectively-unblocked default."""
+        from outrank_spark.operators.similarity import semantic_dedup
+
+        rng = np.random.default_rng(17)
+        base = rng.standard_normal((40, 16))
+        rows = [(i, base[i].tolist()) for i in range(40)]
+        for i in range(10):
+            dup = base[i] + rng.standard_normal(16) * 0.01
+            rows.append((40 + i, dup.tolist()))
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        kept_full = sorted(
+            r["vec_id"] for r in
+            semantic_dedup(df, k=4, cos_threshold=0.95).collect())
+        kept_blocked = sorted(
+            r["vec_id"] for r in
+            semantic_dedup(df, k=4, cos_threshold=0.95,
+                           pair_block_floats=64).collect())
+        assert kept_blocked == kept_full
+
+    def test_boundary_multiprobe_catches_straddling_pair(self, spark):
+        """A near-dup twin pair placed exactly on the Voronoi
+        boundary between two well-separated clusters is the published
+        SemDeDup recall hole (within-cell-only compare).  With the
+        default boundary_margin the pair is probed into both cells
+        and pruned; the off-boundary cluster members are untouched,
+        and no phantom rows appear (multi-probe duplicates rows into
+        a second CELL, never into the output)."""
+        from outrank_spark.operators.similarity import semantic_dedup
+
+        rng = np.random.default_rng(11)
+        dim = 16
+        a = np.zeros(dim); a[0] = 1.0
+        b = np.zeros(dim); b[1] = 1.0
+        rows = []
+        vid = 0
+        for anchor in (a, b):
+            for _ in range(20):
+                # wide noise: cluster-mate cosines land ~0.8, safely
+                # below the 0.99 prune threshold
+                v = anchor * 4.0 + rng.standard_normal(dim) * 0.5
+                rows.append((vid, v.tolist())); vid += 1
+        # twin pair at the exact midpoint direction of the two
+        # anchors: equidistant from both centroids -> top-2 centroid
+        # cosines within any positive margin
+        mid = (a + b) / np.linalg.norm(a + b)
+        rows.append((vid, (mid * 4.0).tolist())); vid += 1
+        rows.append((vid, (mid * 4.0 + rng.standard_normal(dim)
+                           * 1e-4).tolist())); vid += 1
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>")
+        kept = semantic_dedup(df, k=2, cos_threshold=0.99).toPandas()
+        kept_ids = sorted(kept["vec_id"])
+        # exactly the 40 cluster members + the lower-id twin survive,
+        # each exactly once
+        assert kept_ids == list(range(41))
+
+    @pytest.mark.slow
+    def test_million_rows_default_k_autoscales(self, spark):
+        """VERDICT r3 item 3: at 1M rows the old fixed k=64 meant
+        ~15.6k-row cells and a dense 15.6k^2 cosine matrix per task;
+        with k auto-derived from n (target_cell_rows) and the blocked
+        prune, the DEFAULT call must complete and prune the planted
+        duplicates without raising k by hand."""
+        from outrank_spark.operators.similarity import semantic_dedup
+
+        n = 1_000_000
+        anchors = np.random.Generator(np.random.PCG64(5)) \
+            .standard_normal((32, 32))
+
+        def gen(batches):
+            from outrank_spark.hashing import splitmix64
+
+            for pdf in batches:
+                ids = pdf["id"].to_numpy()
+                base = np.where(ids % 50 == 1, ids - 1, ids)
+                vecs = anchors[base % 32].copy()
+                # avalanche-hashed counter noise: deterministic per id,
+                # independent of partitioning AND decorrelated across
+                # ids (a plain Weyl/multiplicative counter leaves all
+                # noise vectors on a lattice line -> spurious cos ~ 1).
+                # Sized so same-anchor distinct ids sit well below cos
+                # 0.95 (mean cos ~0.34, tail negligible even across ~4k cellmates)
+                # while planted dups stay ~1.
+                ctr = (base[:, None] * 32 + np.arange(32)[None, :]) \
+                    .astype(np.uint64)
+                u = splitmix64(ctr).astype(np.float64) * (2.0 ** -64)
+                vecs += (u - 0.5) * 4.8
+                dup = (ids % 50 == 1)
+                vecs[dup] += ((u[dup] - 0.5) * 0.01)
+                yield pd.DataFrame({
+                    "vec_id": ids, "embedding": [v.tolist() for v in vecs],
+                })
+
+        df = spark.range(n).mapInPandas(
+            gen, schema="vec_id long, embedding array<double>")
+        kept = semantic_dedup(df, cos_threshold=0.95)
+        kept_dups = kept.filter(F.col("vec_id") % 50 == 1).count()
+        n_dups = df.filter(F.col("vec_id") % 50 == 1).count()
+        total_kept = kept.count()
+        # every planted dup has a cos~1 twin at id-1 -> pruned UNLESS
+        # the pair happens to straddle a Voronoi boundary (the tiny
+        # per-dim jitter can flip the argmax for pairs sitting exactly
+        # between two centroids).  That within-cell-only property is
+        # inherent to SemDeDup as published; observed 7/20k here —
+        # bound the miss rate at 0.1%.
+        n_planted = n // 50
+        assert kept_dups <= n_planted * 0.001
+        # non-dup rows are anchor + wide noise: the overwhelming
+        # majority survive (a few same-anchor borderline cosines may
+        # legitimately collapse)
+        assert total_kept >= int((n - n_dups) * 0.95)
+
+
+class TestWinnowedSpans:
+    def test_shared_span_guarantees_fingerprint(self, spark):
+        """Winnowing guarantee: any shared span of >= window+ngram-1
+        tokens yields a shared fingerprint; disjoint docs share none."""
+        from outrank_spark.operators.dedup import winnowed_span_pairs
+
+        span = "alpha beta gamma delta epsilon zeta"  # 6 tokens
+        rows = [
+            (1, f"one two {span} three four"),
+            (2, f"five six seven {span} eight"),
+            (3, "nine ten eleven twelve thirteen fourteen fifteen"),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        pairs = {(r["id_a"], r["id_b"]): r["n_shared_fps"]
+                 for r in winnowed_span_pairs(
+                     df, ngram=3, window=4).collect()}
+        assert (1, 2) in pairs and pairs[(1, 2)] >= 1
+        assert all(3 not in p for p in pairs)
+
+    def test_both_hash_paths_honor_the_guarantee(self, spark):
+        """The winnowing guarantee holds under either gram hash.
+        (Partially-overlapping docs may pair differently across hash
+        functions — each picks different window minima — but a fully
+        shared >= window+ngram-1 span must pair under BOTH.)"""
+        from outrank_spark.operators.dedup import winnowed_span_pairs
+
+        span = " ".join(f"s{j}" for j in range(8))
+        rows = [(1, f"a b {span} c"), (2, f"d {span} e f"),
+                (3, "q r s t u v w x y z")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        for hash_fn in ("xxhash64", "md5"):
+            pairs = {(r["id_a"], r["id_b"]) for r in
+                     winnowed_span_pairs(df, hash_fn=hash_fn).collect()}
+            assert (1, 2) in pairs
+            assert all(3 not in p for p in pairs)
+
+
+class TestNormalizeText:
+    def test_unicode_and_whitespace(self, spark):
+        import unicodedata
+
+        from outrank_spark.operators.text import normalize_text
+
+        decomposed = "Café"           # e + combining acute
+        rows = [(1, "  a\t\tb\x07c   "),    # control + ragged ws
+                (2, decomposed + "  x")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {r["doc_id"]: r["text"] for r in
+               normalize_text(df, unicode_form="NFC").collect()}
+        assert out[1] == "a bc"             # BEL stripped, ws collapsed
+        assert out[2] == unicodedata.normalize("NFC", decomposed) + " x"
+        assert len(out[2].split(" ")[0]) == 4   # é composed to 1 char
+
+    def test_jvm_only_path_and_lowercase(self, spark):
+        from outrank_spark.operators.text import normalize_text
+
+        df = spark.createDataFrame([(1, " A  B ")],
+                                   "doc_id long, text string")
+        out = normalize_text(df, unicode_form=None, lowercase=True)
+        assert out.first()["text"] == "a b"
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan    # pure JVM when no unicode
+
+    def test_short_documents_do_not_crash(self, spark):
+        """Docs below ngram / window thresholds contribute no
+        fingerprints but must not abort the job (sequence(1, 0)
+        descends in Spark and slice(.., 0, k) throws)."""
+        from outrank_spark.operators.dedup import winnowed_span_pairs
+
+        span = "alpha beta gamma delta epsilon zeta"
+        rows = [(1, "tiny"), (2, "only two"), (3, "just three tokens"),
+                (4, "four small tokens here"),
+                (5, f"{span} pad1"), (6, f"pad2 {span}")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        pairs = {(r["id_a"], r["id_b"]) for r in
+                 winnowed_span_pairs(df, ngram=3, window=4).collect()}
+        assert (5, 6) in pairs
+        assert all(p[0] >= 5 for p in pairs)
+
+
+class TestParagraphDedup:
+    """dedup_paragraphs: corpus-wide first-occurrence paragraph dedup
+    (CCNet/RefinedWeb boilerplate removal), documents rebuilt in
+    original paragraph order."""
+
+    def _run(self, spark, rows):
+        from outrank_spark.operators.dedup import dedup_paragraphs
+
+        df = spark.createDataFrame(rows,
+                                   "doc_id long, paras array<string>")
+        out = dedup_paragraphs(df, paras_col="paras", id_col="doc_id")
+        return {r["doc_id"]: r.asDict() for r in out.collect()}
+
+    def test_boilerplate_struck_from_all_but_first(self, spark):
+        rows = [
+            (1, ["NAV BAR", "body one", "FOOTER"]),
+            (2, ["NAV BAR", "body two", "FOOTER"]),
+            (3, ["NAV BAR", "body three", "FOOTER"]),
+        ]
+        got = self._run(spark, rows)
+        assert got[1]["text"] == "NAV BAR body one FOOTER"
+        assert got[2]["text"] == "body two"
+        assert got[3]["text"] == "body three"
+        assert got[1]["n_kept"] == 3 and got[2]["n_kept"] == 1
+        assert all(v["n_paras"] == 3 for v in got.values())
+
+    def test_order_preserved_and_intra_doc_dups(self, spark):
+        # Repeats WITHIN a doc also collapse to the first position;
+        # survivors keep the original relative order.
+        rows = [(7, ["a", "b", "a", "c", "b", "d"])]
+        got = self._run(spark, rows)
+        assert got[7]["text"] == "a b c d"
+        assert got[7]["n_kept"] == 4 and got[7]["n_paras"] == 6
+
+    def test_fully_boilerplate_doc_kept_empty(self, spark):
+        rows = [(1, ["same", "same2"]), (2, ["same", "same2"])]
+        got = self._run(spark, rows)
+        assert got[2]["text"] == "" and got[2]["n_kept"] == 0
+        assert got[2]["n_paras"] == 2
+        assert got[1]["text"] == "same same2"
+
+    def test_first_occurrence_is_global_id_pos_order(self, spark):
+        # Owner = min (doc_id, pos) across the corpus, not arrival
+        # or partition order.
+        rows = [(10, ["x", "dup"]), (2, ["dup", "y"])]
+        got = self._run(spark, rows)
+        assert got[2]["text"] == "dup y"
+        assert got[10]["text"] == "x"
+
+
+class TestBm25:
+    def test_hand_computed_scores(self, spark):
+        import math
+
+        from outrank_spark.operators.text import bm25_topk
+
+        # corpus: d1 = "cat cat dog", d2 = "dog", d3 = "bird"
+        # N=3, avgdl=(3+1+1)/3; query {cat}: df=1
+        df = spark.createDataFrame(
+            [(1, "cat cat dog"), (2, "dog"), (3, "bird")],
+            "doc_id long, text string")
+        out = bm25_topk(df, ["cat"], k=5).collect()
+        assert [r["doc_id"] for r in out] == [1]
+        idf = math.log(1 + (3 - 1 + 0.5) / (1 + 0.5))
+        tf, dl, avgdl = 2, 3, 5 / 3
+        want = idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
+        assert out[0]["score"] == pytest.approx(round(want, 6))
+        assert out[0]["n_matched"] == 1
+
+    def test_ranking_and_tiebreak(self, spark):
+        from outrank_spark.operators.text import bm25_topk
+
+        df = spark.createDataFrame(
+            [(5, "x y"), (2, "x y"), (9, "x z z z z z z")],
+            "doc_id long, text string")
+        out = bm25_topk(df, ["x", "y"], k=3).collect()
+        # 5 and 2 tie exactly -> doc_id ascending; 9 matches x only,
+        # longer doc -> lower score
+        assert [r["doc_id"] for r in out] == [2, 5, 9]
+        assert out[0]["n_matched"] == 2 and out[2]["n_matched"] == 1
+
+    def test_case_folding_and_empty_query(self, spark):
+        from outrank_spark.operators.text import bm25_topk
+
+        df = spark.createDataFrame([(1, "Cat")], "doc_id long, text string")
+        assert bm25_topk(df, ["cAt"]).count() == 1
+        with pytest.raises(ValueError):
+            bm25_topk(df, [])
+
+
+class TestMinHashDelta:
+    """Incremental dedup: a 'new batch' against a standing signature
+    index, never re-signing the corpus (minhash_delta_candidates)."""
+
+    def _split(self, corpus):
+        # index = everything except the planted near-dup twins;
+        # batch = the twins (i+1000) plus the exact dup (5000) plus
+        # one genuinely novel doc id 42 (kept in BOTH -> self-filter)
+        index = corpus.filter(
+            (F.col("doc_id") < 1000) | (F.col("doc_id") == 5000))
+        batch = corpus.filter(
+            (F.col("doc_id") >= 1000) | (F.col("doc_id") == 42))
+        return index, batch
+
+    def test_recall_on_planted_cross_pairs(self, corpus):
+        from outrank_spark.operators.dedup import (
+            minhash_delta_candidates, minhash_signatures)
+        index, batch = self._split(corpus)
+        idx_sig = minhash_signatures(index, k=64)
+        got = minhash_delta_candidates(
+            batch, idx_sig, k=64, bands=16,
+            verify_threshold=0.7, index_text=index,
+        ).collect()
+        pairs = {(r["id_new"], r["id_index"]) for r in got}
+        hits = sum((i + 1000, i) in pairs for i in range(10))
+        assert hits >= 9          # >= 90% recall at ~0.9 jaccard
+        for r in got:
+            assert r["jaccard"] >= 0.7   # exact verification applied
+        # the exact dup of doc 0 lives in the INDEX (id 5000); the
+        # batch copy of doc 0's twin must hit both 0 and 5000
+        assert (1000, 0) in pairs and (1000, 5000) in pairs
+
+    def test_self_id_filtered_and_novel_doc_clean(self, corpus):
+        from outrank_spark.operators.dedup import (
+            minhash_delta_candidates, minhash_signatures)
+        index, batch = self._split(corpus)
+        idx_sig = minhash_signatures(index, k=64)
+        est = minhash_delta_candidates(
+            batch, idx_sig, k=64, bands=16).collect()
+        for r in est:
+            assert r["id_new"] != r["id_index"]  # id-42 self-pair gone
+        # doc 42 shares no 3-gram runs with other docs at sim >= 0.5
+        high = [r for r in est
+                if r["id_new"] == 42 and r["minhash_sim"] >= 0.5]
+        assert high == []
+
+    def test_estimate_only_threshold(self, corpus):
+        from outrank_spark.operators.dedup import (
+            minhash_delta_candidates, minhash_signatures)
+        index, batch = self._split(corpus)
+        idx_sig = minhash_signatures(index, k=64)
+        got = minhash_delta_candidates(
+            batch, idx_sig, k=64, bands=16, verify_threshold=0.8,
+        ).collect()
+        assert got and all(r["minhash_sim"] >= 0.8 for r in got)
+
+    def test_wrong_k_index_rejected(self, corpus):
+        from outrank_spark.operators.dedup import (
+            minhash_delta_candidates, minhash_signatures)
+        index, batch = self._split(corpus)
+        idx_sig = minhash_signatures(index, k=32)
+        with pytest.raises(ValueError, match="different k"):
+            minhash_delta_candidates(batch, idx_sig, k=64)
+
+    def test_persisted_index_never_resigned(self, corpus, tmp_path):
+        """The real deployment shape: the signature index is a stored
+        table.  The candidate plan must sign ONLY the batch — with a
+        parquet-backed index the plan has exactly 3 explodes (batch
+        shingles + 2 band explosions) and zero text splits on the
+        index side, and results match the recomputed-index run."""
+        from outrank_spark.operators.dedup import (
+            minhash_delta_candidates, minhash_signatures)
+        index, batch = self._split(corpus)
+        p = str(tmp_path / "sig_index")
+        minhash_signatures(index, k=64).write.parquet(p)
+        idx_sig = corpus.sparkSession.read.parquet(p)
+        est = minhash_delta_candidates(batch, idx_sig, k=64, bands=16)
+        phys = est._jdf.queryExecution().executedPlan().toString()
+        # the index side feeds from the stored signature parquet
+        # (ReadSchema carries mh columns); it has no text column at
+        # all, so a re-sign is impossible by construction, and the
+        # batch signature is locally checkpointed (computed once,
+        # served to both its consumers as an RDD scan — NOT a
+        # CacheManager entry, which would leak across batches)
+        assert "mh0:bigint" in phys
+        assert "ExistingRDD" in phys or "LogicalRDD" in phys
+        live = minhash_delta_candidates(
+            batch, minhash_signatures(index, k=64), k=64, bands=16)
+        assert (sorted(map(tuple, est.collect()))
+                == sorted(map(tuple, live.collect())))
+
+
+class TestReadability:
+    def test_hand_computed_flesch(self, spark):
+        from outrank_spark.operators.text import with_readability
+        # "the cat sat. it ran!" -> 5 words, 2 sentence runs,
+        # vowel groups: e, a, a, i, a  -> 5 syllables
+        df = spark.createDataFrame(
+            [(1, "the cat sat. it ran!")], "doc_id long, text string")
+        r = with_readability(df).collect()[0]
+        assert (r["n_words"], r["n_sentences"], r["n_syllables"]) \
+            == (5, 2, 5)
+        want = 206.835 - 1.015 * (5 / 2) - 84.6 * (5 / 5)
+        assert r["flesch"] == pytest.approx(want, abs=1e-9)
+
+    def test_no_terminator_floors_sentences_at_one(self, spark):
+        from outrank_spark.operators.text import with_readability
+        df = spark.createDataFrame(
+            [(1, "just a fragment with no end")],
+            "doc_id long, text string")
+        r = with_readability(df).collect()[0]
+        assert r["n_sentences"] == 1 and r["flesch"] is not None
+
+    def test_empty_text_yields_null_score(self, spark):
+        from outrank_spark.operators.text import with_readability
+        df = spark.createDataFrame(
+            [(1, ""), (2, "   ")], "doc_id long, text string")
+        got = {r["doc_id"]: r for r in with_readability(df).collect()}
+        assert got[1]["n_words"] == 0 and got[1]["flesch"] is None
+        assert got[2]["n_words"] == 0 and got[2]["flesch"] is None
+
+    def test_zero_shuffle_plan(self, spark):
+        from outrank_spark.operators.text import with_readability
+        df = spark.createDataFrame(
+            [(1, "a b.")], "doc_id long, text string")
+        plan = with_readability(df)._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert "Exchange" not in plan
+
+
+class TestSortedNeighborhood:
+    def _brute(self, rows, w):
+        order = sorted(rows, key=lambda r: (r[1], r[0]))
+        pairs = set()
+        for i, (ida, ka) in enumerate(order):
+            for g in range(1, w + 1):
+                if i + g < len(order):
+                    idb, kb = order[i + g]
+                    pairs.add((ida, idb, ka, kb, g))
+        return pairs
+
+    def test_matches_bruteforce_and_linear_count(self, spark):
+        from outrank_spark.operators.dedup import sorted_neighborhood_pairs
+        rows = [(i, f"name{(i * 7) % 23:03d}") for i in range(60)]
+        df = spark.createDataFrame(rows, "doc_id long, k string")
+        got = {tuple(r) for r in sorted_neighborhood_pairs(
+            df, "k", window=3).collect()}
+        assert got == self._brute(rows, 3)
+        n, w = len(rows), 3
+        assert len(got) == w * n - w * (w + 1) // 2
+
+    def test_typo_neighbors_pair_where_hashing_cannot(self, spark):
+        from outrank_spark.operators.dedup import sorted_neighborhood_pairs
+        rows = [(1, "jonathan smith"), (2, "jonathan smyth"),
+                (3, "aaron a"), (4, "zoe z")]
+        df = spark.createDataFrame(rows, "doc_id long, k string")
+        got = {(r["id_a"], r["id_b"]) for r in
+               sorted_neighborhood_pairs(df, "k", window=1).collect()}
+        assert (1, 2) in got          # adjacent after sorting
+
+    def test_partition_invariance(self, spark):
+        from outrank_spark.operators.dedup import sorted_neighborhood_pairs
+        rows = [(i, f"k{(i * 13) % 31:02d}") for i in range(80)]
+        df = spark.createDataFrame(rows, "doc_id long, k string")
+        a = {tuple(r) for r in sorted_neighborhood_pairs(
+            df.repartition(1), "k", window=2).collect()}
+        b = {tuple(r) for r in sorted_neighborhood_pairs(
+            df.repartition(16), "k", window=2).collect()}
+        assert a == b
+
+    def test_null_keys_excluded_and_window_validated(self, spark):
+        from outrank_spark.operators.dedup import sorted_neighborhood_pairs
+        df = spark.createDataFrame(
+            [(1, "a"), (2, None), (3, "b")], "doc_id long, k string")
+        got = sorted_neighborhood_pairs(df, "k", window=1).collect()
+        assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 3)}
+        with pytest.raises(ValueError, match="window"):
+            sorted_neighborhood_pairs(df, "k", window=0)
+
+
+class TestFellegiSunterEM:
+    @staticmethod
+    def _reference_em(patterns, k, iters, m0, u0, p0):
+        m, u, p = [m0] * k, [u0] * k, p0
+        total = float(sum(c for _, c in patterns))
+        for _ in range(iters):
+            sp, mg, ug = 0.0, [0.0] * k, [0.0] * k
+            for g, c in patterns:
+                wm, wu = p, 1.0 - p
+                for j in range(k):
+                    wm *= m[j] if g[j] else 1.0 - m[j]
+                    wu *= u[j] if g[j] else 1.0 - u[j]
+                post = wm / (wm + wu)
+                sp += c * post
+                for j in range(k):
+                    if g[j]:
+                        mg[j] += c * post
+                        ug[j] += c * (1.0 - post)
+            p = sp / total
+            m = [mg[j] / sp for j in range(k)]
+            u = [ug[j] / (total - sp) for j in range(k)]
+        return m, u, p
+
+    def test_recovers_planted_mixture(self, spark):
+        from outrank_spark.operators.dedup import fellegi_sunter_em
+
+        # 200 "match" pairs agree on both fields w.p. ~0.9; 1800
+        # "non-match" pairs agree w.p. ~0.1 — deterministic counts.
+        rows = ([(True, True)] * 170 + [(True, False)] * 20
+                + [(False, True)] * 10
+                + [(False, False)] * 1500 + [(True, False)] * 150
+                + [(False, True)] * 150)
+        df = spark.createDataFrame(rows, "a boolean, b boolean")
+        got = {r["field"]: r for r in
+               fellegi_sunter_em(df, ["a", "b"], iters=8).collect()}
+        assert got["a"]["m"] > 0.6 > got["a"]["u"]
+        assert got["b"]["m"] > 0.6 > got["b"]["u"]
+        assert got["a"]["w_agree"] > 0 > got["a"]["w_disagree"]
+        assert 0.0 < got["__prior__"]["m"] < 0.5
+
+    def test_matches_pure_python_em(self, spark):
+        import math
+
+        from outrank_spark.operators.dedup import fellegi_sunter_em
+
+        rows = ([(1, 1, 0)] * 40 + [(1, 0, 1)] * 25 + [(0, 0, 0)] * 300
+                + [(0, 1, 1)] * 7 + [(1, 1, 1)] * 11)
+        df = spark.createDataFrame(rows, "x int, y int, z int")
+        got = {r["field"]: r for r in
+               fellegi_sunter_em(df, ["x", "y", "z"], iters=3,
+                                 init_m=0.875, init_u=0.125,
+                                 init_p=0.25).collect()}
+        pats: dict[tuple, int] = {}
+        for g in rows:
+            pats[g] = pats.get(g, 0) + 1
+        m, u, p = self._reference_em(
+            sorted(pats.items()), 3, 3, 0.875, 0.125, 0.25)
+        for j, f in enumerate(("x", "y", "z")):
+            assert got[f]["m"] == pytest.approx(m[j], abs=5e-7)
+            assert got[f]["u"] == pytest.approx(u[j], abs=5e-7)
+            assert got[f]["w_agree"] == pytest.approx(
+                math.log2(m[j] / u[j]), abs=1e-5)
+        assert got["__prior__"]["m"] == pytest.approx(p, abs=5e-7)
+
+    def test_null_agreement_counts_as_disagreement(self, spark):
+        from outrank_spark.operators.dedup import fellegi_sunter_em
+
+        a = spark.createDataFrame(
+            [(True,), (None,), (False,)], "g boolean")
+        b = spark.createDataFrame(
+            [(True,), (False,), (False,)], "g boolean")
+        ra = fellegi_sunter_em(a, ["g"], iters=1).collect()
+        rb = fellegi_sunter_em(b, ["g"], iters=1).collect()
+        assert sorted(map(tuple, ra)) == sorted(map(tuple, rb))
+
+    def test_errors(self, spark):
+        from outrank_spark.operators.dedup import fellegi_sunter_em
+
+        df = spark.createDataFrame([(True,)], "g boolean")
+        with pytest.raises(ValueError, match="non-empty"):
+            fellegi_sunter_em(df, [])
+        with pytest.raises(ValueError, match="unknown column"):
+            fellegi_sunter_em(df, ["nope"])
+        with pytest.raises(ValueError, match="iters"):
+            fellegi_sunter_em(df, ["g"], iters=0)
+        empty = spark.createDataFrame([], "g boolean")
+        with pytest.raises(ValueError, match="empty"):
+            fellegi_sunter_em(empty, ["g"])
+
+
+def test_fellegi_sunter_em_degenerate_patterns_no_zerodiv(spark):
+    """A perfectly-separating agreement column drives m -> 1 / u -> 0;
+    without per-iteration clamping the next E-step divides by
+    wm + wu == 0 (ADVICE r4).  Many iterations over degenerate
+    patterns must converge, not raise."""
+    from outrank_spark.operators.dedup import fellegi_sunter_em
+    rows = ([(1, 1, 1)] * 50        # perfect matches
+            + [(0, 0, 0)] * 500)    # perfect non-matches
+    pairs = spark.createDataFrame(rows, "a int, b int, c int")
+    out = fellegi_sunter_em(pairs, ["a", "b", "c"], iters=50)
+    pdf = out.toPandas().set_index("field")
+    for f in ("a", "b", "c"):
+        m, u = pdf.loc[f, "m"], pdf.loc[f, "u"]
+        assert 0.0 < m <= 1.0 and 0.0 <= u < 1.0
+        assert m > 0.99 and u < 0.01      # converged to the planted truth
+        assert np.isfinite(pdf.loc[f, "w_agree"])
+        assert np.isfinite(pdf.loc[f, "w_disagree"])
+
+
+def test_minhash_delta_leaves_no_cachemanager_entry(spark):
+    """minhash_delta_candidates runs once per crawl batch — it must
+    not leave a CacheManager entry behind (ADVICE r4 storage leak)."""
+    from outrank_spark.operators.dedup import (minhash_delta_candidates,
+                                               minhash_signatures)
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over dog number {i % 5}")
+         for i in range(40)], "doc_id long, text string")
+    idx = minhash_signatures(docs.where("doc_id < 30"),
+                             "text", "doc_id", 3, 64)
+    spark.catalog.clearCache()
+    out = minhash_delta_candidates(docs.where("doc_id >= 30"), idx,
+                                   k=64, bands=16)
+    out.collect()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), "operator leaked a CacheManager entry"

@@ -1,10 +1,15 @@
-"""extract_links / link_host_outdegree lexical extraction."""
+"""extract_links / link_host_outdegree lexical extraction and the zlib
+compression-ratio quality signal."""
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from outrank_spark.operators.derived import (extract_links,
                                              link_host_outdegree)
+from outrank_spark.operators.text import compression_ratio
 
 
 @pytest.fixture(scope="module")
@@ -56,3 +61,36 @@ def test_link_host_outdegree(html_df):
     # doc1's a.example.com
     assert deg == {"a.example.com": 2, "b.example.org": 1,
                    "img.example.net": 1}
+
+
+def test_compression_ratio_ordering_and_edges(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, "spam " * 400),                                   # repeated
+            (2, " ".join(f"word{i} and some prose here {i%7}"
+                         for i in range(120))),                   # prose
+            (3, "".join(chr(c) for c in np.random.default_rng(0)
+                        .integers(33, 123, 2000))),               # junk
+            (4, None),
+            (5, ""),
+        ],
+        "doc_id long, text string",
+    )
+    out = {r["doc_id"]: r["cr"] for r in compression_ratio(
+        docs, text_col="text", out="cr").collect()}
+    assert out[4] is None and out[5] is None
+    assert out[1] < out[2] < out[3]
+    assert out[1] < 0.1                        # heavy repetition
+    assert out[3] > 0.5                        # high entropy
+
+    # deterministic across partitionings (it's a sampling weight)
+    re_out = {r["doc_id"]: r["cr"] for r in compression_ratio(
+        docs.repartition(7), text_col="text", out="cr").collect()}
+    assert re_out == out
+
+
+def test_compression_ratio_output_collision(spark):
+    docs = spark.createDataFrame([(1, "x", 0.5)],
+                                 "doc_id long, text string, cr double")
+    with pytest.raises(ValueError):
+        compression_ratio(docs, text_col="text", out="cr")

@@ -1,12 +1,69 @@
-"""CountSketch through the generic build_sketches path vs a
-single-pass kernel (bitwise)."""
+"""Spark builders for the matrix/moment sketches: frequent_directions
+(tree + driver merge) vs exact numpy SVD, and CountSketch through the
+generic build_sketches path vs a single-pass kernel (bitwise)."""
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
+from outrank_spark.operators.matrix_sketch import (embedding_spectrum,
+                                                   frequent_directions)
 from outrank_spark.operators.sketch_build import SketchPlan, build_sketches
 from outrank_spark.sketches import CountSketch
+
+
+@pytest.fixture(scope="module")
+def emb_df(spark):
+    rng = np.random.default_rng(42)
+    A = rng.standard_normal((3000, 24)) @ np.diag(np.linspace(4.0, 0.2, 24))
+    pdf = pd.DataFrame({
+        "vec_id": np.arange(3000),
+        "embedding": [row.astype(np.float32) for row in A],
+    })
+    return spark.createDataFrame(pdf).repartition(13), A
+
+
+@pytest.mark.parametrize("merge", ["tree", "driver"])
+def test_fd_spark_build_matches_bound(emb_df, merge):
+    """Distributed FD over 13 partitions: exact Frobenius/row
+    bookkeeping, PSD gap, spectral error inside the published bound
+    computed against the full matrix."""
+    df, A = emb_df
+    A64 = A.astype(np.float32).astype(np.float64)  # what Spark shipped
+    sk = frequent_directions(df, vec_col="embedding", ell=16, merge=merge)
+    assert sk.n_rows == 3000
+    assert abs(sk.squared_frobenius - (A64 * A64).sum()) < 1e-3
+    gap = A64.T @ A64 - sk.covariance_estimate()
+    w = np.linalg.eigvalsh(gap)
+    # PSD up to float noise at the problem's scale
+    assert w.min() >= -1e-9 * sk.squared_frobenius
+    assert w.max() <= sk.error_bound() + 1e-6
+
+
+def test_fd_null_vectors_skipped(spark):
+    pdf = pd.DataFrame({
+        "embedding": [np.ones(4, dtype=np.float32), None,
+                      2 * np.ones(4, dtype=np.float32), None],
+    })
+    sk = frequent_directions(spark.createDataFrame(pdf),
+                             vec_col="embedding", ell=4, merge="driver")
+    assert sk.n_rows == 2
+    assert abs(sk.squared_frobenius - (4 * 1.0 + 4 * 4.0)) < 1e-9
+
+
+def test_embedding_spectrum_shape_and_monotone_energy(emb_df):
+    df, A = emb_df
+    out = embedding_spectrum(df, vec_col="embedding", ell=24,
+                             top_k=5).collect()
+    assert len(out) == 5
+    fracs = [r["energy_captured_frac"] for r in out]
+    assert fracs == sorted(fracs)            # cumulative
+    assert 0 < fracs[-1] <= 1.0
+    true_s = np.linalg.svd(A.astype(np.float64), compute_uv=False)
+    for r in out:
+        # certified lower bound on the true singular value
+        assert r["sigma_lower"] ** 2 <= true_s[r["rank"] - 1] ** 2 + 1e-3
 
 
 def test_countsketch_via_build_sketches_bitwise(spark):

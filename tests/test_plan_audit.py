@@ -92,6 +92,37 @@ class TestShuffleShape:
         types = {f.dataType.simpleString() for f in batched.schema.fields}
         assert types == {"bigint"}
 
+    def test_lsh_verify_is_candidate_bounded(self, spark):
+        """With candidate_pairs set, the exact-Jaccard verify must
+        semi-join shingles to the candidate ids BEFORE any join — no
+        unbounded shingle self-join may appear in the plan."""
+        import pandas as pd
+
+        from outrank_spark.operators.dedup import ngram_jaccard_pairs
+
+        docs = spark.createDataFrame(pd.DataFrame({
+            "doc_id": list(range(8)),
+            "text": [f"w{i} w{i+1} w{i+2} w{i+3} w{i+4}" for i in range(8)],
+        }))
+        cand = spark.createDataFrame(
+            pd.DataFrame({"id_a": [0, 1], "id_b": [1, 2]}),
+        )
+        plan = plan_of(ngram_jaccard_pairs(docs, candidate_pairs=cand))
+        assert "LeftSemi" in plan  # shingles pruned to candidate ids
+
+    def test_simhash_is_pure_jvm(self, spark):
+        import pandas as pd
+
+        from outrank_spark.operators.dedup import simhash_signatures
+
+        docs = spark.createDataFrame(
+            pd.DataFrame({"doc_id": [1, 2], "text": ["a b c", "d e f"]}),
+        )
+        plan = plan_of(simhash_signatures(docs))
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEvalPython" not in plan
+        assert "FlatMapsInPandas" not in plan and "MapInPandas" not in plan
+
     def test_interaction_analyzer_time_bounded(self, spark):
         """Order-3 interactions over 15 cols = 455 derived columns;
         built as ONE select, the plan must analyze in seconds (chained
@@ -115,6 +146,22 @@ class TestShuffleShape:
         # chained withColumn took minutes here; generous bound for a
         # busy shared JVM still catches the superlinear regression
         assert time.time() - t0 < 60.0
+
+    def test_langid_fit_prefilters_before_window(self, spark):
+        """The per-language sample must hash-filter BEFORE the window
+        sort — never shuffle+sort the full corpus to keep a few
+        hundred docs."""
+        from outrank_spark.operators.text import _langid_sample_plan
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        plan = plan_of(_langid_sample_plan(docs, "text", "lang", 10, 4096))
+        sort_pos = plan.find("Sort ")
+        filt_pos = plan.rfind("Filter ")
+        assert sort_pos != -1 and filt_pos != -1
+        # executedPlan prints parents above children: the prefilter
+        # Filter must sit BELOW (after) the window Sort in the tree
+        assert filt_pos > sort_pos
+        assert "xxhash64" in plan[filt_pos:filt_pos + 400]
 
     def test_blob_rows_are_tiny(self, spark):
         """Per-partition sketch blobs stay small even for
@@ -171,6 +218,29 @@ class TestPartitionedTables:
         assert a == b
 
 
+class TestPipelineQueryPlans:
+    def test_corpus_cleaning_is_pure_jvm_semi_join(self, spark):
+        """q40: dedup keeper must reach the plan as a semi join (or
+        aggregate+join equivalent) with zero Python operators."""
+        from outrank_spark.plans.queries import q40_corpus_cleaning_pipeline
+
+        plan = plan_of(q40_corpus_cleaning_pipeline(spark, SF))
+        assert "LeftSemi" in plan
+        for marker in ("BatchEvalPython", "ArrowEvalPython",
+                       "MapInPandas", "FlatMapGroupsInPandas"):
+            assert marker not in plan
+
+    def test_duplicate_cluster_edges_share_one_scan_per_key(self, spark):
+        """q39's two blocking-key edge sets scan documents a bounded
+        number of times (2 keys x (keyed + mins) = 4 scans max) and
+        nothing quadratic appears (no CartesianProduct/BNL-inner)."""
+        from outrank_spark.plans.queries import q39_duplicate_clusters
+
+        plan = plan_of(q39_duplicate_clusters(spark, SF))
+        assert plan.count("Scan parquet") <= 6
+        assert "CartesianProduct" not in plan
+
+
 class TestDistributedProbesAndLaziness:
     def test_bloom_probe_is_distributed(self, spark):
         """probe_bloom evaluates membership inside mapInPandas — the
@@ -198,6 +268,68 @@ class TestDistributedProbesAndLaziness:
         src = inspect.getsource(queries.q42_bloom_membership)
         assert ".collect()" not in src
 
+    def test_tfidf_is_lazy_and_caches_tf(self, spark):
+        """Constructing tfidf_top_terms must trigger NO Spark job; the
+        tf relation is persisted so the text scan materializes once
+        for both consumers (doc-frequency branch + final join); N
+        comes from a pruned id-only aggregate."""
+        from outrank_spark.operators.text import tfidf_top_terms
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+        # laziness: build over a relation that explodes on any action
+        def boom(batches):
+            raise RuntimeError("action ran")
+            yield  # pragma: no cover
+
+        poisoned = docs.mapInPandas(boom, schema=docs.schema)
+        tfidf_top_terms(poisoned, cache_tf=False)  # must not raise
+
+        out = tfidf_top_terms(docs, k=2)
+        assert out.count() > 0
+        plan = plan_of(out)
+        # both tf consumers read the cache, not the parquet text scan
+        assert "InMemoryTableScan" in plan
+        spark.catalog.clearCache()
+
+
+class TestSamplingAndLmPlans:
+    def test_weighted_sample_is_scan_plus_broadcast(self, spark):
+        """weighted_sample must not shuffle the data relation: one
+        1-row aggregate, broadcast-joined, then a filter at the scan."""
+        from outrank_spark.operators.sampling import weighted_sample
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet") \
+            .withColumn("w", F.length("text").cast("double"))
+        plan = plan_of(weighted_sample(docs, "w", 0.5))
+        assert "BroadcastNestedLoopJoin" in plan or \
+            "BroadcastExchange" in plan
+        # the big side never exchanges by a key (only the broadcast)
+        data_side = plan.split("Broadcast")[0]
+        assert "Exchange hashpartitioning" not in data_side
+
+    def test_temperature_rebalance_broadcasts_fractions(self, spark):
+        from outrank_spark.operators.sampling import (
+            temperature_rebalance,
+        )
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        out = temperature_rebalance(docs, "lang", tau=0.5)
+        plan = plan_of(out)
+        assert "BroadcastHashJoin" in plan
+        assert out.count() > 0
+
+    def test_bigram_lm_partial_aggregates(self, spark):
+        """Both count aggregates must partial-aggregate (map-side
+        combine is what absorbs Zipf head tokens)."""
+        from outrank_spark.operators.text import ngram_logprob_scores
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        plan = plan_of(ngram_logprob_scores(docs))
+        # partial_count before the exchange for both groupBys
+        assert plan.count("partial_count") >= 2
+
+
 class TestRound4LateAdditions:
     def test_funnel_shuffle_ships_packed_longs(self, spark):
         """funnel_counts' only shuffle must carry events as one packed
@@ -213,6 +345,119 @@ class TestRound4LateAdditions:
         # struct-typed event field survives anywhere in the plan
         assert "shiftleft" in plan
         assert "struct(t" not in plan
+
+    def test_dsir_hashed_mode_broadcasts_weight_table(self, spark):
+        """dsir_logratio with bounded buckets must join the per-feature
+        log-ratio table back via broadcast — the corpus-side explode is
+        never re-shuffled by feature for the join."""
+        from outrank_spark.operators.sampling import dsir_logratio
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        plan = plan_of(dsir_logratio(docs, F.col("lang") == "en",
+                                     num_buckets=1 << 12))
+        assert "BroadcastHashJoin" in plan
+
+    def test_editdist_join_has_no_cartesian(self, spark):
+        """edit_distance_join candidates come from the gram equi-join;
+        nothing quadratic (CartesianProduct / inner BNL) may appear."""
+        from outrank_spark.operators.similarity import edit_distance_join
+
+        cust = spark.read.parquet(f"{SF}/customer.parquet")
+        plan = plan_of(edit_distance_join(cust, "c_name",
+                                          id_col="c_custkey"))
+        assert "CartesianProduct" not in plan
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
+            or "BroadcastHashJoin" in plan
+        # the ED-Join prefix filter must gate BOTH gram-join inputs:
+        # each side joins on at most q*d+1 = 3 rarest gram keys per
+        # string (this bound is what keeps shared-prefix key spaces
+        # like Customer#0000… off the quadratic cliff)
+        assert plan.count("_rk#") >= 2 or plan.count("_rk <= 3") >= 2 \
+            or plan.count("(_rk") >= 2
+
+    def test_duplicated_spans_no_cartesian_single_split(self, spark):
+        """q85's gram stage must carry exactly one split() per doc (the
+        two-projection fix — an inlined split inside the transform
+        lambda re-splits per gram position) and no quadratic join."""
+        from outrank_spark.operators.dedup import duplicated_spans_exact
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        plan = plan_of(duplicated_spans_exact(docs, min_length=8))
+        assert "CartesianProduct" not in plan
+        gram_stage = [ln for ln in plan.splitlines()
+                      if "transform" in ln and "xxhash64" in ln]
+        assert gram_stage, "gram construction stage missing from plan"
+        assert all(ln.count("split(") <= 1 for ln in gram_stage)
+
+    def test_containment_join_single_pair_pipeline(self, spark):
+        """containment_join's corpus shingle explode must run ONCE:
+        the collect_list pair streaming replaced the two-sided
+        self-join (no exchange reuse fired there), and both output
+        directions must come from one array explode over the
+        aggregated pair table, not a union that duplicates the whole
+        pair-generation lineage (regression: 3 parquet scans)."""
+        from outrank_spark.operators.dedup import containment_join
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        plan = plan_of(containment_join(docs, "text", "doc_id", n=3,
+                                        threshold=0.5))
+        assert plan.count("Scan parquet") <= 2  # lists path + sizes path
+        assert "Union" not in plan
+        assert "CartesianProduct" not in plan
+
+
+class TestRound4ClosingAdditions:
+    def test_pq_encode_is_zero_shuffle(self, spark):
+        """pq_encode is one mapInPandas over the scan — no Exchange may
+        appear (the 32x byte reduction must not cost a shuffle)."""
+        from outrank_spark.operators.pq import pq_encode, pq_fit
+
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet").selectExpr(
+            "vec_id", "cast(embedding as array<double>) embedding")
+        cb = pq_fit(emb, m=8, nbits=4, sample_size=256)
+        plan = plan_of(pq_encode(emb, cb))
+        assert "Exchange" not in plan
+        assert "CartesianProduct" not in plan
+
+    def test_pq_topk_broadcasts_queries_no_cartesian(self, spark):
+        """pq_topk's rerank joins the tiny query table broadcast; the
+        candidate pipeline must contain no quadratic operator, and the
+        only Python stages are the two mapInPandas passes (encode +
+        ADC scan) — the rerank itself stays JVM-side."""
+        from outrank_spark.operators.pq import pq_topk
+
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet").selectExpr(
+            "vec_id", "cast(embedding as array<double>) embedding")
+        queries = emb.limit(2).selectExpr(
+            "vec_id as query_id", "embedding as qv")
+        plan = plan_of(pq_topk(emb, queries, k=3, m=8, nbits=4,
+                               rerank_factor=4))
+        assert "CartesianProduct" not in plan
+        assert "BroadcastHashJoin" in plan
+        assert plan.count("MapInPandas") == 2
+        assert "BatchEvalPython" not in plan  # no row-at-a-time UDF
+        # the exact rerank must broadcast the BOUNDED side (candidates,
+        # <= queries x pool rows by row_number) — never sort-merge: an
+        # SMJ here means the raw-vector corpus is being shuffled, which
+        # is exactly what PQ exists to avoid
+        assert "SortMergeJoin" not in plan
+
+    def test_bloom_prefilter_is_single_stage_key_only(self, spark):
+        """The scalar-pandas-UDF Bloom prefilter must plan as a FILTER
+        (no Exchange — rows never move), with the key as the only
+        Arrow traffic (ArrowEvalPython, not a whole-row MapInPandas:
+        the r5 rewrite this pins got ~4x on the 240M-row probe)."""
+        from outrank_spark.operators.runtime_filter import (
+            bloom_prefilter, build_key_bloom)
+
+        li = spark.read.parquet(f"{SF}/lineitem.parquet")
+        build = li.select(F.col("l_suppkey").alias("k")).limit(100)
+        blob = build_key_bloom(build, "k", capacity=200)
+        plan = plan_of(bloom_prefilter(li, "l_suppkey", blob))
+        assert "Exchange" not in plan
+        assert "ArrowEvalPython" in plan
+        assert "MapInPandas" not in plan
+
 
 class TestScoringBatchSpread:
     def test_sparse_batches_spread_one_exchange(self, spark):
@@ -293,3 +538,61 @@ class TestSessionThreeOps:
         # both the per-key count and the histogram groupBy hash-
         # aggregate below (later in the string = deeper in the tree)
         assert plan.count("HashAggregate", first_window) >= 4
+
+    def test_bh_fdr_windows_over_tests_table_only(self, spark):
+        """bh_fdr's global windows are the documented metric-count-
+        sized exception; the m denominator must arrive as a broadcast
+        1-row aggregate, not a shuffle."""
+        from pyspark.sql import functions as F
+
+        from outrank_spark.operators.evaluation import bh_fdr
+
+        tests = spark.range(200).select(
+            F.col("id").cast("string").alias("t"),
+            (F.pmod(F.xxhash64("id"), 1000) / 1000.0).alias("p"),
+        )
+        plan = plan_of(bh_fdr(tests, "p", "t"))
+        assert "BroadcastNestedLoopJoin" in plan or \
+            "BroadcastExchange" in plan
+        assert "SortMergeJoin" not in plan
+
+    def test_retrieval_metrics_windows_partition_by_query(self, spark):
+        """retrieval_metrics must never fall into the single-
+        partition-window trap: every Window node carries the query
+        column in its partition spec."""
+        from outrank_spark.operators.evaluation import retrieval_metrics
+
+        df = spark.createDataFrame(
+            [(q, d, float(d), d % 2) for q in range(4)
+             for d in range(20)],
+            "q int, d int, s double, rel int")
+        plan = plan_of(retrieval_metrics(df, "q", "d", "s", "rel"))
+        for chunk in plan.split("Window")[1:]:
+            head = chunk[:200]
+            if "partition" in head.lower() or "q#" in head:
+                assert "q#" in head  # partitioned by the query col
+
+    def test_fellegi_sunter_ships_only_pattern_table(self, spark):
+        """The EM's distributed stage is ONE groupBy to <=2^k rows:
+        the plan of the pattern aggregation has no join, no window,
+        no Python."""
+        from pyspark.sql import functions as F
+
+        from outrank_spark.operators.dedup import fellegi_sunter_em
+
+        pairs = spark.range(5000).select(
+            (F.col("id") % 2 == 0).alias("a"),
+            (F.col("id") % 3 == 0).alias("b"),
+        )
+        # the operator collects internally; audit the same shape it
+        # aggregates (select + groupBy + count)
+        shaped = pairs.select(
+            F.coalesce(F.col("a").cast("int"), F.lit(0)).alias("g0"),
+            F.coalesce(F.col("b").cast("int"), F.lit(0)).alias("g1"),
+        ).groupBy("g0", "g1").agg(F.count(F.lit(1)).alias("c"))
+        plan = plan_of(shaped)
+        assert "Join" not in plan and "Window" not in plan
+        assert "HashAggregate" in plan
+        # and the real operator returns the fitted table
+        out = fellegi_sunter_em(pairs, ["a", "b"], iters=1)
+        assert out.count() == 3  # 2 fields + prior row

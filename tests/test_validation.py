@@ -284,6 +284,78 @@ class TestKeySkewAudit:
             key_skew_audit(df, "k", top_k=0)
 
 
+class TestDataQualityJob:
+    def test_full_report_in_process(self, spark, tmp_path):
+        import json
+
+        from outrank_spark.jobs.data_quality import (
+            build_parser,
+            run_quality,
+        )
+
+        rules = [{"col": "doc_id", "rule": "unique"},
+                 {"col": "n_chars", "rule": "max", "value": 300}]
+        rules_f = tmp_path / "rules.json"
+        rules_f.write_text(json.dumps(rules))
+        args = build_parser().parse_args([
+            "--input", "/root/testdata/sf0.001/documents.parquet",
+            "--rules", str(rules_f),
+            "--benford", "n_chars",
+            "--fd", "doc_id->lang", "lang,source->n_chars",
+            "--skew_keys", "lang,source",
+        ])
+        report, violated = run_quality(spark, args)
+        assert {r["column"] for r in report["profile"]} == {
+            "doc_id", "text", "lang", "source", "n_chars"}
+        cons = {r["rule"]: r for r in report["constraints"]}
+        assert cons["unique"]["passed"] is True
+        assert cons["max"]["passed"] is False       # planted breach
+        assert violated is True
+        assert len(report["benford"]) == 9
+        fd = {r["rhs"]: r for r in report["fd"]}
+        assert fd["lang"]["holds"] is True          # key FD
+        assert fd["n_chars"]["holds"] is False
+        assert {r["key"] for r in report["skew"]} == {"lang", "source"}
+        # the whole report is JSON-serializable metadata
+        json.dumps(report, default=str)
+
+    def test_fd_spec_parsing_errors(self):
+        import pytest as _pytest
+
+        from outrank_spark.jobs.data_quality import _parse_fd
+
+        assert _parse_fd("a->b") == ("a", "b")
+        assert _parse_fd("x, y -> z") == (["x", "y"], "z")
+        with _pytest.raises(ValueError, match="FD spec"):
+            _parse_fd("nope")
+        with _pytest.raises(ValueError, match="bad FD spec"):
+            _parse_fd("->b")
+
+    def test_wrapper_subprocess_exit_codes(self, tmp_path):
+        import json
+        import subprocess
+        import sys as _sys
+
+        rules_f = tmp_path / "rules.json"
+        rules_f.write_text(json.dumps(
+            [{"col": "n_chars", "rule": "max", "value": 300}]))
+        out_f = tmp_path / "report.json"
+        r = subprocess.run(
+            [_sys.executable, "jobs/data_quality_job.py",
+             "--input", "/root/testdata/sf0.001/documents.parquet",
+             "--rules", str(rules_f), "--fail_on_violation",
+             "--report", str(out_f),
+             "--spark_master", "local[2]",
+             "--shuffle_partitions", "4"],
+            capture_output=True, text=True, cwd="/root/repo",
+            timeout=300,
+        )
+        assert r.returncode == 1, r.stderr[-2000:]   # gate fired
+        doc = json.loads(out_f.read_text())
+        assert doc["passed"] is False
+        assert doc["profile"] and doc["constraints"]
+
+
 class TestProfileDiff:
     def test_flags_and_deltas_hand_computed(self, spark):
         from outrank_spark.operators.validation import profile_diff
@@ -366,3 +438,10 @@ class TestHostileColumnNames:
         n1 = {r["digit"]: r["n_obs"] for r in out
               if r["column"] == "a`b"}
         assert n1[1] == 3          # 11, 12, 13 all lead with 1
+
+    def test_correlation_matrix(self, hostile):
+        from outrank_spark.operators.evaluation import correlation_matrix
+        out = correlation_matrix(hostile, ["it's", "a`b"]).collect()
+        assert len(out) == 1
+        assert abs(out[0]["corr"] - 1.0) < 1e-9
+        assert out[0]["n"] == 3

@@ -241,6 +241,62 @@ class TestSparkReaders:
         assert len(rows) == 1
         assert rows[0]["text"] == "ok �� broken"
 
+    def test_warc_feeds_training_pipeline_end_to_end(self, spark,
+                                                     tmp_path):
+        """Integration: raw .warc.gz archives -> pages_from_warc ->
+        prepare_training_corpus.  The connector's output schema must
+        satisfy the capstone pipeline directly; a planted exact
+        duplicate must lose exactly one member."""
+        import numpy as np
+
+        from outrank_spark.plans.corpus_pipeline import (
+            CorpusPipelineConfig,
+            prepare_training_corpus,
+        )
+
+        rng = np.random.default_rng(3)
+        vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+                 "eta", "theta", "iota", "kappa", "lambda", "mu", "nu",
+                 "xi", "omicron", "pi", "rho", "sigma", "tau",
+                 "upsilon"]
+        recs = []
+        texts = {}
+        for i in range(24):
+            words = " ".join(rng.choice(vocab, size=30))
+            if i == 23:          # planted exact duplicate of doc 0
+                words = texts["http://w.example/p0"]
+            url = f"http://w.example/p{i}"
+            texts[url] = words
+            body = f"<html><body>{words}</body></html>".encode()
+            recs.append({"headers": {
+                "WARC-Type": "response",
+                "WARC-Target-URI": url,
+                "WARC-Date": "2024-03-01T00:00:00Z"},
+                "payload": _http(body)})
+        (tmp_path / "crawl.warc.gz").write_bytes(
+            write_warc_bytes(recs, member_gzip=True))
+
+        pages = pages_from_warc(spark, str(tmp_path))
+        # integral doc ids: connected_components' documented contract
+        # (a production run hashes the url, e.g. xxhash64)
+        docs = pages.selectExpr(
+            "cast(regexp_extract(url, '([0-9]+)$', 1) as long) "
+            "as doc_id", "text")
+        out = prepare_training_corpus(docs, cfg=CorpusPipelineConfig(
+            group_col=None, dedup_method="minhash",
+            dedup_threshold=0.8, drop_quality_fraction=0.0,
+            seq_len=64, pack_buckets=4,
+        ))
+        stats = out["stats"].first().asDict()
+        corpus = {r["doc_id"]: r for r in out["corpus"].collect()}
+        assert len(corpus) == 23      # one duplicate member dropped
+        assert 0 in corpus and 23 not in corpus  # canonical = min id
+        assert out["manifest"].count() == 23
+        # attrition stats monotone non-increasing across stages
+        stage_counts = [v for k, v in stats.items()
+                        if k.startswith("n_")]
+        assert stage_counts == sorted(stage_counts, reverse=True)
+
     def test_ingest_job_end_to_end(self, spark, tmp_path):
         """ingest(): archives -> partitioned pages parquet with
         latest-capture url dedup; round-trips through
