@@ -2,48 +2,51 @@
 
 Spark lifecycle equivalent of the reference's ``--task ranking`` +
 ``--task ranking_summary`` (task_ranking.py:37-303, task_summary.py;
-SURVEY.md §3.1):
+SURVEY.md §3.1).  ``run_ranking`` folds its input as one batch of the
+one ranking fold, ``StreamingRankingAccumulator.process_batch``
+(``streaming/ranking_stream.py``), which the stream and the
+checkpointed CLI run use too:
 
   1. deterministic subsample of the input (hash-mod, order-free);
   2. ONE vectorized scan building all per-column sketches
      (parity-HLL cardinality, bounded counter, coverage, encoded
      bytes) via the mergeable sketch operator, its partials folded on
-     the driver (a ``treeAggregate`` past 5 partitions);
-  3. minibatch pair scoring: batch assignment -> ``applyInPandas``
-     scoring of the planned pair list -> symmetrized triplets,
-     collected to the driver;
-  4. ``finalize`` on the driver: pandas median of each pair's
-     minibatch scores (core_ranking.py:572-580), ``name-(card; cov)``
-     feature renaming (task_ranking.py:247-268), singles summary with
-     min-max normalization for MI heuristics (task_summary.py:33-48).
-     Interaction re-aggregation and 3MR post-processing follow in the
-     CLI.
+     the driver (a ``treeAggregate`` past 5 partitions), concurrent
+     with
+  3. minibatch pair scoring: a row count sizes the reference's
+     minibatches of ``minibatch_size`` rows, then batch assignment ->
+     ``applyInPandas`` scoring of the pairs ``plan_pairs`` plans ->
+     raw triplets, collected to the driver;
+  4. ``finalize`` on the driver: symmetrised pandas median of each
+     pair's minibatch scores (core_ranking.py:572-580),
+     ``name-(card; cov)`` feature renaming (task_ranking.py:247-268),
+     singles summary with min-max normalization for MI heuristics
+     (task_summary.py:33-48).  Interaction re-aggregation and 3MR
+     post-processing follow in the CLI.
 
-Stages 2 and 3 are the only passes over the data.  Stage 3 shuffles
-the subsampled scoring columns; stage 2 merges one small blob per
-partition and (column, kind), on the executors once there are more
-than ~5 partitions.  The stream and the checkpointed CLI run
-(``streaming/ranking_stream.py``) plan their pairs with ``plan_pairs``
-and finalise with ``finalize`` too.
+Stages 2 and 3 are the only passes over the data besides the count.
+Stage 3 shuffles the subsampled scoring columns; stage 2 merges one
+small blob per partition and (column, kind), on the executors once
+there are more than ~5 partitions.
 """
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-
+from pyspark.sql import DataFrame
 
 from outrank_spark.operators.pair_scoring import (
-    deterministic_subsample,
-    score_batches,
-    symmetrize,
+    deterministic_subsample,  # noqa: F401 -- perfbench's tracer wraps it here
+    score_batches,  # noqa: F401 -- perfbench's tracer wraps it here
+    symmetrize,  # noqa: F401 -- perfbench's tracer wraps it here
 )
-from outrank_spark.operators.sketch_build import SketchPlan, build_sketches
+from outrank_spark.operators.sketch_build import (
+    SketchPlan,
+    build_sketches,  # noqa: F401 -- perfbench's tracer wraps it here
+)
 from outrank_spark.plans.combinations import CombinationPlanner
-from outrank_spark.hashing import sql_ident
 
 __all__ = ["RankingConfig", "RankingResult", "run_ranking", "plan_pairs",
            "finalize", "feature_singles_summary", "aggregate_interactions"]
@@ -57,6 +60,11 @@ class RankingConfig:
     heuristic: str = "MI-numba-randomized"
     target_ranking_only: bool = True
     combination_number_upper_bound: int = 2 ** 15
+    # a batch of n (subsampled) rows scores max(1, ceil(n /
+    # minibatch_size)) minibatches, the reference's rule
+    # (core_ranking.py:625-681); each pair's score is the median over
+    # all minibatches of all batches.  ``MI-table-exact`` scores each
+    # batch whole instead.
     minibatch_size: int = 2 ** 14
     subsampling: int = 1
     mi_stratified_sampling_ratio: float = 1.0
@@ -82,11 +90,6 @@ class RankingConfig:
     # near-unique and blow up the per-partition counter partials that
     # are collected to the driver (tree-merged past 5 partitions)
     counter_exclude_derived: bool = True
-    # scoring fan-out floor: ensure at least this many minibatch groups
-    # per core so the applyInPandas stage saturates the cluster (each
-    # batch still >= min_batch_rows, the reference's remainder floor)
-    batches_per_core: int = 2
-    min_batch_rows: int = 2 ** 10
     # optional reference-model JSON: candidates are scored conditioned
     # on the model's features, and pairs touching model features are
     # dropped (core_ranking.py:205-215; importance_estimator.py:55-71)
@@ -138,73 +141,16 @@ def sketch_plan_for(cfg: RankingConfig, columns: list[str]) -> SketchPlan:
                       kind_columns=kind_columns)
 
 
-def run_ranking(spark, df: DataFrame, cfg: RankingConfig,
-                planner: CombinationPlanner | None = None) -> RankingResult:
-    columns = cfg.feature_columns or list(df.columns)
-    planner = planner or CombinationPlanner(seed=cfg.seed)
+def run_ranking(spark, df: DataFrame, cfg: RankingConfig) -> RankingResult:
+    """Rank ``df`` as one batch of the one ranking fold
+    (``StreamingRankingAccumulator.process_batch``, in memory)."""
+    from outrank_spark.streaming.ranking_stream import (
+        StreamingRankingAccumulator,
+    )
 
-    # two lazy passes over the (possibly upstream-cached) input —
-    # a cache write of wide string columns costs more than the scans,
-    # and the sketch scan and the scoring scan are INDEPENDENT jobs
-    # (the sketches only feed the post-hoc renaming and reports),
-    # so they run concurrently on one scheduler (guide §2.6 overlap:
-    # the sketch job's tail back-fills executor slots while the
-    # scoring stages run, and vice versa) — measured 4.5 s -> ~3.3 s
-    # on the 300k-page bench job (OPTIMIZATION_r06.md)
-    sub = deterministic_subsample(df.selectExpr(*map(sql_ident, columns)),
-                                  cfg.subsampling, key_cols=columns)
-
-    # --- sketch scan (background): cardinality, counts, coverage, bytes
-    plan = sketch_plan_for(cfg, columns)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    sketch_future = pool.submit(
-        inheritable_thread_target(spark)(lambda: build_sketches(sub, plan)))
-
-    try:
-        # one cheap metadata job (count of the subsample — row-count
-        # pruned to the scan, no sketch state) unblocks the batch
-        # planning that used to wait on the coverage sketch's total
-        n_rows = sub.count()
-
-        # enough minibatch groups to saturate the cluster, without
-        # dropping below the reference's remainder floor (2^10 rows)
-        parallelism = spark.sparkContext.defaultParallelism
-        n_batches = max(1, math.ceil(n_rows / cfg.minibatch_size))
-        n_batches = max(n_batches, cfg.batches_per_core * parallelism)
-        n_batches = min(n_batches, max(1, n_rows // cfg.min_batch_rows))
-
-        # --- pair scoring --------------------------------------------
-        pairs, model_features = plan_pairs(planner, cfg, columns)
-        if cfg.heuristic == "MI-table-exact":
-            # fully-distributed exact plug-in MI over the WHOLE
-            # (sampled) table — no minibatching, no per-batch median;
-            # one grouping-sets scan per pair chunk
-            # (operators/mi_distributed.py).  Engine addition beyond
-            # the reference (whose MI heuristics are always
-            # minibatch-sampled).
-            from outrank_spark.operators.mi_distributed import (
-                mi_table_scores,
-            )
-
-            triplets = mi_table_scores(sub, pairs).withColumn(
-                "batch_id", F.lit(0),
-            )
-        else:
-            triplets = score_batches(
-                sub, columns, pairs, cfg.heuristic, cfg.label_column,
-                n_batches, cfg.mi_stratified_sampling_ratio,
-                model_features=model_features,
-            )
-        sym = symmetrize(triplets).toPandas()
-        # join the concurrent sketch job (raises here if it failed)
-        sketches = sketch_future.result()
-    finally:
-        pool.shutdown(wait=True)
-    return finalize(sym, sketches, cfg, planner)
+    acc = StreamingRankingAccumulator(cfg)
+    acc.process_batch(df, batch_id=0)
+    return acc.result()
 
 
 def plan_pairs(planner: CombinationPlanner, cfg: RankingConfig,

@@ -169,3 +169,14 @@ def test_every_module_is_reached_from_an_entry_point():
         f"{sorted(TEST_ONLY_MODULES)}.  Delete a new orphan or use it; "
         "drop a module from TEST_ONLY_MODULES once an entry point "
         "reaches it")
+
+
+def test_traced_run_resolves_every_layer_name():
+    """``perfbench/run.py --trace 1`` wraps the ranking layers by module
+    attribute name; a refactor that drops one of those names must fail
+    here, not only in the traced run."""
+    from perfbench.layers import Materialiser, layer_targets
+    from perfbench.trace import Tracer
+
+    targets = layer_targets(Tracer("t"), Materialiser())
+    assert targets and all(callable(new) for _, _, new in targets)

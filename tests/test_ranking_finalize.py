@@ -1,8 +1,8 @@
 """One ranking finalisation (plans/ranking_job.py:finalize) for the
 batch, stream and checkpointed drivers.
 
-The differential test runs the three drivers on one input small enough
-that each scores a single minibatch; their rankings must be equal.  The
+The differential test runs the three drivers on one input, scored in
+one minibatch or in several; their rankings must be equal.  The
 median tests pin ``finalize`` against Spark's ``F.median`` (which the
 batch driver used before) and against the reference's pandas median.
 """
@@ -31,22 +31,30 @@ def _frame(rng, n):
 
 
 class TestDriversAgree:
-    @pytest.mark.parametrize("subsampling", [1, 2])
+    @pytest.mark.parametrize("subsampling, rows, minibatch_size, n_mini", [
+        pytest.param(1, 2000, 2 ** 14, 1, id="1"),
+        pytest.param(2, 2000, 2 ** 14, 1, id="2"),
+        pytest.param(1, 5000, 2048, 3, id="3-minibatches"),
+    ])
     def test_batch_stream_checkpointed_equal(self, spark, tmp_path,
-                                             subsampling):
+                                             subsampling, rows,
+                                             minibatch_size, n_mini):
         """``run_ranking``, a stream of one batch and a one-slice
-        checkpointed run rank 2,000 rows (one minibatch in each
-        driver) identically."""
+        checkpointed run rank the same rows identically: 2,000 rows in
+        one minibatch, or 5,000 rows in the reference's ceil(5000 /
+        2048) = 3 minibatches, in each driver."""
         from outrank_spark.jobs.rank_job import _run_ranking_checkpointed
 
-        df = spark.createDataFrame(_frame(np.random.default_rng(11), 2000))
+        df = spark.createDataFrame(_frame(np.random.default_rng(11), rows))
         cfg = RankingConfig(subsampling=subsampling,
-                            target_ranking_only=False)
+                            target_ranking_only=False,
+                            minibatch_size=minibatch_size)
 
         batch = run_ranking(spark, df, cfg)
         acc = StreamingRankingAccumulator(cfg)
         acc.process_batch(df, batch_id=0)
         stream = acc.result()
+        assert acc.triplets["batch_key"].nunique() == n_mini
         ckpt = _run_ranking_checkpointed(spark, df, cfg, argparse.Namespace(
             checkpoint_dir=str(tmp_path / "state"), checkpoint_slices=1,
             output_folder=str(tmp_path / "out"),

@@ -37,6 +37,16 @@ def _write_chunks(spark, tmp_path, n_chunks=3, rows=600, seed=5):
     return data_dir
 
 
+class _CreatesFile:
+    """Unpickling this object creates ``path``."""
+
+    def __init__(self, path):
+        self.path = path
+
+    def __reduce__(self):
+        return (open, (self.path, "w"))
+
+
 def _cfg():
     return RankingConfig(
         heuristic="MI-numba-randomized", subsampling=1,
@@ -134,8 +144,8 @@ class TestStreamingRanking:
             assert acc.sketches[key].to_bytes() == batch[key].to_bytes()
 
     def test_single_atomic_state_file(self, spark, tmp_path):
+        import json
         import os
-        import pickle
 
         state_dir = str(tmp_path / "state_a")
         acc = StreamingRankingAccumulator(_cfg(), state_dir=state_dir)
@@ -143,21 +153,61 @@ class TestStreamingRanking:
         acc.process_batch(spark.createDataFrame(_chunk(rng, 300)),
                           batch_id=0)
         assert set(os.listdir(state_dir)) == {"ranking_state.bin"}
-        with open(os.path.join(state_dir, "ranking_state.bin"), "rb") as f:
-            record = pickle.load(f)
+        with open(os.path.join(state_dir, "ranking_state.bin")) as f:
+            record = json.load(f)
         assert set(record) == {
             "fingerprint", "blobs", "triplets", "prior_counts",
             "batches_seen",
         }
 
-    def test_whole_table_heuristic_refused_at_construction(self):
-        """``MI-table-exact`` has no per-batch form: the accumulator
-        refuses it by name before any batch runs."""
+    def test_pickled_state_is_refused_without_running_it(
+            self, tmp_path, count_jobs):
+        """The state is a JSON record: a ``ranking_state.bin`` holding
+        a pickle (an older version's state, or a crafted one) is
+        refused, and loading it runs none of its code."""
+        import os
+        import pickle
+
+        state_dir = tmp_path / "state_p"
+        marker = tmp_path / "marker"
+        os.makedirs(state_dir)
+        cfg = _cfg()
+        record = {
+            "fingerprint": StreamingRankingAccumulator(cfg)._fingerprint(),
+            "blobs": _CreatesFile(str(marker)), "triplets": None,
+            "prior_counts": {}, "batches_seen": [],
+        }
+        with open(state_dir / "ranking_state.bin", "wb") as f:
+            pickle.dump(record, f, protocol=4)
+        with count_jobs() as n:
+            with pytest.raises(ValueError,
+                               match="not a ranking state record"):
+                StreamingRankingAccumulator(cfg, state_dir=str(state_dir))
+        assert not marker.exists()
+        assert n["jobs"] == 0
+
+    def test_whole_table_heuristic_median_over_batches(self, spark):
+        """``MI-table-exact`` scores each batch whole; a two-batch
+        stream's score for a pair is the median (here the mean) of the
+        two one-batch ``run_ranking`` scores."""
         from dataclasses import replace
 
-        with pytest.raises(ValueError, match="MI-table-exact"):
-            StreamingRankingAccumulator(
-                replace(_cfg(), heuristic="MI-table-exact"))
+        from outrank_spark.plans.ranking_job import run_ranking
+
+        cfg = replace(_cfg(), heuristic="MI-table-exact")
+        rng = np.random.default_rng(4)
+        dfs = [spark.createDataFrame(_chunk(rng, n)) for n in (300, 500)]
+        acc = StreamingRankingAccumulator(cfg)
+        for i, df in enumerate(dfs):
+            acc.process_batch(df, batch_id=i)
+        stream = acc.result().pairwise
+        one = [run_ranking(spark, df, cfg).pairwise.set_index(
+            ["FeatureA", "FeatureB"])["Score"] for df in dfs]
+        assert len(stream) == 9
+        for _, row in stream.iterrows():
+            key = (row["FeatureA"], row["FeatureB"])
+            assert row["Score"] == np.mean([one[0][key], one[1][key]])
+            assert one[0][key] != one[1][key]
 
 
 class TestCheckpointedCliRanking:
@@ -238,8 +288,8 @@ class TestCheckpointedCliRanking:
         instead of failing in ``memory.tsv`` after the ranking or
         averaging over only the slices run since.  A changed sketch
         parameter (``hll_p``) is refused the same way."""
+        import json
         import os
-        import pickle
         from dataclasses import replace
 
         from outrank_spark.jobs.rank_job import _run_ranking_checkpointed
@@ -251,14 +301,14 @@ class TestCheckpointedCliRanking:
             _cfg(), state_dir=args.checkpoint_dir, context="cli-slices=4")
         acc.process_batch(df, batch_id=0)
         path = os.path.join(args.checkpoint_dir, "ranking_state.bin")
-        with open(path, "rb") as f:
-            record = pickle.load(f)
+        with open(path) as f:
+            record = json.load(f)
         # the older writer: no plan fields in the fingerprint, no bytes
         record["fingerprint"] = record["fingerprint"].rsplit("|", 2)[0]
         record["blobs"] = {k: v for k, v in record["blobs"].items()
                            if not k.endswith("\x1fbytes")}
-        with open(path, "wb") as f:
-            pickle.dump(record, f, protocol=4)
+        with open(path, "w") as f:
+            json.dump(record, f)
         with count_jobs() as n:
             with pytest.raises(ValueError, match="sketch plan"):
                 _run_ranking_checkpointed(spark, df, _cfg(), args)

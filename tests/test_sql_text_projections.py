@@ -168,5 +168,5 @@ def test_run_ranking_warns_nothing(spark):
     df = spark.createDataFrame(pdf)
     with warnings.catch_warnings():
         warnings.simplefilter("error", UserWarning)
-        res = run_ranking(spark, df, RankingConfig(min_batch_rows=16))
+        res = run_ranking(spark, df, RankingConfig(minibatch_size=16))
     assert len(res.pairwise)
