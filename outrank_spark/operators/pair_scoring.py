@@ -24,8 +24,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from outrank_spark.hashing import sql_ident
+from outrank_spark.hashing import splitmix64, sql_ident
 from outrank_spark.functions.heuristics import score_pair
+from outrank_spark.operators import evict_zip_finders
 
 __all__ = ["deterministic_subsample", "assign_batches", "score_batches",
            "score_single_batch_distributed", "symmetrize"]
@@ -183,6 +184,44 @@ def _score_block(codes: dict[str, np.ndarray],
     return out
 
 
+def _score_group(unsafe: dict[str, str], columns: Sequence[str],
+                 pairs: Sequence[tuple[str, str]], heuristic: str,
+                 label_column: str, ratio: float,
+                 model_features: Sequence[str]):
+    """``score_batches``' group function: score one minibatch's pairs,
+    then evict the worker's zip finders (``evict_zip_finders``).
+    ``unsafe`` maps the positional channel names back to the features."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.rename(columns=unsafe)
+        pdf = pdf.sort_values("_rk", kind="stable").reset_index(drop=True)
+        # The hash sort gives a deterministic, partition-independent
+        # order — but it CLUSTERS identical rows into runs, which
+        # makes the MI spoof correction's position shift land on
+        # look-alike neighbors (background == signal -> score ~ 0).
+        # A fixed pseudo-random permutation of positions scatters the
+        # runs while staying fully deterministic.
+        perm = np.argsort(splitmix64(np.arange(len(pdf), dtype=np.uint64)),
+                          kind="stable")
+        pdf = pdf.iloc[perm].reset_index(drop=True)
+        codes = _encode_codes(pdf, columns)
+        triplets = _score_block(codes, pairs, heuristic, label_column,
+                                ratio, model_features)
+        bid = int(pdf["batch_id"].iloc[0])
+        out = pd.DataFrame(
+            {
+                "batch_id": bid,
+                "feature_a": [t[0] for t in triplets],
+                "feature_b": [t[1] for t in triplets],
+                "score": [t[2] for t in triplets],
+            },
+        )
+        evict_zip_finders()
+        return out
+
+    return fn
+
+
 def score_batches(df: DataFrame, columns: Sequence[str],
                   pairs: Sequence[tuple[str, str]], heuristic: str,
                   label_column: str, n_batches: int,
@@ -224,35 +263,9 @@ def score_batches(df: DataFrame, columns: Sequence[str],
     batch_keys = ([safe[c] for c in columns] if key_cols is None
                   else [safe.get(c, c) for c in key_cols])
     batched = assign_batches(base, n_batches, key_cols=batch_keys)
-    unsafe = {v: k for k, v in safe.items()}
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.rename(columns=unsafe)
-        pdf = pdf.sort_values("_rk", kind="stable").reset_index(drop=True)
-        # The hash sort gives a deterministic, partition-independent
-        # order — but it CLUSTERS identical rows into runs, which
-        # makes the MI spoof correction's position shift land on
-        # look-alike neighbors (background == signal -> score ~ 0).
-        # A fixed pseudo-random permutation of positions scatters the
-        # runs while staying fully deterministic.
-        from outrank_spark.hashing import splitmix64
-
-        perm = np.argsort(splitmix64(np.arange(len(pdf), dtype=np.uint64)),
-                          kind="stable")
-        pdf = pdf.iloc[perm].reset_index(drop=True)
-        codes = _encode_codes(pdf, columns)
-        triplets = _score_block(codes, pairs, heuristic, label_column,
-                                mi_stratified_sampling_ratio,
-                                model_features)
-        bid = int(pdf["batch_id"].iloc[0])
-        return pd.DataFrame(
-            {
-                "batch_id": bid,
-                "feature_a": [t[0] for t in triplets],
-                "feature_b": [t[1] for t in triplets],
-                "score": [t[2] for t in triplets],
-            },
-        )
+    fn = _score_group({v: k for k, v in safe.items()}, columns, pairs,
+                      heuristic, label_column, mi_stratified_sampling_ratio,
+                      model_features)
 
     # Spread CPU-heavy batch groups across tasks.  groupBy's default
     # shuffle hashes n_batches keys into spark.sql.shuffle.partitions

@@ -37,6 +37,7 @@ import pandas as pd
 
 from outrank_spark.sketches import SKETCH_REGISTRY, sketch_from_bytes
 from outrank_spark.hashing import qcol, sql_ident, sql_str
+from outrank_spark.operators import evict_zip_finders
 
 __all__ = ["SketchPlan", "SketchCollection", "build_sketches",
            "build_grouped_sketches", "rollup_grouped_sketches",
@@ -144,6 +145,9 @@ def _build_partition(plan: SketchPlan):
       * ``__c<i>``  raw values     -> counter / cms / bloom / kll /
                                       tdigest, and any kind whose
                                       fast-path column is absent
+
+    The function ends by evicting the worker's zip finders
+    (:func:`outrank_spark.operators.evict_zip_finders`).
     """
     chans = _channels(plan)
 
@@ -180,6 +184,7 @@ def _build_partition(plan: SketchPlan):
                     "blob": [sk.to_bytes() for sk in local.values()],
                 },
             )
+        evict_zip_finders()
 
     return fn
 
@@ -289,9 +294,12 @@ def _add_partial(acc: dict, row) -> dict:
 
 
 def _merge_partials(acc: dict, other: dict) -> dict:
-    """Merge ``other``'s sketches into ``acc`` per (column, kind)."""
+    """Merge ``other``'s sketches into ``acc`` per (column, kind).
+    Ends every merge-tree call (``_add_partial`` too) by evicting the
+    executor's zip finders."""
     for key, sk in other.items():
         acc[key] = acc[key].merge(sk) if key in acc else sk
+    evict_zip_finders()
     return acc
 
 

@@ -20,6 +20,8 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 
+from outrank_spark.sketches import safe_pickle
+
 __all__ = ["BoundedCounter"]
 
 
@@ -97,7 +99,7 @@ class BoundedCounter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BoundedCounter":
-        state = pickle.loads(blob)
+        state = safe_pickle.loads(blob)
         out = cls(bound=state["bound"])
         out.counts = Counter(state["counts"])
         return out

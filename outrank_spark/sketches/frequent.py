@@ -46,6 +46,8 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 
+from outrank_spark.sketches import safe_pickle
+
 __all__ = ["FrequentItems", "WeightedFrequentItems"]
 
 
@@ -156,7 +158,7 @@ class FrequentItems:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "FrequentItems":
-        state = pickle.loads(blob)
+        state = safe_pickle.loads(blob)
         out = cls(k=state["k"])
         out.n = state["n"]
         out.err = state["err"]
@@ -281,7 +283,7 @@ class WeightedFrequentItems:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "WeightedFrequentItems":
-        state = pickle.loads(blob)
+        state = safe_pickle.loads(blob)
         out = cls(k=state["k"])
         out.n = state["n"]
         out.err = state["err"]

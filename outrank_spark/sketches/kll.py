@@ -20,6 +20,8 @@ import pickle
 
 import numpy as np
 
+from outrank_spark.sketches import safe_pickle
+
 __all__ = ["KLLSketch"]
 
 
@@ -139,7 +141,7 @@ class KLLSketch:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "KLLSketch":
-        state = pickle.loads(blob)
+        state = safe_pickle.loads(blob)
         out = cls(k=state["k"], seed=state["seed"])
         out.n = state["n"]
         out.levels = [np.frombuffer(b, dtype=np.float64).copy()

@@ -30,6 +30,8 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 
+from outrank_spark.sketches import safe_pickle
+
 __all__ = ["RareValueCounter"]
 
 
@@ -102,7 +104,7 @@ class RareValueCounter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "RareValueCounter":
-        state = pickle.loads(blob)
+        state = safe_pickle.loads(blob)
         out = cls(bound=state["bound"])
         out.counts = Counter(state["counts"])
         out.ignored = set(state["ignored"])

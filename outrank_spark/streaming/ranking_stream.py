@@ -20,7 +20,8 @@ one batch — a ``foreachBatch`` micro-batch, a checkpointed CLI slice or
    planner prior counts + batch manifest) as ONE atomically-replaced
    JSON record, so a replayed batch after restart is recognized and
    skipped — never double-counted.  The record is not a pickle; the
-   ``counter`` and ``rare`` blobs in it still pickle their value maps.
+   pickled sketch blobs in it (``counter``, ``rare``, ...) decode
+   through ``sketches/safe_pickle.py``, which builds values only.
 
 ``result()`` symmetrises the accumulated triplets and hands them to
 ``finalize``: median across all minibatches, feature renaming from the

@@ -17,11 +17,11 @@ would produce — any micro-batch slicing, any arrival order
 just the estimates).  So every window estimate carries plain HLL's
 published 1.04/sqrt(m) bound, live.
 
-Restart safety follows the StreamingSketchAccumulator /
-StreamingDriftMonitor recipe: blob + batches-seen manifest are ONE
-atomically-replaced pickle; a replayed ``batch_id`` after a restart
-is an idempotent skip (and even a double-fold would be harmless here
-— idempotent merge — the skip keeps the manifest honest).
+Restart safety follows the StreamingSketchAccumulator recipe: blob +
+batches-seen manifest are ONE atomically-replaced pickle; a replayed
+``batch_id`` after a restart is an idempotent skip (and even a
+double-fold would be harmless here — idempotent merge — the skip
+keeps the manifest honest).
 
 No reference-repo counterpart; north-rule sketch-tier addition
 (SURVEY.md §2.9g, streaming leg).

@@ -306,75 +306,3 @@ class TestFunnelStream:
         f2 = _events([(1, "2024-01-01 09:59", "click")])
         out = self._run_stream(spark, tmp_path, [f1, f2], "funnel_late")
         assert out["step"].tolist() == [1]
-
-
-class TestStreamingDriftMonitor:
-    def _mkdata(self, spark, tmp_path):
-        import numpy as np
-        import pandas as pd
-
-        rng = np.random.default_rng(11)
-        ref = spark.createDataFrame(pd.DataFrame({
-            "v": rng.normal(0.0, 1.0, 4000)}))
-        # drifted stream: two micro-batches with a mean shift
-        chunks = [rng.normal(0.4, 1.1, 1500), rng.normal(0.6, 1.2, 1500)]
-        data_dir = str(tmp_path / "drift_data")
-        for arr in chunks:
-            spark.createDataFrame(pd.DataFrame({"v": arr})) \
-                .coalesce(1).write.mode("append").parquet(data_dir)
-        return ref, chunks, data_dir
-
-    def test_stream_equals_batch_psi(self, spark, tmp_path):
-        """2-micro-batch replay: the monitor's cumulative report is
-        BITWISE equal to batch psi_drift(ref, all rows) — the r4
-        verdict #6 contract."""
-        import pandas as pd
-
-        from outrank_spark.operators.drift import psi_drift
-        from outrank_spark.streaming.drift_stream import (
-            StreamingDriftMonitor)
-
-        ref, chunks, data_dir = self._mkdata(spark, tmp_path)
-        mon = StreamingDriftMonitor(ref, "v", bins=10,
-                                    state_dir=str(tmp_path / "state"))
-        stream = (spark.readStream.schema("v double")
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        q = mon.attach(stream, str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
-        assert len(mon.batches_seen) == 2
-        cur_all = spark.read.parquet(data_dir)
-        want = psi_drift(ref, cur_all, "v").toPandas() \
-            .sort_values("bin").reset_index(drop=True)
-        got = mon.report(spark).toPandas() \
-            .sort_values("bin").reset_index(drop=True)
-        pd.testing.assert_frame_equal(got, want, check_exact=True)
-        assert mon.psi(spark) > 0.05  # planted drift is visible
-
-    def test_restart_replay_is_idempotent(self, spark, tmp_path):
-        """A restarted query re-delivering processed batch ids must
-        not double-fold counts: a fresh monitor restored from
-        state_dir skips them and reports identically."""
-        from outrank_spark.streaming.drift_stream import (
-            StreamingDriftMonitor)
-
-        ref, chunks, data_dir = self._mkdata(spark, tmp_path)
-        state = str(tmp_path / "state2")
-        mon = StreamingDriftMonitor(ref, "v", bins=10, state_dir=state)
-        stream = (spark.readStream.schema("v double")
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        q = mon.attach(stream, str(tmp_path / "ckpt2"))
-        q.awaitTermination(120)
-        before = mon.report(spark).toPandas()
-        # simulate restart: new monitor from the SAME state dir, then
-        # the checkpoint replays the already-seen batch ids
-        mon2 = StreamingDriftMonitor(ref, "v", bins=10, state_dir=state)
-        assert mon2.cur_counts == mon.cur_counts
-        replay = spark.read.parquet(data_dir)
-        for b in mon.batches_seen:
-            mon2.process_batch(replay, b["batch_id"])  # must skip
-        after = mon2.report(spark).toPandas()
-        assert after.equals(before)
-        # a genuinely NEW batch id still folds
-        mon2.process_batch(replay.limit(100), 999)
-        assert sum(mon2.cur_counts.values()) \
-            == sum(mon.cur_counts.values()) + 100

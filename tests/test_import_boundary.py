@@ -24,7 +24,6 @@ ENTRY_ROOTS = RANKING_ROOTS + ("outrank_spark.plans.queries",
 # them.  Wiring one into an entry point, or deleting it, must take it
 # off this list; a new module may not join it silently.
 TEST_ONLY_MODULES = frozenset({
-    "outrank_spark.streaming.drift_stream",
     "outrank_spark.streaming.event_streams",
 })
 
@@ -73,6 +72,7 @@ RANKING_MODULES = frozenset({
     "outrank_spark.sketches.hll",
     "outrank_spark.sketches.kll",
     "outrank_spark.sketches.rare",
+    "outrank_spark.sketches.safe_pickle",
     "outrank_spark.sketches.slidinghll",
     "outrank_spark.sketches.tdigest",
     "outrank_spark.sketches.theta",

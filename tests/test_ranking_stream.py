@@ -186,6 +186,36 @@ class TestStreamingRanking:
         assert not marker.exists()
         assert n["jobs"] == 0
 
+    def test_crafted_sketch_blob_is_refused_without_running_it(
+            self, tmp_path):
+        """A valid state record (right fingerprint) whose ``counter``
+        blob pickles a callable: opening the accumulator refuses the
+        blob, and decoding it runs none of its code."""
+        import base64
+        import json
+        import os
+        import pickle
+
+        state_dir = tmp_path / "state_b"
+        marker = tmp_path / "marker"
+        os.makedirs(state_dir)
+        cfg = _cfg()
+        blob = pickle.dumps(
+            {"bound": 3, "counts": {_CreatesFile(str(marker)): 1}},
+            protocol=4)
+        record = {
+            "fingerprint": StreamingRankingAccumulator(cfg)._fingerprint(),
+            "blobs": {"a\x1fcounter": base64.b64encode(blob).decode()},
+            "triplets": {c: [] for c in
+                         ("batch_key", "feature_a", "feature_b", "score")},
+            "prior_counts": {}, "batches_seen": [],
+        }
+        with open(state_dir / "ranking_state.bin", "w") as f:
+            json.dump(record, f)
+        with pytest.raises(ValueError, match="sketch state references"):
+            StreamingRankingAccumulator(cfg, state_dir=str(state_dir))
+        assert not marker.exists()
+
     def test_whole_table_heuristic_median_over_batches(self, spark):
         """``MI-table-exact`` scores each batch whole; a two-batch
         stream's score for a pair is the median (here the mean) of the

@@ -8,6 +8,9 @@ eps-delta, KLL rank error, Bloom FPR).
 """
 from __future__ import annotations
 
+import datetime
+import decimal
+
 import numpy as np
 import pytest
 
@@ -479,6 +482,42 @@ class TestBoundedCounter:
         c = BoundedCounter(bound=5).update(np.array(["q"] * 3, dtype=object))
         c2 = sketch_from_bytes("counter", c.to_bytes())
         assert c2.query("q") == 3
+
+    _VALUES = {
+        "str": np.array(["a", "b", "a"], dtype=object),
+        "int": np.array([1, 2, 2]),
+        "float": np.array([1.5, 2.0, 1.5]),
+        "bool": np.array([True, False, True]),
+        "timestamp": np.array(["2024-01-01", "2024-01-02"],
+                              dtype="datetime64[ns]"),
+        "interval": np.array([1, 2], dtype="timedelta64[s]"),
+        "date": np.array([datetime.date(2024, 1, 1)] * 2, dtype=object),
+        "time": np.array([datetime.time(1, 2)] * 2, dtype=object),
+        "decimal": np.array([decimal.Decimal("1.50")] * 2, dtype=object),
+        "bytes": np.array([b"x", b"y"], dtype=object),
+    }
+
+    @pytest.mark.parametrize("values", _VALUES.values(), ids=_VALUES.keys())
+    def test_value_types_roundtrip_bitwise(self, values):
+        """The wire format decodes through the restricted unpickler:
+        every column value type a counter holds still round-trips."""
+        c = BoundedCounter().update(values)
+        c.add(np.int64(7))  # numpy scalar keys too
+        blob = c.to_bytes()
+        assert sketch_from_bytes("counter", blob).to_bytes() == blob
+
+    def test_foreign_global_is_refused_before_it_runs(self, tmp_path):
+        import pickle
+
+        class CreatesFile:
+            def __reduce__(self):
+                return (open, (str(tmp_path / "marker"), "w"))
+
+        blob = pickle.dumps({"bound": 3, "counts": {CreatesFile(): 1}},
+                            protocol=4)
+        with pytest.raises(ValueError, match="sketch state references"):
+            sketch_from_bytes("counter", blob)
+        assert not (tmp_path / "marker").exists()
 
 
 class TestHLLSetAlgebra:
