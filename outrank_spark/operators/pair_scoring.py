@@ -2,11 +2,14 @@
 
 The reference scores each minibatch's column pairs on a process pool
 (core_ranking.py:139-151).  Spark-first re-expression: minibatches
-become *groups* of a deterministic batch key, and one ``applyInPandas``
+become *groups* of a deterministic batch key, and one ``applyInArrow``
 call scores every planned pair inside the group's Arrow batch — batch
 semantics (batch-local category codes, row-order-dependent spoof
 correction) are preserved because each group is sorted by a stable row
-key before encoding.
+key before encoding.  The scoring values travel packed, one
+``array(...)`` column per element type (``operators.pack_channels``),
+and each feature's slot is unpacked to the pandas Series a column of
+its own would give.
 
 Scale shape: at 10^12 rows the sampled scoring input is millions of
 minibatches; parallelism is batch-level (each task scores ~|pairs|
@@ -22,16 +25,28 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType
 
 from outrank_spark.hashing import splitmix64, sql_ident
 from outrank_spark.functions.heuristics import score_pair
-from outrank_spark.operators import evict_zip_finders
+from outrank_spark.operators import (
+    Layout,
+    column_types,
+    evict_zip_finders,
+    pack_channels,
+    unpack_channels,
+)
 
 __all__ = ["deterministic_subsample", "assign_batches", "score_batches",
            "score_single_batch_distributed", "symmetrize"]
 
 _TRIPLET_SCHEMA = "batch_id long, feature_a string, feature_b string, score double"
+_TRIPLET_ARROW = pa.schema([
+    ("batch_id", pa.int64()), ("feature_a", pa.string()),
+    ("feature_b", pa.string()), ("score", pa.float64()),
+])
 
 
 def deterministic_subsample(df: DataFrame, every_nth: int,
@@ -54,14 +69,18 @@ def _xxhash64_sql(columns: Sequence[str]) -> str:
     return "xxhash64(" + ", ".join(map(sql_ident, columns)) + ")"
 
 
+def _batch_id_sql(keys: Sequence[str], n_batches: int) -> str:
+    """The minibatch of a row, from the SQL key expressions ``keys``."""
+    return f"pmod(xxhash64({', '.join(keys)}), {int(n_batches)})"
+
+
 def assign_batches(df: DataFrame, n_batches: int,
                    key_cols: Sequence[str] | None = None) -> DataFrame:
-    """Add ``batch_id`` + stable intra-batch order key ``_rk``."""
-    key = _xxhash64_sql(key_cols or df.columns)
-    return (
-        df.withColumn("_rk", F.expr(key))
-        .withColumn("batch_id", F.expr(f"pmod(_rk, {int(n_batches)})"))
-    )
+    """Add ``batch_id`` + stable intra-batch order key ``_rk`` (the
+    keys ``score_batches`` gives its minibatches)."""
+    keys = [sql_ident(c) for c in key_cols or df.columns]
+    return df.selectExpr("*", f"xxhash64({', '.join(keys)}) AS _rk",
+                         f"{_batch_id_sql(keys, n_batches)} AS batch_id")
 
 
 def _encode_codes(pdf: pd.DataFrame, columns: Sequence[str]) -> dict[str, np.ndarray]:
@@ -184,38 +203,48 @@ def _score_block(codes: dict[str, np.ndarray],
     return out
 
 
-def _score_group(unsafe: dict[str, str], columns: Sequence[str],
+def _score_minibatch(values, rk: np.ndarray, columns: Sequence[str],
+                     pairs: Sequence[tuple[str, str]], heuristic: str,
+                     label_column: str, ratio: float,
+                     model_features: Sequence[str]) -> list:
+    """Score one minibatch's pairs: ``values`` maps each feature to its
+    pandas Series, ``rk`` is the rows' order key."""
+    # The hash sort gives a deterministic, partition-independent
+    # order — but it CLUSTERS identical rows into runs, which
+    # makes the MI spoof correction's position shift land on
+    # look-alike neighbors (background == signal -> score ~ 0).
+    # A fixed pseudo-random permutation of positions scatters the
+    # runs while staying fully deterministic.
+    order = np.argsort(rk, kind="stable")
+    perm = np.argsort(splitmix64(np.arange(len(order), dtype=np.uint64)),
+                      kind="stable")
+    rows = order[perm]
+    codes = _encode_codes({c: values[c].iloc[rows] for c in columns},
+                          columns)
+    return _score_block(codes, pairs, heuristic, label_column, ratio,
+                        model_features)
+
+
+def _score_group(layout: Layout, columns: Sequence[str],
                  pairs: Sequence[tuple[str, str]], heuristic: str,
                  label_column: str, ratio: float,
                  model_features: Sequence[str]):
-    """``score_batches``' group function: score one minibatch's pairs,
-    then evict the worker's zip finders (``evict_zip_finders``).
-    ``unsafe`` maps the positional channel names back to the features."""
+    """``score_batches``' group function (``applyInArrow``): score one
+    minibatch's pairs, then evict the worker's zip finders
+    (``evict_zip_finders``).  ``layout`` says which packed array column
+    and slot carries each feature; every slot is unpacked to the pandas
+    Series its own column would have been."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.rename(columns=unsafe)
-        pdf = pdf.sort_values("_rk", kind="stable").reset_index(drop=True)
-        # The hash sort gives a deterministic, partition-independent
-        # order — but it CLUSTERS identical rows into runs, which
-        # makes the MI spoof correction's position shift land on
-        # look-alike neighbors (background == signal -> score ~ 0).
-        # A fixed pseudo-random permutation of positions scatters the
-        # runs while staying fully deterministic.
-        perm = np.argsort(splitmix64(np.arange(len(pdf), dtype=np.uint64)),
-                          kind="stable")
-        pdf = pdf.iloc[perm].reset_index(drop=True)
-        codes = _encode_codes(pdf, columns)
-        triplets = _score_block(codes, pairs, heuristic, label_column,
-                                ratio, model_features)
-        bid = int(pdf["batch_id"].iloc[0])
-        out = pd.DataFrame(
-            {
-                "batch_id": bid,
-                "feature_a": [t[0] for t in triplets],
-                "feature_b": [t[1] for t in triplets],
-                "score": [t[2] for t in triplets],
-            },
-        )
+    def fn(table):
+        triplets = _score_minibatch(
+            unpack_channels(table.columns, layout),
+            table.column("_rk").to_numpy(), columns, pairs, heuristic,
+            label_column, ratio, model_features)
+        bid = table.column("batch_id")[0].as_py()
+        out = pa.table(
+            [[bid] * len(triplets), [t[0] for t in triplets],
+             [t[1] for t in triplets], [t[2] for t in triplets]],
+            schema=_TRIPLET_ARROW)
         evict_zip_finders()
         return out
 
@@ -251,21 +280,21 @@ def score_batches(df: DataFrame, columns: Sequence[str],
             and mi_stratified_sampling_ratio >= 1.0
             and not model_features
         )
-    # positional channel names through Spark (classic mapInPandas /
-    # applyInPandas re-resolve every column by name, which breaks on
-    # derived feature names containing dots); pandas renames them back
-    # to the real feature names inside the worker
-    safe = {c: f"__f{i}" for i, c in enumerate(columns)}
+    # one projection: the scoring values, packed into a few array
+    # columns (``operators.pack_channels``), the rows' intra-batch order
+    # key and their minibatch
     value = "xxhash64({})" if precode else "{}"
-    base = df.selectExpr(
-        *[value.format(sql_ident(c)) + f" AS {safe[c]}" for c in columns],
-    )
-    batch_keys = ([safe[c] for c in columns] if key_cols is None
-                  else [safe.get(c, c) for c in key_cols])
-    batched = assign_batches(base, n_batches, key_cols=batch_keys)
-    fn = _score_group({v: k for k, v in safe.items()}, columns, pairs,
-                      heuristic, label_column, mi_stratified_sampling_ratio,
-                      model_features)
+    values = {c: value.format(sql_ident(c)) for c in columns}
+    type_of = column_types(df)
+    layout = pack_channels(
+        [(c, "value", values[c], LongType() if precode else type_of(c))
+         for c in columns], df.sparkSession)
+    keys = [values.get(c, sql_ident(c)) for c in key_cols or columns]
+    batched = df.selectExpr(
+        *layout.exprs, f"xxhash64({', '.join(keys)}) AS _rk",
+        f"{_batch_id_sql(keys, n_batches)} AS batch_id")
+    fn = _score_group(layout, columns, pairs, heuristic, label_column,
+                      mi_stratified_sampling_ratio, model_features)
 
     # Spread CPU-heavy batch groups across tasks.  groupBy's default
     # shuffle hashes n_batches keys into spark.sql.shuffle.partitions
@@ -293,7 +322,7 @@ def score_batches(df: DataFrame, columns: Sequence[str],
     if n_batches < 32 * shuf:
         batched = batched.repartition(
             min(4 * n_batches, 64 * shuf), "batch_id")
-    return batched.groupBy("batch_id").applyInPandas(fn, schema=_TRIPLET_SCHEMA)
+    return batched.groupBy("batch_id").applyInArrow(fn, schema=_TRIPLET_SCHEMA)
 
 
 def score_single_batch_distributed(spark, pdf: pd.DataFrame,

@@ -5,10 +5,17 @@ batch-by-batch on one process (core_ranking.py:41-44, 439-462).  Here
 the same state is a *mergeable UDAF* executed in two stages
 (SURVEY.md §3.1 "Spark lifecycle equivalent"):
 
-  stage 1  ``mapInPandas`` over only the requested columns (Catalyst
-           prunes the scan to exactly those) — each partition builds
-           one local sketch per (column, kind) in a single vectorized
-           pass and emits it as a serialized blob row;
+  stage 1  ``mapInArrow`` over only the channels the kinds need
+           (Catalyst prunes the scan to exactly those columns): JVM-
+           side xxhash64 longs, missing flags and byte lengths, and
+           raw values only where a kind needs them.  The channels
+           travel packed, one ``array(...)`` column per channel kind
+           and element type (``operators.pack_channels``), so the
+           UDF's input is a few columns at any feature count; each
+           partition unpacks every slot to the pandas Series a column
+           of its own would give, builds one local sketch per
+           (column, kind) in a single vectorized pass and emits it as
+           a serialized blob row;
   stage 2  ``RDD.treeAggregate`` of per-partition {(column, kind) ->
            sketch} dicts with depth ~log4(P): executors fold the P
            partials level by level, so the driver receives at most ~5
@@ -34,10 +41,17 @@ from typing import Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from outrank_spark.sketches import SKETCH_REGISTRY, sketch_from_bytes
 from outrank_spark.hashing import qcol, sql_ident, sql_str
-from outrank_spark.operators import evict_zip_finders
+from outrank_spark.operators import (
+    Layout,
+    column_types,
+    evict_zip_finders,
+    pack_channels,
+    unpack_channels,
+)
 
 __all__ = ["SketchPlan", "SketchCollection", "build_sketches",
            "build_grouped_sketches", "rollup_grouped_sketches",
@@ -50,6 +64,8 @@ __all__ = ["SketchPlan", "SketchCollection", "build_sketches",
 
 _NUMERIC_ONLY = {"kll", "tdigest", "ddsketch"}
 _BLOB_SCHEMA = "column string, kind string, blob binary"
+_BLOB_ARROW = pa.schema([("column", pa.string()), ("kind", pa.string()),
+                         ("blob", pa.binary())])
 # build_sketches: partial dicts the driver merges itself, at most
 _MAX_DRIVER_PARTIALS = 5
 
@@ -126,64 +142,58 @@ class SketchCollection(dict):
 _HASH_INPUT = {"hll", "parity_hll", "theta"}
 
 
-def _channels(plan: SketchPlan) -> dict[str, int]:
-    """Positional channel number per feature column.  Classic
-    pyspark's mapInPandas re-resolves every column by name, parsing
-    dots as struct access and rejecting unpaired backticks, so the
-    channels are named by position; the blob output still carries the
-    ORIGINAL column name."""
-    return {c: i for i, c in enumerate(dict.fromkeys(plan.columns))}
+def _update_sketches(local: dict, chans: dict) -> None:
+    """Fold one batch into the partition's sketches.  ``chans`` maps
+    a channel key to its pandas Series (see :func:`_scan_channels`):
+
+      * ``("h", col)``  int64 xxhash64 -> hll / parity_hll / theta
+      * ``("m", col)``  0/1 missing    -> coverage
+      * ``("b", col)``  UTF-8 length of the string form -> bytes
+      * ``("c", col)``  raw values     -> counter / cms / bloom / kll /
+                                          tdigest, and any kind whose
+                                          fast-path channel is absent
+    """
+    for (col, kind), sk in local.items():
+        if kind in _HASH_INPUT and ("h", col) in chans:
+            sk.update_hashes(
+                chans["h", col].to_numpy(np.int64).astype(np.uint64))
+            continue
+        if kind == "coverage" and ("m", col) in chans:
+            sk.update_flags(chans["m", col].to_numpy())
+            continue
+        if kind == "bytes":
+            sk.update(chans["b", col])
+            continue
+        vals = chans["c", col]
+        if kind in _NUMERIC_ONLY:
+            sk.update(pd.to_numeric(vals, errors="coerce").to_numpy())
+        elif kind == "coverage":
+            sk.update(vals.to_numpy())  # nulls count as missing
+        else:
+            sk.update(vals.dropna().to_numpy())
 
 
-def _build_partition(plan: SketchPlan):
-    """Stage-1 worker: one pass over the partition's Arrow batches.
-
-    Input channels per (column number i, kind):
-      * ``__h<i>``  int64 xxhash64  -> hll / parity_hll (fast path)
-      * ``__m<i>``  0/1 missing    -> coverage (fast path)
-      * ``__b<i>``  UTF-8 length of the string form -> bytes
-      * ``__c<i>``  raw values     -> counter / cms / bloom / kll /
-                                      tdigest, and any kind whose
-                                      fast-path column is absent
+def _build_partition(plan: SketchPlan, layout: Layout):
+    """Stage-1 worker (``mapInArrow``): one pass over the partition's
+    Arrow batches.  ``layout`` (of :func:`_scan_channels`) says which
+    packed array column and slot carries each channel; every slot is
+    unpacked to the pandas Series its own column would have been.
 
     The function ends by evicting the worker's zip finders
     (:func:`outrank_spark.operators.evict_zip_finders`).
     """
-    chans = _channels(plan)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = {key: plan.make(kind) for key in plan.keys()
-                 for kind in [key[1]]}
+    def fn(batches):
+        local = {key: plan.make(key[1]) for key in plan.keys()}
         saw = False
-        for pdf in batches:
+        for batch in batches:
             saw = True
-            for (col, kind), sk in local.items():
-                i = chans[col]
-                if kind in _HASH_INPUT and f"__h{i}" in pdf.columns:
-                    h = pdf[f"__h{i}"].to_numpy(np.int64).astype(np.uint64)
-                    sk.update_hashes(h)
-                    continue
-                if kind == "coverage" and f"__m{i}" in pdf.columns:
-                    sk.update_flags(pdf[f"__m{i}"].to_numpy())
-                    continue
-                if kind == "bytes":
-                    sk.update(pdf[f"__b{i}"])
-                    continue
-                vals = pdf[f"__c{i}"]
-                if kind in _NUMERIC_ONLY:
-                    sk.update(pd.to_numeric(vals, errors="coerce").to_numpy())
-                elif kind == "coverage":
-                    sk.update(vals.to_numpy())  # nulls count as missing
-                else:
-                    sk.update(vals.dropna().to_numpy())
+            _update_sketches(local, unpack_channels(batch.columns, layout))
         if saw:
-            yield pd.DataFrame(
-                {
-                    "column": [c for c, _ in local],
-                    "kind": [k for _, k in local],
-                    "blob": [sk.to_bytes() for sk in local.values()],
-                },
-            )
+            yield pa.RecordBatch.from_arrays(
+                [[c for c, _ in local], [k for _, k in local],
+                 [sk.to_bytes() for sk in local.values()]],
+                schema=_BLOB_ARROW)
         evict_zip_finders()
 
     return fn
@@ -199,59 +209,64 @@ def _parses_as_number(symbol: str) -> bool:
     return True
 
 
-def _scan_inputs(df, plan: SketchPlan, jvm_prehash: bool):
-    """Project exactly the channels the build needs: raw columns only
-    for kinds that require values, hash/flag longs for the rest.  The
-    projection is SQL text, one ``selectExpr`` for every channel."""
-    from pyspark.sql.types import NumericType, StringType
+def _scan_channels(df, plan: SketchPlan, jvm_prehash: bool) -> list:
+    """The channels the build needs, as ``(key, kind, sql_expr,
+    spark_type)`` for :func:`~outrank_spark.operators.pack_channels`:
+    raw columns only for kinds that require values, hash/flag longs for
+    the rest."""
+    from pyspark.sql.types import (
+        ByteType,
+        IntegerType,
+        LongType,
+        NumericType,
+        StringType,
+    )
 
-    keys = plan.keys()
-    raw_needed = set()
-    hash_cols: list[str] = []
-    flag_specs: list[tuple[str, dict]] = []
-    length_cols: list[str] = []
-    for col, kind in keys:
+    type_of = column_types(df)
+    channels = {}
+    for col, kind in plan.keys():
+        ident = sql_ident(col)
         if kind == "bytes":
             # the JVM's string form, whatever the column type
-            length_cols.append(col)
+            channels["b", col] = (
+                f"octet_length(CAST({ident} AS STRING))", IntegerType())
         elif jvm_prehash and kind in _HASH_INPUT:
-            if col not in hash_cols:
-                hash_cols.append(col)
+            channels["h", col] = (f"xxhash64({ident})", LongType())
         elif jvm_prehash and kind == "coverage":
-            flag_specs.append((col, plan.sketches[kind]))
+            missing = tuple(plan.sketches[kind].get("missing_symbols",
+                                                    ("", "{}")))
+            cond = f"{ident} IS NULL"
+            if missing:
+                dt = type_of(col)
+                symbols = ", ".join(map(sql_str, missing))
+                if isinstance(dt, StringType):
+                    # already a string — drop the no-op cast
+                    cond += f" OR {ident} IN ({symbols})"
+                elif (isinstance(dt, NumericType)
+                      and not any(map(_parses_as_number, missing))):
+                    # no number prints as "" or "{}": skip the per-row
+                    # cast (28 UTF8Strings per row on the ranking job's
+                    # interaction longs); missing iff NULL.  Maps render
+                    # "{}", so other types keep the cast below.
+                    pass
+                else:
+                    cond += f" OR CAST({ident} AS STRING) IN ({symbols})"
+            channels["m", col] = (
+                f"CAST(CASE WHEN {cond} THEN 1 ELSE 0 END AS TINYINT)",
+                ByteType())
         else:
-            raw_needed.add(col)
-    chans = _channels(plan)
-    exprs = [f"{sql_ident(c)} AS __c{i}" for c, i in chans.items()
-             if c in raw_needed]
-    for c in hash_cols:
-        exprs.append(f"xxhash64({sql_ident(c)}) AS __h{chans[c]}")
-    for c in length_cols:
-        exprs.append(f"octet_length(CAST({sql_ident(c)} AS STRING))"
-                     f" AS __b{chans[c]}")
-    types = {f.name: f.dataType for f in df.schema.fields}
-    for c, params in flag_specs:
-        missing = tuple(params.get("missing_symbols", ("", "{}")))
-        ident = sql_ident(c)
-        cond = f"{ident} IS NULL"
-        if missing:
-            dt = types.get(c)
-            symbols = ", ".join(map(sql_str, missing))
-            if isinstance(dt, StringType):
-                # already a string — drop the no-op cast
-                cond += f" OR {ident} IN ({symbols})"
-            elif (isinstance(dt, NumericType)
-                  and not any(map(_parses_as_number, missing))):
-                # no number prints as "" or "{}": skip the per-row
-                # cast (28 UTF8Strings per row on the ranking job's
-                # interaction longs); missing iff NULL.  Maps render
-                # "{}", so other types keep the cast below.
-                pass
-            else:
-                cond += f" OR CAST({ident} AS STRING) IN ({symbols})"
-        exprs.append(f"CAST(CASE WHEN {cond} THEN 1 ELSE 0 END AS TINYINT)"
-                     f" AS __m{chans[c]}")
-    return df.selectExpr(*exprs)
+            channels["c", col] = (ident, type_of(col))
+    return [(key, key[0], expr, dtype)
+            for key, (expr, dtype) in channels.items()]
+
+
+def _scan_plan(df, plan: SketchPlan, jvm_prehash: bool = True):
+    """The stage-1 relation: one ``(column, kind, blob)`` row per key
+    and partition, from one ``mapInArrow`` over the packed channels."""
+    layout = pack_channels(_scan_channels(df, plan, jvm_prehash),
+                           df.sparkSession)
+    return df.selectExpr(*layout.exprs).mapInArrow(
+        _build_partition(plan, layout), schema=_BLOB_SCHEMA)
 
 
 def build_sketches(df, plan: SketchPlan,
@@ -269,8 +284,7 @@ def build_sketches(df, plan: SketchPlan,
     transfers numeric columns (zero-copy) instead of Python string
     objects for every kind that never needs the raw value.
     """
-    pruned = _scan_inputs(df, plan, jvm_prehash)
-    blobs = pruned.mapInPandas(_build_partition(plan), schema=_BLOB_SCHEMA)
+    blobs = _scan_plan(df, plan, jvm_prehash)
     n_parts = blobs.rdd.getNumPartitions()
     if n_parts <= _MAX_DRIVER_PARTIALS:
         # what the tree does at this P (it has no merge level), minus

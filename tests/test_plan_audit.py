@@ -29,11 +29,11 @@ class TestPushdownAndPruning:
         assert "l_extendedprice" not in read_schema
 
     def test_sketch_scan_prunes_unused_columns(self, spark):
-        from outrank_spark.operators.sketch_build import SketchPlan, _scan_inputs
+        from outrank_spark.operators.sketch_build import SketchPlan, _scan_plan
 
         docs = spark.read.parquet(f"{SF}/documents.parquet")
         plan = SketchPlan(columns=["lang"], sketches={"hll": {"p": 12}})
-        scan = _scan_inputs(docs, plan, True)
+        scan = _scan_plan(docs, plan, True)
         read_schema = plan_of(scan).split("ReadSchema:")[-1]
         assert "lang" in read_schema
         assert "text" not in read_schema  # the heavy column stays cold

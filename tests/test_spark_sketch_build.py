@@ -12,11 +12,9 @@ from outrank_spark.operators.derived import (
     with_web_features,
 )
 from outrank_spark.operators.sketch_build import (
-    _BLOB_SCHEMA,
     SketchPlan,
-    _build_partition,
     _merge_partials,
-    _scan_inputs,
+    _scan_plan,
     build_grouped_sketches,
     build_sketches,
 )
@@ -129,8 +127,7 @@ class TestBuildSketches:
         )
         one = build_sketches(feats.repartition(1), plan)
         many = build_sketches(feats.repartition(16), plan)
-        rows = _scan_inputs(feats.repartition(16), plan, True).mapInPandas(
-            _build_partition(plan), schema=_BLOB_SCHEMA).collect()
+        rows = _scan_plan(feats.repartition(16), plan, True).collect()
         assert len(rows) > len(plan.keys())   # several partials per key
         reverse = {}
         for r in rows[::-1]:

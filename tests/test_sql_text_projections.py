@@ -10,6 +10,7 @@ the JVM, which dominates small ranking calls.
 from __future__ import annotations
 
 import csv
+import gc
 import threading
 import warnings
 from collections import Counter
@@ -27,7 +28,7 @@ from outrank_spark.operators.pair_scoring import (
 )
 from outrank_spark.operators.sketch_build import (
     SketchPlan,
-    _scan_inputs,
+    _scan_plan,
     build_sketches,
 )
 from outrank_spark.operators.transformers import with_baseline_features
@@ -136,8 +137,8 @@ def test_plan_building_round_trip_budget(spark):
     df.schema  # noqa: B018 - fetched once, outside the count
     plan = sketch_plan_for(RankingConfig(), cols)
     builds = {
-        "_scan_inputs": (lambda: _scan_inputs(df, plan, jvm_prehash=True),
-                         len(plan.keys())),    # raw, hash, flag channels
+        "_scan_plan": (lambda: _scan_plan(df, plan, jvm_prehash=True),
+                       len(plan.keys())),      # raw, hash, flag channels
         "deterministic_subsample": (
             lambda: deterministic_subsample(df, 10, key_cols=cols),
             len(cols)),                         # hash key columns
@@ -158,6 +159,38 @@ def test_plan_building_round_trip_budget(spark):
         trips[name] = n()
     n_exprs = sum(k for _, k in builds.values())
     assert sum(trips.values()) < 2 * n_exprs, (trips, n_exprs)
+
+
+def test_fold_udf_plans_round_trips_flat_in_width(spark):
+    """Building the sketch scan's and the scoring's UDF plans costs as
+    many py4j round trips at 200 features as at 10 (within 10): PySpark
+    resolves each UDF input column on the driver, and the inputs are a
+    few packed array columns, not one column per (feature, channel)."""
+
+    def trips(width):
+        cols = [f"f{i}" for i in range(width - 1)] + ["label"]
+        df = spark.range(4).selectExpr(
+            *[f"CAST(id AS STRING) AS {c}" for c in cols])
+        df.schema  # noqa: B018 - fetched once, outside the count
+        plan = sketch_plan_for(RankingConfig(), cols)
+        builds = {
+            "sketch scan": lambda: _scan_plan(df, plan),
+            "scoring": lambda: score_batches(
+                df, cols, [("label", c) for c in cols],
+                "MI-numba-randomized", "label", n_batches=2),
+        }
+        out = {}
+        for name, build in builds.items():
+            gc.collect()   # no py4j object releases inside the count
+            with count_round_trips() as n:
+                build()
+            out[name] = n()
+        return out
+
+    trips(10)   # warm-up: first-use costs of either plan
+    narrow, wide = trips(10), trips(200)
+    for name in narrow:
+        assert abs(wide[name] - narrow[name]) < 10, (narrow, wide)
 
 
 def test_run_ranking_warns_nothing(spark):

@@ -14,8 +14,9 @@ import zipfile
 import zipimport
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql.types import LongType, StringType
 
 from outrank_spark.operators.pair_scoring import _score_group
 from outrank_spark.operators.sketch_build import (
@@ -24,6 +25,7 @@ from outrank_spark.operators.sketch_build import (
     _build_partition,
     _merge_partials,
 )
+from outrank_spark.operators import pack_channels
 
 PKG = "outrank_zip_probe"
 
@@ -61,8 +63,12 @@ _PLAN = SketchPlan(columns=["a", "b"],
 
 
 def _scan_partition():
-    batch = pd.DataFrame({"__c0": ["x", "y", "x"], "__c1": ["1", "2", "3"]})
-    blobs = list(_build_partition(_PLAN)(iter([batch])))
+    # raw string values of a and b, packed as the scan packs them
+    layout = pack_channels([(("c", c), "c", c, StringType())
+                            for c in _PLAN.columns])
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([["x", "1"], ["y", "2"], ["x", "3"]])], names=["__p0"])
+    blobs = list(_build_partition(_PLAN, layout)(iter([batch])))
     assert len(blobs) == 1 and len(blobs[0]) == len(_PLAN.keys())
 
 
@@ -78,14 +84,16 @@ def _score_minibatch():
     rng = np.random.default_rng(0)
     n = 64
     good = rng.integers(0, 4, n)
-    pdf = pd.DataFrame({"__f0": good % 2, "__f1": good,
-                        "__f2": rng.integers(0, 4, n),
-                        "_rk": np.arange(n), "batch_id": 3})
-    fn = _score_group({"__f0": "label", "__f1": "good", "__f2": "noise"},
-                      ["label", "good", "noise"],
+    columns = ["label", "good", "noise"]
+    # the three features' values, packed as score_batches packs them
+    layout = pack_channels([(c, "value", c, LongType()) for c in columns])
+    values = np.column_stack([good % 2, good, rng.integers(0, 4, n)])
+    table = pa.table({"__p0": pa.array(values.tolist(), pa.list_(pa.int64())),
+                      "_rk": np.arange(n), "batch_id": np.full(n, 3)})
+    fn = _score_group(layout, columns,
                       [("label", "good"), ("label", "noise")],
                       "MI-numba-randomized", "label", 1.0, ())
-    out = fn(pdf)
+    out = fn(table).to_pandas()
     assert out["batch_id"].tolist() == [3, 3]
     assert out["feature_b"].tolist() == ["good", "noise"]
 
