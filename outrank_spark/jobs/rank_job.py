@@ -139,6 +139,8 @@ def _get_spark(args):
         b = b.config("spark.sql.shuffle.partitions",
                      str(args.shuffle_partitions))
     b = b.config("spark.sql.adaptive.enabled", "true")
+    # results reach pandas (the triplets' toPandas) through Arrow
+    b = b.config("spark.sql.execution.arrow.pyspark.enabled", "true")
     return b.getOrCreate()
 
 

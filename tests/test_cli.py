@@ -41,6 +41,22 @@ class TestCliParser:
         assert args.subsampling == 100
         assert args.transformers == "fw-transformers"
 
+    def test_session_collects_through_arrow(self, monkeypatch):
+        """The CLI's session has the Arrow conversion on, as the
+        benchmark's session has: its triplets reach pandas through
+        Arrow."""
+        from pyspark.sql import SparkSession
+
+        from outrank_spark.jobs import rank_job
+
+        # _get_spark prepends the package to PYTHONPATH; undone after
+        monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+        monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                            lambda builder: builder._options)
+        options = rank_job._get_spark(
+            rank_job.build_parser().parse_args(["--task", "ranking"]))
+        assert options["spark.sql.execution.arrow.pyspark.enabled"] == "true"
+
     def test_missing_data_path_exits(self):
         from outrank_spark.jobs.rank_job import main
 
