@@ -223,6 +223,17 @@ def _enrich(df, info, args):
     return df, new_cols
 
 
+def _checkpoint_slicing(columns, n: int) -> tuple[str, str]:
+    """(accumulator context, SQL slice key) of ``n`` checkpoint slices.
+    The key is a salted hash: the subsample keeps only rows whose
+    unsalted hash of the same columns is 0 mod ``--subsampling``, so
+    that hash mod ``n`` would leave slices empty.  The context names
+    the salted key, so state cut by the former key is refused."""
+    idents = ", ".join(map(sql_ident, columns))
+    return (f"cli-slices={n},salted",
+            f"pmod(xxhash64('checkpoint-slice', {idents}), {n})")
+
+
 def _run_ranking_checkpointed(spark, df, cfg, args):
     """Resumable ranking (north rule: resume mid-scan with lineage +
     metrics): the (subsampled) input is split into ``checkpoint_slices``
@@ -242,7 +253,6 @@ def _run_ranking_checkpointed(spark, df, cfg, args):
     ``checkpoint_slices`` times (the filter pushes to the scan but
     parquet decode repeats) — the price of slice-granular resume;
     size slices to the failure domain, not the core count."""
-    from outrank_spark.operators.pair_scoring import _xxhash64_sql
     from outrank_spark.streaming.ranking_stream import (
         StreamingRankingAccumulator,
     )
@@ -252,11 +262,9 @@ def _run_ranking_checkpointed(spark, df, cfg, args):
     # it), so slices are cut from the full relation
     sub = df.selectExpr(*map(sql_ident, columns))
     n = max(1, args.checkpoint_slices)
-    slice_key = f"pmod({_xxhash64_sql(columns)}, {n})"
+    context, slice_key = _checkpoint_slicing(columns, n)
     acc = StreamingRankingAccumulator(
-        cfg, state_dir=args.checkpoint_dir,
-        context=f"cli-slices={n}",
-    )
+        cfg, state_dir=args.checkpoint_dir, context=context)
     done = {b["batch_id"] for b in acc.batches_seen}
     if done:
         logger.info("checkpoint resume: slices %s already done",

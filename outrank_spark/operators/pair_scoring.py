@@ -70,8 +70,12 @@ def _xxhash64_sql(columns: Sequence[str]) -> str:
 
 
 def _batch_id_sql(keys: Sequence[str], n_batches: int) -> str:
-    """The minibatch of a row, from the SQL key expressions ``keys``."""
-    return f"pmod(xxhash64({', '.join(keys)}), {int(n_batches)})"
+    """The minibatch of a row, from the SQL key expressions ``keys``.
+    The hash is salted: ``deterministic_subsample`` keeps only rows
+    whose unsalted hash of the same columns is 0 mod the subsampling,
+    so that hash mod ``n_batches`` would leave minibatches empty."""
+    return (f"pmod(xxhash64('minibatch', {', '.join(keys)}), "
+            f"{int(n_batches)})")
 
 
 def assign_batches(df: DataFrame, n_batches: int,

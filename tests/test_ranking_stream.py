@@ -272,14 +272,13 @@ class TestCheckpointedCliRanking:
         ref = _run_ranking_checkpointed(spark, df, cfg, ref_args)
 
         # "crash" after 2 of 4 slices: process them manually
-        from pyspark.sql import functions as F
+        from outrank_spark.jobs.rank_job import _checkpoint_slicing
 
-        cols = list(df.columns)
-        sl = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(4))
+        context, slice_key = _checkpoint_slicing(list(df.columns), 4)
         acc = StreamingRankingAccumulator(
-            cfg, state_dir=args.checkpoint_dir, context="cli-slices=4")
+            cfg, state_dir=args.checkpoint_dir, context=context)
         for i in (0, 1):
-            acc.process_batch(df.where(sl == i), batch_id=i)
+            acc.process_batch(df.where(f"{slice_key} = {i}"), batch_id=i)
         del acc  # crash
 
         res = _run_ranking_checkpointed(spark, df, cfg, args)
@@ -322,13 +321,17 @@ class TestCheckpointedCliRanking:
         import os
         from dataclasses import replace
 
-        from outrank_spark.jobs.rank_job import _run_ranking_checkpointed
+        from outrank_spark.jobs.rank_job import (
+            _checkpoint_slicing,
+            _run_ranking_checkpointed,
+        )
 
         rng = np.random.default_rng(9)
         df = spark.createDataFrame(_chunk(rng, 300))
         args = self._args(tmp_path)
+        context, _ = _checkpoint_slicing(list(df.columns), 4)
         acc = StreamingRankingAccumulator(
-            _cfg(), state_dir=args.checkpoint_dir, context="cli-slices=4")
+            _cfg(), state_dir=args.checkpoint_dir, context=context)
         acc.process_batch(df, batch_id=0)
         path = os.path.join(args.checkpoint_dir, "ranking_state.bin")
         with open(path) as f:
@@ -346,11 +349,11 @@ class TestCheckpointedCliRanking:
         os.remove(path)
         StreamingRankingAccumulator(
             _cfg(), state_dir=args.checkpoint_dir,
-            context="cli-slices=4").process_batch(df, batch_id=0)
+            context=context).process_batch(df, batch_id=0)
         with pytest.raises(ValueError, match="sketch plan"):
             StreamingRankingAccumulator(
                 replace(_cfg(), hll_p=10), state_dir=args.checkpoint_dir,
-                context="cli-slices=4")
+                context=context)
 
     def test_empty_micro_batch_is_recorded_not_crashed(self, spark, tmp_path):
         """Empty micro-batches are normal in foreachBatch (idle
