@@ -90,11 +90,10 @@ def mixed(spark):
 def _reference_sketches(df, plan, jvm_prehash):
     """The build with one Spark column per channel, through
     ``mapInPandas``."""
-    chans = [key for key, *_ in _scan_channels(df, plan, jvm_prehash)]
-    proj = df.selectExpr(*[
-        f"{expr} AS r{j}"
-        for j, (_, _, expr, _) in enumerate(
-            _scan_channels(df, plan, jvm_prehash))])
+    channels = _scan_channels(df, plan, jvm_prehash)
+    chans = [key for key, *_ in channels]
+    proj = df.selectExpr(*[f"{expr} AS r{j}"
+                           for j, (_, _, expr, _) in enumerate(channels)])
 
     def fn(batches):
         local = {key: plan.make(key[1]) for key in plan.keys()}
