@@ -297,11 +297,6 @@ def _task_ranking(spark, args) -> None:
     t0 = time.time()
     timings = []
     info = read_dataset(spark, args.data_path, args.data_source)
-    if info.invalid_lines is not None:
-        n_bad, samples = invalid_line_summary(info)
-        if n_bad:
-            logger.info("%d invalid lines (first %d kept for "
-                        "inspection)", n_bad, len(samples))
     df, derived = _enrich(info.df, info, args)
 
     columns = list(df.columns)
@@ -314,6 +309,15 @@ def _task_ranking(spark, args) -> None:
         result = _run_ranking_checkpointed(spark, df, cfg, args)
     else:
         result = run_ranking(spark, df, cfg)
+    # after the fold, whose count and sketch scan are full passes: the
+    # reader's observed count is read without a job.  The actions
+    # before the fold (transformer and interaction aggregates) are
+    # full single passes too; a partial action or a sort there would
+    # leave a partial or a multiple count.
+    n_bad, samples = invalid_line_summary(info, observed=True)
+    if n_bad:
+        logger.info("%d invalid lines (first %d kept for "
+                    "inspection)", n_bad, len(samples))
     timings.append({"phase": "ranking",
                     "wall_sec": round(time.time() - t0, 3)})
 

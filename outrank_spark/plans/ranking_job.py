@@ -15,7 +15,7 @@ checkpointed CLI run use too:
      with
   3. minibatch pair scoring: a row count sizes the reference's
      minibatches of ``minibatch_size`` rows, then batch assignment ->
-     ``applyInPandas`` scoring of the pairs ``plan_pairs`` plans ->
+     ``applyInArrow`` scoring of the pairs ``plan_pairs`` plans ->
      raw triplets, collected to the driver;
   4. ``finalize`` on the driver: symmetrised pandas median of each
      pair's minibatch scores (core_ranking.py:572-580),

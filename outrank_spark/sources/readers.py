@@ -10,9 +10,10 @@ string feature columns plus the resolved numeric-column set.
 | ob-raw-dump  | raw_data/1_train/* TSV shards + header file       |
 
 Both CSV layouts share one read path (:func:`_read_csv`) that always
-checks line width: each line is parsed once, and lines whose width
+checks line width: each pass parses a line once, lines whose width
 differs from the header's are dropped from ``df`` and kept as
-``DatasetInfo.invalid_lines`` (reference core_ranking.py:641-653).
+``DatasetInfo.invalid_lines``, and the first full pass counts them
+(reference core_ranking.py:641-653).
 
 The vw reader is the other nontrivial one: sparse ``|NS v1 v2`` groups
 pivot to dense named columns through the namespace map
@@ -36,7 +37,7 @@ from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from outrank_spark.hashing import sql_ident
 
 __all__ = ["DatasetInfo", "read_csv_raw", "read_ob_csv", "read_ob_vw",
@@ -56,6 +57,8 @@ class DatasetInfo:
     # wrong-width csv lines (lazy relation of raw ``line`` strings;
     # None for sources without a line-width check)
     invalid_lines: DataFrame | None = None
+    # their count ``{"n": ...}``, observed by the first full pass
+    invalid_count: Observation | None = None
 
 
 def _require_local_file(path: str, what: str) -> None:
@@ -136,9 +139,9 @@ def read_zst_lines(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _read_csv(spark: SparkSession, path: str) -> DatasetInfo:
-    """The one CSV read path: every line parsed once, wrong-width
-    lines split out (reference core_ranking.py:648-653 keeps lines
-    whose parsed width matches the header and queues the rest).
+    """The one CSV read path: wrong-width lines split out (reference
+    core_ranking.py:648-653 keeps lines whose parsed width matches the
+    header and queues the rest).
 
     ONE ``text`` scan + a ``from_csv`` corrupt-record expression drives
     both relations, so valid and invalid lines get the SAME parser
@@ -150,21 +153,36 @@ def _read_csv(spark: SparkSession, path: str) -> DatasetInfo:
     QUERY_ONLY_CORRUPT_RECORD_COLUMN; ``from_csv`` is an expression,
     exempt from all three.
 
-    * valid rows (``df``): corrupt column null, header line excluded
-      (any data line byte-identical to the header is dropped too —
-      documented divergence from the reference's skip-first-line,
-      negligible on real data);
-    * invalid rows (``invalid_lines``): corrupt column set; the
-      ORIGINAL line is reported like the reference's
-      invalid_line_queue.
+    Where ``from_csv`` runs: once per line per pass, in the projection
+    right above the scan.  Its struct is expanded by a Generate
+    (``inline``) over EVERY line, which carries the raw line along
+    under the reserved name ``_line`` (the corrupt column is ``_c``);
+    only then are lines filtered.  Catalyst inlines ``from_csv`` into
+    every ``p.field`` access and every filter over one, so any
+    expression reading the struct above the scan would parse again
+    (k fields read = k parsers per line); it pushes nothing that
+    reads the Generate's output below the Generate, so the subsample
+    hash and the ``_c`` test stay above it.  The header test reads
+    only ``_line`` and is pushed below the Generate.
 
-    The parsed struct is expanded by a Generate (``inline``) rather
-    than by field accesses: Catalyst inlines ``from_csv`` into every
-    ``p.field`` access, and pushes filters that read the fields (the
-    subsample's hash) below a projection and even below a shuffle
-    barrier — k fields read = k CSV parsers per row.  It pushes
-    nothing below a Generate, so each scan parses a line once, with no
-    shuffle.
+    * valid rows (``df``): ``_c`` null, header line excluded (any data
+      line byte-identical to the header is dropped too — documented
+      divergence from the reference's skip-first-line, negligible on
+      real data);
+    * invalid rows (``invalid_lines``): ``_c`` set; the ORIGINAL line
+      is reported like the reference's invalid_line_queue.
+
+    The invalid count is observed as well as queried: one
+    ``Observation`` (``invalid_count``) counts ``_c`` over the parsed
+    lines, below every filter.  Spark pushes no filter through it, so
+    the first action to complete over either relation records the
+    count of the lines that flowed through it: exact after one full
+    pass (a count, the sketch scan, an aggregate), partial after a
+    partial action (``first()``, or ``limit(k)`` with no aggregate
+    below it), and a multiple after an action that evaluates the lines
+    twice (a sort samples its input for range partitioning first).
+    :func:`invalid_line_summary` reads it only when its caller says the
+    first action was one full pass.
 
     Contract: ``path`` must be one local file (enforced) — the header
     line is read driver-side and excluded by byte-match, which is only
@@ -180,31 +198,48 @@ def _read_csv(spark: SparkSession, path: str) -> DatasetInfo:
     # files — strip it, or the header byte-match misses and the last
     # field of every row carries \r
     line = F.regexp_replace(F.col("value"), "\r$", "")
-    parsed = spark.read.text(path).select(
-        line.alias("value"),
-        F.from_csv(line, schema + ", `_c` string", opts).alias("p"),
+    invalid_count = Observation()
+    parsed = (
+        spark.read.text(path)
+        .select(line.alias("_line"),
+                F.from_csv(line, schema + ", `_c` string", opts).alias("p"))
+        .observe(invalid_count,
+                 F.count_if(F.col("p._c").isNotNull()).alias("n"))
+        .select("_line", F.inline(F.array("p")))
     )
     valid = (
-        parsed.filter(F.col("p._c").isNull()
-                      & (F.col("value") != raw_header))
-        .select(F.inline(F.array("p")))
-        .drop("_c")
+        parsed.filter(F.col("_c").isNull() & (F.col("_line") != raw_header))
+        .drop("_c", "_line")
     )
-    invalid = (
-        parsed.filter(F.col("p._c").isNotNull())
-        .select(F.col("value").alias("line"))
-    )
-    return DatasetInfo(df=valid, column_names=header, invalid_lines=invalid)
+    invalid = parsed.filter(F.col("_c").isNotNull()) \
+        .select(F.col("_line").alias("line"))
+    return DatasetInfo(df=valid, column_names=header, invalid_lines=invalid,
+                       invalid_count=invalid_count)
 
 
 def invalid_line_summary(info: DatasetInfo,
                          max_samples: int = _INVALID_QUEUE_LEN,
+                         observed: bool = False,
                          ) -> tuple[int, list[str]]:
     """(count, up to ``max_samples`` raw lines) — the reference's
-    ``invalid_lines`` counter + bounded ``invalid_line_queue``."""
+    ``invalid_lines`` counter + bounded ``invalid_line_queue``.
+
+    ``observed=True`` says the first action to complete over
+    ``info``'s lines was one full pass (the CLI's fold is); the count
+    is then read from ``info.invalid_count`` without a job once that
+    pass has completed.  Otherwise, or when no pass has completed yet
+    (a checkpoint resume that finds every slice done runs none), the
+    lines are counted here; the summary never waits for a pass.  The
+    samples are collected only when a line is invalid."""
     if info.invalid_lines is None:
         return 0, []
-    count = info.invalid_lines.count()
+    seen = info.invalid_count
+    # PySpark's ``Observation.get`` blocks until an action completes;
+    # the JVM observation's future tells without waiting
+    if observed and seen is not None and seen._jo.future().isCompleted():
+        count = seen.get["n"]
+    else:
+        count = info.invalid_lines.count()
     if not count:
         return 0, []
     return count, [r["line"] for r in

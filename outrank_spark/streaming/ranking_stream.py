@@ -9,7 +9,7 @@ running estimate, checkpoint so a crash resumes mid-scan
 one batch — a ``foreachBatch`` micro-batch, a checkpointed CLI slice or
 ``run_ranking``'s whole input:
 
-1. subsample, then build the mergeable sketches (one ``mapInPandas``
+1. subsample, then build the mergeable sketches (one ``mapInArrow``
    scan; merge associativity makes stream == batch bitwise) on a
    one-worker pool, while the driver
 2. counts the rows and scores the ``plan_pairs`` pairs with the SAME

@@ -64,33 +64,187 @@ class TestCliParser:
             main(["--task", "ranking"])
 
 
+_BAD_LINES = ["1,2,3", "0,1,2,3,4,5,6,7", "x"]
+
+
+def _write_csv(folder, bad=()):
+    """400-row csv-raw file of a label and six features, with the
+    ``bad`` wrong-width lines spread through it."""
+    folder.mkdir()
+    rows = [",".join(["label", *[f"f{k}" for k in range(6)]])]
+    rows += [",".join([str(i % 2), *[str((i * (k + 3)) % (k + 5))
+                                     for k in range(6)]])
+             for i in range(400)]
+    for j, line in enumerate(bad):
+        rows.insert(50 + 100 * j, line)
+    (folder / "data.csv").write_text("\n".join(rows) + "\n")
+    return str(folder)
+
+
+def _ranking_args(data, out, *extra):
+    from outrank_spark.jobs import rank_job
+
+    return rank_job.build_parser().parse_args([
+        "--task", "ranking", "--data_source", "csv-raw",
+        "--data_path", data, "--subsampling", "2",
+        "--output_folder", out, "--tldr", "False", *extra,
+    ])
+
+
+def _reports(folder):
+    """{name: bytes} of a call's report files, without the ones that
+    record the call itself (wall times, arguments, slice metrics)."""
+    skip = {"timings.json", "arguments.json", "checkpoint_metrics.json"}
+    return {name: open(os.path.join(folder, name), "rb").read()
+            for name in sorted(os.listdir(folder)) if name not in skip}
+
+
 class TestCliJobBudget:
     def test_csv_raw_ranking_call_job_budget(self, spark, tmp_path,
                                              count_jobs):
         """One in-process ``--task ranking --data_source csv-raw`` call
-        on a small clean file runs at most 7 Spark jobs: the sketch
-        scan folds its partials on the driver (no shuffle), memory.tsv
-        comes from that scan, a clean file's invalid-line summary is a
-        single count, and the median over minibatches is taken on the
-        driver (no shuffle)."""
+        on a small clean file runs at most 5 Spark jobs: the fold's row
+        count (2 jobs under AQE), the sketch scan, whose partials are
+        folded on the driver and which also yields memory.tsv, and the
+        scoring with its shuffle.  The median over minibatches is taken
+        on the driver, and the invalid-line count is observed by the
+        fold's passes, not counted again."""
         from outrank_spark.jobs import rank_job
 
-        data = tmp_path / "data"
-        data.mkdir()
-        rows = [",".join(["label", *[f"f{k}" for k in range(6)]])]
-        rows += [",".join([str(i % 2), *[str((i * (k + 3)) % (k + 5))
-                                         for k in range(6)]])
-                 for i in range(400)]
-        (data / "data.csv").write_text("\n".join(rows) + "\n")
-        args = rank_job.build_parser().parse_args([
-            "--task", "ranking", "--data_source", "csv-raw",
-            "--data_path", str(data), "--subsampling", "2",
-            "--output_folder", str(tmp_path / "out"), "--tldr", "False",
-        ])
+        data = _write_csv(tmp_path / "data")
         with count_jobs() as n:
-            rank_job.run_task(spark, args)
+            rank_job.run_task(spark, _ranking_args(data,
+                                                   str(tmp_path / "out")))
         assert os.path.exists(tmp_path / "out" / "memory.tsv")
-        assert n["jobs"] <= 7, n
+        assert n["jobs"] <= 5, n
+
+    def test_dirty_file_job_budget(self, spark, tmp_path, count_jobs):
+        """A file with wrong-width lines adds one job to the clean
+        file's budget: the collect of the sampled invalid lines."""
+        from outrank_spark.jobs import rank_job
+
+        data = _write_csv(tmp_path / "data", _BAD_LINES)
+        with count_jobs() as n:
+            rank_job.run_task(spark, _ranking_args(data,
+                                                   str(tmp_path / "out")))
+        assert n["jobs"] <= 6, n
+
+
+class TestCliInvalidLines:
+    """The CLI reports wrong-width lines after the fold, from the
+    count the reader observes during the fold's passes."""
+
+    @pytest.fixture
+    def summaries(self, monkeypatch, caplog):
+        """(log lines about invalid lines, summaries the CLI took)."""
+        import logging
+
+        from outrank_spark.sources import readers
+
+        seen = []
+        summary = readers.invalid_line_summary
+
+        def recording(*args, **kwargs):
+            seen.append(summary(*args, **kwargs))
+            return seen[-1]
+
+        monkeypatch.setattr(readers, "invalid_line_summary", recording)
+        caplog.set_level(logging.INFO, logger="outrank-spark")
+
+        def logged():
+            return [r.getMessage() for r in caplog.records
+                    if "invalid lines" in r.getMessage()]
+
+        return logged, seen
+
+    def test_dirty_file_logs_count_and_samples(self, spark, tmp_path,
+                                               summaries):
+        from outrank_spark.jobs import rank_job
+
+        logged, seen = summaries
+        data = _write_csv(tmp_path / "data", _BAD_LINES)
+        rank_job.run_task(spark, _ranking_args(data, str(tmp_path / "out")))
+        assert seen == [(3, _BAD_LINES)]
+        assert logged() == ["3 invalid lines (first 3 kept for inspection)"]
+
+    def test_resume_with_every_slice_done_finishes(self, spark, tmp_path,
+                                                   monkeypatch, summaries):
+        """A resume that finds every slice done runs no pass over the
+        lines, so the summary counts them instead of waiting for an
+        observed pass.  The call runs on a thread, so a hang fails the
+        test instead of stalling the suite."""
+        import threading
+
+        from outrank_spark.jobs import rank_job
+        from outrank_spark.streaming.ranking_stream import (
+            StreamingRankingAccumulator,
+        )
+
+        logged, seen = summaries
+        data = _write_csv(tmp_path / "data", _BAD_LINES)
+        ckpt = ["--checkpoint_dir", str(tmp_path / "ckpt"),
+                "--checkpoint_slices", "3"]
+        rank_job.run_task(spark, _ranking_args(
+            data, str(tmp_path / "whole"),
+            "--checkpoint_dir", str(tmp_path / "ckpt-whole"),
+            "--checkpoint_slices", "3"))
+
+        def crash(self):  # every slice persisted, state file not removed
+            raise RuntimeError("crash before the state file is removed")
+
+        with monkeypatch.context() as m:
+            m.setattr(StreamingRankingAccumulator, "result", crash)
+            with pytest.raises(RuntimeError, match="crash"):
+                rank_job.run_task(spark, _ranking_args(
+                    data, str(tmp_path / "out"), *ckpt))
+        assert os.path.exists(tmp_path / "ckpt" / "ranking_state.bin")
+
+        failed = []
+
+        def resume():
+            try:
+                rank_job.run_task(spark, _ranking_args(
+                    data, str(tmp_path / "out"), *ckpt))
+            except BaseException as e:  # noqa: BLE001 -- reported below
+                failed.append(e)
+
+        thread = threading.Thread(target=resume, daemon=True)
+        thread.start()
+        thread.join(timeout=300)
+        assert not thread.is_alive(), "resumed call did not finish"
+        assert not failed, failed
+        assert not os.path.exists(tmp_path / "ckpt" / "ranking_state.bin")
+        assert _reports(tmp_path / "out") == _reports(tmp_path / "whole")
+        assert seen == [(3, _BAD_LINES)] * 2
+        assert logged() == ["3 invalid lines (first 3 kept for "
+                            "inspection)"] * 2
+
+    def test_transformers_before_fold_keep_count(self, spark, tmp_path,
+                                                 summaries):
+        """``--transformers`` aggregates the numeric columns before the
+        fold; those passes complete the observed count first, and it is
+        still the number of wrong-width lines."""
+        import json
+
+        from outrank_spark.jobs import rank_job
+
+        logged, seen = summaries
+        data = _write_csv(tmp_path / "data", _BAD_LINES)
+        (tmp_path / "data" / "dataset_desc.json").write_text(json.dumps({
+            "data_features": [
+                {"name": "label", "type": "categorical"},
+                *[{"name": f"f{k}", "type": "float" if k < 2 else "cat"}
+                  for k in range(6)]],
+        }))
+        args = _ranking_args(data, str(tmp_path / "out"),
+                             "--transformers", "default")
+        args.data_source = "ob-csv"
+        rank_job.run_task(spark, args)
+        singles = open(tmp_path / "out" / "feature_singles.tsv").read()
+        assert "f0_tr_" in singles, "no transformer feature was ranked"
+        assert seen == [(3, _BAD_LINES)]
+        assert logged() == ["3 invalid lines (first 3 kept for "
+                            "inspection)"]
 
 
 @pytest.mark.slow

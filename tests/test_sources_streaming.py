@@ -84,6 +84,31 @@ class TestCsvRaw:
         assert "Exchange" not in narrow and "Exchange" not in wide
         assert narrow.count("from_csv") == wide.count("from_csv") > 0
 
+    def test_one_parse_per_pass_same_rows(self, spark, tmp_path):
+        """The executed plan of the valid rows holds one CSV parser,
+        with or without the subsample on top, and the split into valid
+        rows and invalid lines is unchanged: short, long and
+        CRLF-terminated lines, a line equal to the header, a quoted
+        comma and an empty line."""
+        from outrank_spark.operators.pair_scoring import (
+            deterministic_subsample,
+        )
+
+        d = tmp_path / "mixed"
+        d.mkdir()
+        (d / "data.csv").write_bytes(
+            b'a,b,label\n1,2,0\nx,bad\n3,4,1\r\nx,y,bad,z\na,b,label\n'
+            b'5,"6,7",1\n\nshort\r\n8,9,0\n')
+        info = read_csv_raw(spark, str(d))
+        for df in (info.df, deterministic_subsample(info.df, 2)):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("from_csv(") == 1, plan
+        assert [tuple(r) for r in info.df.collect()] == [
+            ("1", "2", "0"), ("3", "4", "1"), ("5", "6,7", "1"),
+            (None, None, None), ("8", "9", "0")]
+        assert [r["line"] for r in info.invalid_lines.collect()] == [
+            "x,bad", "x,y,bad,z", "short"]
+
     def test_wrong_width_lines_dropped_under_pruning(self, spark, tmp_path):
         d = tmp_path / "dirty"
         d.mkdir()

@@ -24,6 +24,7 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STDERR_TAIL_LINES = 40
 
 
 def run_once(checkout: str, args) -> dict[str, float]:
@@ -32,7 +33,11 @@ def run_once(checkout: str, args) -> dict[str, float]:
         [sys.executable, "perfbench/run.py", "--workload", args.workload,
          "--seed", str(args.seed), "--seconds", str(args.seconds),
          "--trace", "0"],
-        cwd=checkout, capture_output=True, text=True, check=True)
+        cwd=checkout, capture_output=True, text=True)
+    if out.returncode:
+        tail = "\n".join(out.stderr.splitlines()[-STDERR_TAIL_LINES:])
+        raise SystemExit(f"{checkout}: perfbench/run.py exited with "
+                         f"{out.returncode}; stderr ends:\n{tail}")
     result = json.loads(out.stdout.strip().splitlines()[-1])
     if not result["correct"]:
         raise SystemExit(f"{checkout}: {result['failed']} failed operations")
