@@ -4,8 +4,9 @@ approximate-aggregation engine.
 A from-scratch rebuild of the capabilities of outbrain-inc/outrank
 (reference, read-only, at /root/reference) on idiomatic PySpark:
 DataFrame/SQL plans optimized by Catalyst, mergeable numpy sketch
-kernels carried through vectorized Arrow batches (mapInPandas /
-applyInPandas), and driver-side planning for pair enumeration and 3MR.
+kernels carried through vectorized Arrow batches (mapInArrow /
+applyInArrow on the ranking path, mapInPandas elsewhere), and
+driver-side planning for pair enumeration and 3MR.
 
 Layers (SURVEY.md §7.1):
   sketches/   pure-numpy mergeable kernels (HLL, CMS, Bloom, KLL,
@@ -17,9 +18,12 @@ Layers (SURVEY.md §7.1):
   sources/    readers + deterministic synthetic generators (pages,
               ranking matrices, csv-raw/vw parsers)
   plans/      driver-side planning: combinations, prior sampling,
-              3MR, ranking pipeline, checkpoint/resume
-  streaming/  Structured Streaming variants (foreachBatch sketch
-              accumulation)
+              3MR, ranking pipeline (its finalisation and reports)
+  streaming/  Structured Streaming: the foreachBatch folds (ranking,
+              sketches, sliding-window distinct counts) with their one
+              resumable state record (state.py, which the CLI's
+              --checkpoint_dir resume uses too), keyed sketch state and
+              event streams
 """
 from __future__ import annotations
 

@@ -239,7 +239,7 @@ def _run_ranking_checkpointed(spark, df, cfg, args):
     metrics): the (subsampled) input is split into ``checkpoint_slices``
     deterministic hash slices; each slice is one accumulator batch —
     sketches folded, pairs scored, triplets appended, ALL persisted in
-    one atomic file (streaming/ranking_stream.py).  Rerunning the same
+    one atomic file (streaming/state.py).  Rerunning the same
     command after a crash restores state and skips completed slices.
     Per-slice metrics (rows, pairs, wall seconds) land in
     ``checkpoint_metrics.json``; the state file is removed on success,
@@ -276,9 +276,7 @@ def _run_ranking_checkpointed(spark, df, cfg, args):
     with open(os.path.join(args.output_folder,
                            "checkpoint_metrics.json"), "w") as f:
         json.dump(acc.batches_seen, f)
-    state = os.path.join(args.checkpoint_dir, "ranking_state.bin")
-    if os.path.exists(state):
-        os.remove(state)
+    acc.store.clear()
     return result
 
 

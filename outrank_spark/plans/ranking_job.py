@@ -74,22 +74,11 @@ class RankingConfig:
     interaction_order: int = 1
     max_unique_hist_constraint: int = 30_000
     seed: int = 123
-    # extra sketch kinds beyond the reference's HLL + bounded counter
-    # (e.g. {"cms": {"depth": 6, "width": 2**13}}); kept OUT of the
-    # default plan — every partition's CMS blob is collected to the
-    # driver (tree-merged past 5 partitions) and the reference's
-    # ranking flow never consumes a CMS
-    extra_sketches: dict | None = None
     # parity-HLL precision: p=19 reproduces the reference bitwise;
     # smaller p bounds the per-partition blob collected (or
     # tree-merged) for very wide feature sets (name cardinalities cap
     # at 2^p, like the reference's 2^19)
     hll_p: int | None = None
-    # exact value counters only make sense for base columns — derived
-    # feature values (interaction hashes, transformer outputs) are
-    # near-unique and blow up the per-partition counter partials that
-    # are collected to the driver (tree-merged past 5 partitions)
-    counter_exclude_derived: bool = True
     # optional reference-model JSON: candidates are scored conditioned
     # on the model's features, and pairs touching model features are
     # dropped (core_ranking.py:205-215; importance_estimator.py:55-71)
@@ -122,23 +111,19 @@ def sketch_plan_for(cfg: RankingConfig, columns: list[str]) -> SketchPlan:
         "counter": {"bound": cfg.max_unique_hist_constraint},
         "coverage": {"missing_symbols": cfg.missing_value_symbols},
         "bytes": {},
-        **(cfg.extra_sketches or {}),
     }
     if cfg.rare_value_count_upper_bound is not None:
         sketch_kinds["rare"] = {"bound": cfg.rare_value_count_upper_bound}
-    kind_columns = None
-    if cfg.counter_exclude_derived:
-        base_cols = [
-            c for c in columns
-            if " AND" not in c and "_tr_" not in c
-            and not c.startswith(("CONTROL-", "SUBFEATURE", "MULTIEX-"))
-        ]
-        # derived values (interaction hashes etc.) are near-unique —
-        # exact value state on them explodes; same guard for both
-        # exact-count kinds
-        kind_columns = {"counter": base_cols, "rare": base_cols}
+    # derived values (interaction hashes, transformer outputs) are
+    # near-unique — exact value state on them blows up the partials
+    # collected to the driver; same guard for both exact-count kinds
+    base_cols = [
+        c for c in columns
+        if " AND" not in c and "_tr_" not in c
+        and not c.startswith(("CONTROL-", "SUBFEATURE", "MULTIEX-"))
+    ]
     return SketchPlan(columns=columns, sketches=sketch_kinds,
-                      kind_columns=kind_columns)
+                      kind_columns={"counter": base_cols, "rare": base_cols})
 
 
 def run_ranking(spark, df: DataFrame, cfg: RankingConfig) -> RankingResult:

@@ -3,8 +3,8 @@
 The ``counter``, ``rare``, ``kll``, ``mg`` and ``wmg`` blobs are
 protocol-4 pickles of plain state: dicts, lists, strings, bytes and
 numbers, which pickle as opcodes, plus the column values a sketch
-counts.  They also come back from state files (``ranking_state.bin``),
-so :func:`loads` resolves only the globals those values need; any
+counts.  They also come back from the folds' state files
+(``streaming/state.py``), so :func:`loads` resolves only the globals those values need; any
 other global (a callable that opens a file, starts a process, ...)
 raises ``ValueError`` before it runs.
 """

@@ -169,18 +169,21 @@ def _read_csv(spark: SparkSession, path: str) -> DatasetInfo:
       line byte-identical to the header is dropped too — documented
       divergence from the reference's skip-first-line, negligible on
       real data);
-    * invalid rows (``invalid_lines``): ``_c`` set; the ORIGINAL line
-      is reported like the reference's invalid_line_queue.
+    * invalid rows (``invalid_lines``): ``_c`` set, or an empty line
+      under a header of more than one column (``from_csv`` reads it as
+      one null field without flagging it); the ORIGINAL line is
+      reported like the reference's invalid_line_queue.
 
     The invalid count is observed as well as queried: one
-    ``Observation`` (``invalid_count``) counts ``_c`` over the parsed
-    lines, below every filter.  Spark pushes no filter through it, so
-    the first action to complete over either relation records the
-    count of the lines that flowed through it: exact after one full
-    pass (a count, the sketch scan, an aggregate), partial after a
-    partial action (``first()``, or ``limit(k)`` with no aggregate
-    below it), and a multiple after an action that evaluates the lines
-    twice (a sort samples its input for range partitioning first).
+    ``Observation`` (``invalid_count``) counts the invalid lines among
+    the parsed lines, below every filter.  Spark pushes no filter
+    through it, so the first action to complete over either relation
+    records the count of the lines that flowed through it: exact after
+    one full pass (a count, the sketch scan, an aggregate), partial
+    after a partial action (``first()``, or ``limit(k)`` with no
+    aggregate below it), and a multiple after an action that evaluates
+    the lines twice (a sort samples its input for range partitioning
+    first).
     :func:`invalid_line_summary` reads it only when its caller says the
     first action was one full pass.
 
@@ -198,21 +201,24 @@ def _read_csv(spark: SparkSession, path: str) -> DatasetInfo:
     # files — strip it, or the header byte-match misses and the last
     # field of every row carries \r
     line = F.regexp_replace(F.col("value"), "\r$", "")
+    # an empty line parses to one null field and no corrupt record:
+    # the wrong width unless the header has one column
+    empty = (F.col("_line") == "") if len(header) > 1 else F.lit(False)
     invalid_count = Observation()
     parsed = (
         spark.read.text(path)
         .select(line.alias("_line"),
                 F.from_csv(line, schema + ", `_c` string", opts).alias("p"))
         .observe(invalid_count,
-                 F.count_if(F.col("p._c").isNotNull()).alias("n"))
+                 F.count_if(F.col("p._c").isNotNull() | empty).alias("n"))
         .select("_line", F.inline(F.array("p")))
     )
+    bad = F.col("_c").isNotNull() | empty
     valid = (
-        parsed.filter(F.col("_c").isNull() & (F.col("_line") != raw_header))
+        parsed.filter(~bad & (F.col("_line") != raw_header))
         .drop("_c", "_line")
     )
-    invalid = parsed.filter(F.col("_c").isNotNull()) \
-        .select(F.col("_line").alias("line"))
+    invalid = parsed.filter(bad).select(F.col("_line").alias("line"))
     return DatasetInfo(df=valid, column_names=header, invalid_lines=invalid,
                        invalid_count=invalid_count)
 

@@ -17,11 +17,9 @@ one batch — a ``foreachBatch`` micro-batch, a checkpointed CLI slice or
    minibatches of ``minibatch_size`` rows (``MI-table-exact``: exact
    MI over the whole batch);
 3. append the raw triplets and persist (triplets + sketch blobs +
-   planner prior counts + batch manifest) as ONE atomically-replaced
-   JSON record, so a replayed batch after restart is recognized and
-   skipped — never double-counted.  The record is not a pickle; the
-   pickled sketch blobs in it (``counter``, ``rare``, ...) decode
-   through ``sketches/safe_pickle.py``, which builds values only.
+   planner prior counts) in the fold's JSON state record
+   (``streaming/state.py``), so a replayed batch after restart is
+   recognized and skipped — never double-counted.
 
 ``result()`` symmetrises the accumulated triplets and hands them to
 ``finalize``: median across all minibatches, feature renaming from the
@@ -33,9 +31,6 @@ sketch blobs), but the whole record is rewritten after every batch.
 """
 from __future__ import annotations
 
-import base64
-import json
-import os
 import time
 
 import pandas as pd
@@ -55,13 +50,16 @@ from outrank_spark.plans.ranking_job import (
     plan_pairs,
     sketch_plan_for,
 )
-from outrank_spark.sketches import sketch_from_bytes
+from outrank_spark.streaming.state import (
+    FoldState,
+    decode_sketches,
+    encode_sketches,
+)
 
 __all__ = ["StreamingRankingAccumulator"]
 
 _TRIPLET_COLS = ["batch_key", "feature_a", "feature_b", "score"]
-_STATE_KEYS = {"fingerprint", "blobs", "triplets", "prior_counts",
-               "batches_seen"}
+_PAYLOAD_KEYS = ("blobs", "triplets", "prior_counts")
 
 
 class StreamingRankingAccumulator:
@@ -71,15 +69,18 @@ class StreamingRankingAccumulator:
     def __init__(self, cfg: RankingConfig, state_dir: str | None = None,
                  context: str = ""):
         self.cfg = cfg
-        self.state_dir = state_dir
         self.context = context
         self.planner = CombinationPlanner(seed=cfg.seed)
         self.sketches = SketchCollection()
         self.triplets = pd.DataFrame(columns=_TRIPLET_COLS)
-        self.batches_seen: list[dict] = []
-        if state_dir:
-            os.makedirs(state_dir, exist_ok=True)
-            self._restore()
+        self.store = FoldState(state_dir, "ranking_state.bin", "ranking",
+                               self._fingerprint())
+        record = self.store.load(_PAYLOAD_KEYS)
+        if record:
+            self.sketches = decode_sketches(record["blobs"])
+            self.triplets = pd.DataFrame(record["triplets"],
+                                         columns=_TRIPLET_COLS)
+            self.planner.restore(record["prior_counts"])
 
     def _fingerprint(self) -> str:
         """Everything a restored run must agree on — resuming with a
@@ -94,65 +95,8 @@ class StreamingRankingAccumulator:
             cfg.mi_stratified_sampling_ratio,
             sorted(cfg.feature_columns or []), self.context,
             cfg.reference_model_json,
-            sketch_plan_for(cfg, []).sketches, cfg.counter_exclude_derived,
+            sketch_plan_for(cfg, []).sketches,
         ))
-
-    # -- state persistence -------------------------------------------
-    def _state_path(self) -> str:
-        return os.path.join(self.state_dir, "ranking_state.bin")
-
-    def _persist(self) -> None:
-        """Everything in ONE atomic replace (same rationale as
-        sketch_stream._persist: a partial two-file write would let a
-        restarted stream double-count a replayed batch), as a JSON
-        record, which unlike a pickle runs no code when parsed."""
-        if not self.state_dir:
-            return
-        record = {
-            "fingerprint": self._fingerprint(),
-            "blobs": {
-                f"{c}\x1f{k}": base64.b64encode(sk.to_bytes()).decode()
-                for (c, k), sk in self.sketches.items()
-            },
-            "triplets": {c: self.triplets[c].tolist() for c in _TRIPLET_COLS},
-            "prior_counts": self.planner.state(),
-            "batches_seen": self.batches_seen,
-        }
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.replace(tmp, self._state_path())
-
-    def _restore(self) -> None:
-        path = self._state_path()
-        if not os.path.exists(path):
-            return
-        try:
-            with open(path, "rb") as f:
-                record = json.loads(f.read())
-        except ValueError as exc:  # also a pickle from an older version
-            raise ValueError(
-                f"{path} is not a ranking state record; use a fresh "
-                "state_dir or rerun with the original version",
-            ) from exc
-        if not isinstance(record, dict) or set(record) != _STATE_KEYS:
-            raise ValueError(f"{path} is not a ranking state record")
-        saved = record["fingerprint"]
-        if saved != self._fingerprint():
-            raise ValueError(
-                "ranking checkpoint was written under a different config "
-                "or sketch plan "
-                f"(saved {saved!r} != current {self._fingerprint()!r}); "
-                "resuming would silently skip mismatched batches — use a "
-                "fresh state_dir or rerun with the original config",
-            )
-        for key, blob in record["blobs"].items():
-            c, k = key.split("\x1f")
-            self.sketches[(c, k)] = sketch_from_bytes(k,
-                                                      base64.b64decode(blob))
-        self.triplets = pd.DataFrame(record["triplets"], columns=_TRIPLET_COLS)
-        self.planner.restore(record["prior_counts"])
-        self.batches_seen = record["batches_seen"]
 
     # -- the fold (the foreachBatch hook) -----------------------------
     def process_batch(self, batch_df, batch_id: int) -> None:
@@ -165,7 +109,7 @@ class StreamingRankingAccumulator:
         scores: the sketch job's tail back-fills executor slots while
         the scoring stages run, and vice versa.
         """
-        if any(b["batch_id"] == batch_id for b in self.batches_seen):
+        if self.store.seen(batch_id):
             return  # replayed after restart — idempotent skip
         from concurrent.futures import ThreadPoolExecutor
 
@@ -214,13 +158,16 @@ class StreamingRankingAccumulator:
                 new.copy() if not len(self.triplets)
                 else pd.concat([self.triplets, new], ignore_index=True)
             )
-        self.batches_seen.append({
+        self.store.commit({
             "batch_id": int(batch_id),
             "rows": int(n_rows),
             "pairs": len(pairs),
             "wall_sec": round(time.time() - t0, 3),
+        }, lambda: {
+            "blobs": encode_sketches(self.sketches),
+            "triplets": {c: self.triplets[c].tolist() for c in _TRIPLET_COLS},
+            "prior_counts": self.planner.state(),
         })
-        self._persist()
 
     def _score(self, sub, columns, pairs, model_features,
                n_rows: int) -> pd.DataFrame:
@@ -246,17 +193,15 @@ class StreamingRankingAccumulator:
             model_features=model_features,
         ).toPandas()
 
+    @property
+    def batches_seen(self) -> list[dict]:
+        return self.store.batches_seen
+
     def attach(self, stream_df, checkpoint_dir: str,
                query_name: str = "ranking"):
         """writeStream wiring: returns the started StreamingQuery."""
-        return (
-            stream_df.writeStream
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+        return self.store.attach(self.process_batch, stream_df,
+                                 checkpoint_dir, query_name)
 
     # -- finalization (median-so-far, callable after any batch) -------
     def result(self) -> RankingResult:

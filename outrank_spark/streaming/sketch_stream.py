@@ -4,17 +4,17 @@ The reference's minibatch traversal (core_ranking.py:637-683) is a
 bounded incremental scan: accumulate sketches per batch, checkpoint,
 refine.  SURVEY.md §2.8 notes this maps 1:1 onto Structured Streaming
 — this module is that mapping: ``readStream -> foreachBatch`` where
-each micro-batch runs the SAME mergeable sketch build (mapInPandas ->
-grouped merge) and folds the result into the accumulated state, which
-is persisted per batch (sketch blobs + batch lineage) so a restarted
-query resumes exactly (merge associativity again).
+each micro-batch runs the SAME mergeable sketch build
+(``build_sketches``, one ``mapInArrow`` scan) and folds the result into
+the accumulated state, persisted per batch (``streaming/state.py``,
+under the ``SketchPlan`` as fingerprint) so a restarted query resumes
+exactly (merge associativity again).
 
 Works with any streaming source; tests use a file source with
 ``trigger(availableNow=True)`` for deterministic, bounded runs.
 """
 from __future__ import annotations
 
-import os
 import time
 
 from outrank_spark.operators.sketch_build import (
@@ -23,6 +23,11 @@ from outrank_spark.operators.sketch_build import (
     build_sketches,
 )
 from outrank_spark.sketches import sketch_from_bytes
+from outrank_spark.streaming.state import (
+    FoldState,
+    decode_sketches,
+    encode_sketches,
+)
 
 __all__ = ["StreamingSketchAccumulator", "keyed_sketch_stream"]
 
@@ -30,53 +35,20 @@ __all__ = ["StreamingSketchAccumulator", "keyed_sketch_stream"]
 class StreamingSketchAccumulator:
     def __init__(self, plan: SketchPlan, state_dir: str | None = None):
         self.plan = plan
-        self.state_dir = state_dir
         self.state = SketchCollection()
-        self.batches_seen: list[dict] = []
-        if state_dir:
-            os.makedirs(state_dir, exist_ok=True)
-            self._restore()
+        self.store = FoldState(state_dir, "sketch_state.bin", "sketch",
+                               repr(plan))
+        record = self.store.load(("blobs",))
+        if record:
+            self.state = decode_sketches(record["blobs"])
 
-    # -- state persistence -------------------------------------------
-    def _blob_path(self) -> str:
-        return os.path.join(self.state_dir, "sketch_state.bin")
-
-    def _persist(self) -> None:
-        """Sketch blobs AND the batches-seen manifest go into ONE
-        atomically-replaced file: a two-file persist could crash
-        between the writes, leaving a batch merged into state but
-        missing from the manifest — the restarted stream would replay
-        it and double-count every additive sketch."""
-        if not self.state_dir:
-            return
-        import pickle
-
-        record = {
-            "blobs": {
-                f"{c}\x1f{k}": sk.to_bytes()
-                for (c, k), sk in self.state.items()
-            },
-            "batches_seen": self.batches_seen,
-        }
-        tmp = self._blob_path() + ".tmp"
-        with open(tmp, "wb") as f:
-            pickle.dump(record, f, protocol=4)
-        os.replace(tmp, self._blob_path())
-
-    def _restore(self) -> None:
-        import pickle
-
-        if os.path.exists(self._blob_path()):
-            with open(self._blob_path(), "rb") as f:
-                record = pickle.load(f)
-            for key, blob in record["blobs"].items():
-                c, k = key.split("\x1f")
-                self.state[(c, k)] = sketch_from_bytes(k, blob)
-            self.batches_seen = record["batches_seen"]
+    @property
+    def batches_seen(self) -> list[dict]:
+        return self.store.batches_seen
 
     # -- the foreachBatch hook ---------------------------------------
     def process_batch(self, batch_df, batch_id: int) -> None:
-        if any(b["batch_id"] == batch_id for b in self.batches_seen):
+        if self.store.seen(batch_id):
             return  # replayed batch after restart — idempotent skip
         t0 = time.time()
         delta = build_sketches(batch_df, self.plan)
@@ -85,23 +57,16 @@ class StreamingSketchAccumulator:
                 self.state[key].merge(sk)
             else:
                 self.state[key] = sk
-        self.batches_seen.append({
+        self.store.commit({
             "batch_id": int(batch_id),
             "rows": batch_df.count(),
             "wall_sec": round(time.time() - t0, 3),
-        })
-        self._persist()
+        }, lambda: {"blobs": encode_sketches(self.state)})
 
     def attach(self, stream_df, checkpoint_dir: str, query_name: str = "sketches"):
         """writeStream wiring: returns the started StreamingQuery."""
-        return (
-            stream_df.writeStream
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+        return self.store.attach(self.process_batch, stream_df,
+                                 checkpoint_dir, query_name)
 
     def estimates(self):
         return self.state.summary()

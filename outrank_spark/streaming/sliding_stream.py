@@ -17,10 +17,11 @@ would produce — any micro-batch slicing, any arrival order
 just the estimates).  So every window estimate carries plain HLL's
 published 1.04/sqrt(m) bound, live.
 
-Restart safety follows the StreamingSketchAccumulator recipe: blob +
-batches-seen manifest are ONE atomically-replaced pickle; a replayed
-``batch_id`` after a restart is an idempotent skip (and even a
-double-fold would be harmless here — idempotent merge — the skip
+Restart safety is the folds' shared state (``streaming/state.py``):
+blob + batches-seen manifest are ONE atomically-replaced JSON record,
+whose fingerprint (precision, columns, salt) must match to resume; a
+replayed ``batch_id`` after a restart is an idempotent skip (and even
+a double-fold would be harmless here — idempotent merge — the skip
 keeps the manifest honest).
 
 No reference-repo counterpart; north-rule sketch-tier addition
@@ -28,12 +29,16 @@ No reference-repo counterpart; north-rule sketch-tier addition
 """
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame
 
 from outrank_spark.sketches.slidinghll import SlidingHyperLogLog
+from outrank_spark.streaming.state import (
+    FoldState,
+    decode_sketches,
+    encode_sketches,
+)
 
 __all__ = ["StreamingSlidingDistinct"]
 
@@ -49,43 +54,18 @@ class StreamingSlidingDistinct:
         self.ts_col = ts_col
         self.p = int(p)
         self.salt = int(salt)
-        self.state_dir = state_dir
         self.sketch = SlidingHyperLogLog(p=self.p)
-        self.batches_seen: list[dict] = []
-        if state_dir:
-            os.makedirs(state_dir, exist_ok=True)
-            self._restore()
+        self.store = FoldState(
+            state_dir, "shll_state.pkl", "sliding-HLL",
+            f"precision={self.p}|{value_col}|{ts_col}|salt={self.salt}")
+        record = self.store.load(("blobs",))
+        if record:
+            self.sketch = decode_sketches(record["blobs"])[
+                (self.value_col, "shll")]
 
-    # -- state persistence (one atomically-replaced file) -------------
-    def _state_path(self) -> str:
-        return os.path.join(self.state_dir, "shll_state.pkl")
-
-    def _persist(self) -> None:
-        if not self.state_dir:
-            return
-        import pickle
-
-        record = {"p": self.p, "blob": self.sketch.to_bytes(),
-                  "batches_seen": self.batches_seen}
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "wb") as f:
-            pickle.dump(record, f, protocol=4)
-        os.replace(tmp, self._state_path())
-
-    def _restore(self) -> None:
-        import pickle
-
-        if not os.path.exists(self._state_path()):
-            return
-        with open(self._state_path(), "rb") as f:
-            record = pickle.load(f)
-        if record["p"] != self.p:
-            raise ValueError(
-                "persisted sliding-HLL state has precision "
-                f"p={record['p']}, monitor asked for p={self.p} — "
-                "different register families cannot merge")
-        self.sketch = SlidingHyperLogLog.from_bytes(record["blob"])
-        self.batches_seen = record["batches_seen"]
+    @property
+    def batches_seen(self) -> list[dict]:
+        return self.store.batches_seen
 
     # -- the foreachBatch hook -----------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -93,7 +73,7 @@ class StreamingSlidingDistinct:
             build_sliding_hll_blob,
         )
 
-        if any(b["batch_id"] == batch_id for b in self.batches_seen):
+        if self.store.seen(batch_id):
             return  # replayed batch after restart — idempotent skip
         t0 = time.time()
         blob = build_sliding_hll_blob(
@@ -101,23 +81,17 @@ class StreamingSlidingDistinct:
             p=self.p, salt=self.salt)
         if blob is not None:
             self.sketch.merge(SlidingHyperLogLog.from_bytes(blob))
-        self.batches_seen.append({
+        self.store.commit({
             "batch_id": int(batch_id),
             "wall_sec": round(time.time() - t0, 3),
-        })
-        self._persist()
+        }, lambda: {"blobs": encode_sketches(
+            {(self.value_col, "shll"): self.sketch})})
 
     def attach(self, stream_df, checkpoint_dir: str,
                query_name: str = "sliding_distinct"):
         """writeStream wiring: returns the started StreamingQuery."""
-        return (
-            stream_df.writeStream
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+        return self.store.attach(self.process_batch, stream_df,
+                                 checkpoint_dir, query_name)
 
     # -- reporting -------------------------------------------------------
     def estimate(self, ts_from: float | None = None) -> int:

@@ -5,6 +5,7 @@ module level or inside a function, so a lazy import cannot hide a
 dependency.  The ranking CLI and stream must stay inside a fixed set
 of modules, and every module must be reachable from one of the entry
 points that use the package, bar a pinned set reached only by tests.
+The same walk keeps unpickling in the one module that restricts it.
 """
 from __future__ import annotations
 
@@ -87,7 +88,12 @@ RANKING_MODULES = frozenset({
     "outrank_spark.streaming.ranking_stream",
     "outrank_spark.streaming.sketch_stream",
     "outrank_spark.streaming.sliding_stream",
+    "outrank_spark.streaming.state",
 })
+
+# The only module that may unpickle: it resolves value types only.
+UNPICKLING_MODULES = frozenset({"outrank_spark.sketches.safe_pickle"})
+_UNPICKLERS = {"load", "loads", "Unpickler"}
 
 
 def _module_files() -> dict[str, Path]:
@@ -103,6 +109,10 @@ def _module_files() -> dict[str, Path]:
 MODULES = _module_files()
 
 
+def _walk(path: Path):
+    return ast.walk(ast.parse(path.read_text()))
+
+
 def _imported_names(module: str, path: Path) -> set[str]:
     """Dotted names a module imports, relative imports resolved; for
     ``from a import b`` both ``a`` and ``a.b`` (``b`` may be a
@@ -111,7 +121,7 @@ def _imported_names(module: str, path: Path) -> set[str]:
     if path.name != "__init__.py":
         package = package[:-1]
     names = set()
-    for node in ast.walk(ast.parse(path.read_text())):
+    for node in _walk(path):
         if isinstance(node, ast.Import):
             names.update(alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
@@ -169,6 +179,38 @@ def test_every_module_is_reached_from_an_entry_point():
         f"{sorted(TEST_ONLY_MODULES)}.  Delete a new orphan or use it; "
         "drop a module from TEST_ONLY_MODULES once an entry point "
         "reaches it")
+
+
+def _unpickler_uses(path: Path) -> list[str]:
+    """``pickle.load``/``loads``/``Unpickler`` referenced in a module,
+    through the module (aliased or not) or a ``from pickle import``."""
+    nodes = list(_walk(path))
+    aliases = {alias.asname or alias.name
+               for node in nodes if isinstance(node, ast.Import)
+               for alias in node.names if alias.name == "pickle"}
+    uses = []
+    for node in nodes:
+        if (isinstance(node, ast.Attribute) and node.attr in _UNPICKLERS
+                and isinstance(node.value, ast.Name)
+                and node.value.id in aliases):
+            uses.append(f"{node.value.id}.{node.attr}:{node.lineno}")
+        elif isinstance(node, ast.ImportFrom) and node.module == "pickle":
+            uses.extend(f"from pickle import {alias.name}:{node.lineno}"
+                        for alias in node.names
+                        if alias.name in _UNPICKLERS | {"*"})
+    return uses
+
+
+def test_only_safe_pickle_unpickles():
+    """State files and sketch blobs decode without running code: only
+    ``sketches/safe_pickle.py`` may call the unpickler."""
+    found = {module: uses for module, path in sorted(MODULES.items())
+             if module not in UNPICKLING_MODULES
+             and (uses := _unpickler_uses(path))}
+    assert not found, (
+        f"unpickling outside {sorted(UNPICKLING_MODULES)}: {found}; "
+        "decode through outrank_spark.sketches.safe_pickle.loads")
+    assert all(_unpickler_uses(MODULES[m]) for m in UNPICKLING_MODULES)
 
 
 def test_traced_run_resolves_every_layer_name():

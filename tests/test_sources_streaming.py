@@ -87,9 +87,10 @@ class TestCsvRaw:
     def test_one_parse_per_pass_same_rows(self, spark, tmp_path):
         """The executed plan of the valid rows holds one CSV parser,
         with or without the subsample on top, and the split into valid
-        rows and invalid lines is unchanged: short, long and
+        rows and invalid lines holds for short, long and
         CRLF-terminated lines, a line equal to the header, a quoted
-        comma and an empty line."""
+        comma and an empty line.  The empty line is invalid: it parses
+        to one field against the header's three, and it is counted."""
         from outrank_spark.operators.pair_scoring import (
             deterministic_subsample,
         )
@@ -105,9 +106,21 @@ class TestCsvRaw:
             assert plan.count("from_csv(") == 1, plan
         assert [tuple(r) for r in info.df.collect()] == [
             ("1", "2", "0"), ("3", "4", "1"), ("5", "6,7", "1"),
-            (None, None, None), ("8", "9", "0")]
+            ("8", "9", "0")]
+        assert info.invalid_count.get["n"] == 4
         assert [r["line"] for r in info.invalid_lines.collect()] == [
-            "x,bad", "x,y,bad,z", "short"]
+            "x,bad", "x,y,bad,z", "", "short"]
+
+    def test_empty_line_under_one_column_header_is_valid(self, spark,
+                                                         tmp_path):
+        """Under a one-column header an empty line has the header's
+        width: a valid null row, as in the reference's width check."""
+        d = tmp_path / "one"
+        d.mkdir()
+        (d / "data.csv").write_text("label\n1\n\n0\n")
+        info = read_csv_raw(spark, str(d))
+        assert [r["label"] for r in info.df.collect()] == ["1", None, "0"]
+        assert info.invalid_lines.count() == 0
 
     def test_wrong_width_lines_dropped_under_pruning(self, spark, tmp_path):
         d = tmp_path / "dirty"
@@ -239,8 +252,8 @@ class TestStreamingSketches:
         """Blobs and batches_seen live in ONE atomically-replaced file:
         no crash window where a batch is merged but not recorded (which
         would double-count additive sketches on replay)."""
+        import json
         import os
-        import pickle
 
         from outrank_spark.sources import generate_pages
 
@@ -253,9 +266,9 @@ class TestStreamingSketches:
 
         files = set(os.listdir(state_dir))
         assert files == {"sketch_state.bin"}  # single state artifact
-        with open(os.path.join(state_dir, "sketch_state.bin"), "rb") as f:
-            record = pickle.load(f)
-        assert set(record) == {"blobs", "batches_seen"}
+        with open(os.path.join(state_dir, "sketch_state.bin")) as f:
+            record = json.load(f)
+        assert set(record) == {"fingerprint", "blobs", "batches_seen"}
         assert [b["batch_id"] for b in record["batches_seen"]] == [0]
 
 
