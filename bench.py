@@ -274,18 +274,17 @@ def sketch_error_probe(spark, sf_dir: str) -> dict:
 
 def pair_fanout_throughput(spark, n_rows: int = 200_000,
                            n_features: int = 64) -> float:
-    """Compute-bound scaling probe: broadcast one encoded batch, fan
-    the full pair triangle out over Spark tasks (the reference's
-    process-pool shape).  No shuffle, no scan — isolates how the
-    scoring fan-out itself scales with cores, separating operator
-    scalability from the single-box memory-bus ceiling that caps the
-    end-to-end job in this sandbox."""
+    """Compute-bound scaling probe: one cached minibatch, its full pair
+    triangle split over every core by ``score_batches``' pair fan-out
+    (the reference's process-pool shape).  No scan, one shuffle that
+    copies the rows to the chunk tasks — isolates how the scoring
+    fan-out itself scales with cores, separating operator scalability
+    from the single-box memory-bus ceiling that caps the end-to-end
+    job on a single host."""
     import numpy as np
     import pandas as pd
 
-    from outrank_spark.operators.pair_scoring import (
-        score_single_batch_distributed,
-    )
+    from outrank_spark.operators.pair_scoring import score_batches
     from outrank_spark.plans.combinations import CombinationPlanner
 
     rng = np.random.default_rng(7)
@@ -295,14 +294,18 @@ def pair_fanout_throughput(spark, n_rows: int = 200_000,
     })
     pdf["label"] = rng.integers(0, 2, n_rows).astype("int32")
     cols = list(pdf.columns)
+    df = spark.createDataFrame(pdf).cache()
+    df.count()
     planner = CombinationPlanner()
     pairs = planner.plan(cols, "label", "MI-numba-randomized", False, 10 ** 6)
-    t0 = time.time()
-    out = score_single_batch_distributed(
-        spark, pdf, cols, pairs, "MI-numba-randomized", "label",
-    )
-    assert len(out) == len(pairs)
-    return time.time() - t0
+    try:
+        t0 = time.time()
+        out = score_batches(df, cols, pairs, "MI-numba-randomized", "label",
+                            1, n_rows=n_rows).collect()
+        assert len(out) == len(pairs)
+        return time.time() - t0
+    finally:
+        df.unpersist()
 
 
 def skew_probe(spark, n_pages: int = 2_000_000) -> dict:

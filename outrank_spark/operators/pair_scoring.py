@@ -1,23 +1,27 @@
 """Distributed pairwise feature scoring.
 
 The reference scores each minibatch's column pairs on a process pool
-(core_ranking.py:139-151).  Spark-first re-expression: minibatches
-become *groups* of a deterministic batch key, and one ``applyInArrow``
-call scores every planned pair inside the group's Arrow batch — batch
-semantics (batch-local category codes, row-order-dependent spoof
-correction) are preserved because each group is sorted by a stable row
-key before encoding.  The scoring values travel packed, one
-``array(...)`` column per element type (``operators.pack_channels``),
-and each feature's slot is unpacked to the pandas Series a column of
-its own would give.
+over the pair list (core_ranking.py:139-151).  Spark-first
+re-expression: minibatches become *groups* of a deterministic batch
+key, and one ``applyInArrow`` call scores planned pairs inside the
+group's Arrow batch — batch semantics (batch-local category codes,
+row-order-dependent spoof correction) are preserved because each group
+is sorted by a stable row key before encoding.  The scoring values
+travel packed, one ``array(...)`` column per element type
+(``operators.pack_channels``), and each feature's slot is unpacked to
+the pandas Series a column of its own would give.
 
-Scale shape: at 10^12 rows the sampled scoring input is millions of
-minibatches; parallelism is batch-level (each task scores ~|pairs|
-vectorized numpy kernels over <= 2^14-row vectors), which keeps tasks
-uniform and avoids shuffling the full table — only the subsampled
-scoring columns move.  For the inverse regime (one batch, huge pair
-count) ``score_single_batch_distributed`` broadcasts the encoded batch
-and fans out over pairs instead.
+Scale shape: with at least as many minibatches as cores (at 10^12
+rows, millions of them), a group is one minibatch and scores all its
+pairs — ~|pairs| vectorized numpy kernels over <= 2^14-row vectors,
+with only the subsampled scoring columns shuffled.  With fewer
+minibatches than cores (a micro-batch of one minibatch), the pool's
+shape returns: each minibatch's pair list splits into ``k`` chunks,
+every row is copied to its minibatch's ``k`` groups ``(batch_id,
+chunk)``, and each group scores one chunk's pairs on the same rows in
+the same order, so the scores do not depend on ``k``.  The split only
+happens where a chunk's pair work repays a task of its own
+(``_pair_chunks``).
 """
 from __future__ import annotations
 
@@ -40,7 +44,7 @@ from outrank_spark.operators import (
 )
 
 __all__ = ["deterministic_subsample", "assign_batches", "score_batches",
-           "score_single_batch_distributed", "symmetrize"]
+           "symmetrize"]
 
 _TRIPLET_SCHEMA = "batch_id long, feature_a string, feature_b string, score double"
 _TRIPLET_ARROW = pa.schema([
@@ -232,17 +236,30 @@ def _score_minibatch(values, rk: np.ndarray, columns: Sequence[str],
 def _score_group(layout: Layout, columns: Sequence[str],
                  pairs: Sequence[tuple[str, str]], heuristic: str,
                  label_column: str, ratio: float,
-                 model_features: Sequence[str]):
+                 model_features: Sequence[str], k: int = 1):
     """``score_batches``' group function (``applyInArrow``): score one
-    minibatch's pairs, then evict the worker's zip finders
-    (``evict_zip_finders``).  ``layout`` says which packed array column
-    and slot carries each feature; every slot is unpacked to the pandas
-    Series its own column would have been."""
+    minibatch's pairs, or with ``k > 1`` the chunk ``pairs[j::k]`` that
+    the group's ``chunk`` column names (``j = chunk % k``), then evict
+    the worker's zip finders (``evict_zip_finders``).  ``layout`` says
+    which packed array column and slot carries each feature; only the
+    slots of the columns a chunk's pairs (and ``model_features``) use
+    are unpacked, each to the pandas Series its own column would have
+    been."""
+    chunks = []
+    for j in range(k):
+        part = pairs[j::k]
+        used = {c for p in part for c in p} | set(model_features)
+        cols = [c for c in columns if c in used]
+        chunks.append((part, cols, Layout(
+            layout.exprs, {c: layout.slots[c] for c in cols},
+            layout.timezone)))
 
     def fn(table):
+        part, cols, used = chunks[
+            table.column("chunk")[0].as_py() % k if k > 1 else 0]
         triplets = _score_minibatch(
-            unpack_channels(table.columns, layout),
-            table.column("_rk").to_numpy(), columns, pairs, heuristic,
+            unpack_channels(table.columns, used),
+            table.column("_rk").to_numpy(), cols, part, heuristic,
             label_column, ratio, model_features)
         bid = table.column("batch_id")[0].as_py()
         out = pa.table(
@@ -255,13 +272,36 @@ def _score_group(layout: Layout, columns: Sequence[str],
     return fn
 
 
+# Pair work (a minibatch's rows x the pairs of one chunk) a pair chunk
+# must carry to repay its task: a Python task, a shuffled copy of its
+# minibatch's rows, and the unpacking, encoding and densifying of the
+# columns its pairs use.  On 4 vCPUs, with the 29 columns and 463 pairs
+# of the stream-microbatch benchmark, a micro-batch split 4 ways broke
+# even at ~2^18 pair-rows a chunk (2,048 rows) and saved ~0.15 s of
+# ~0.77 s at 2^21 (16,384 rows); 2^19 keeps a margin.
+_CHUNK_PAIR_ROWS = 2 ** 19
+
+
+def _pair_chunks(n_pairs: int, n_batches: int, n_rows: int,
+                 cores: int) -> int:
+    """How many chunks each minibatch's pairs split into: as many as
+    leave no core idle (``n_batches * k <= cores``) while every chunk
+    keeps at least ``_CHUNK_PAIR_ROWS`` of pair work, and at least 1,
+    so with as many minibatches as cores, or an unknown row count
+    (``n_rows`` 0), minibatches are not split."""
+    work = n_rows * n_pairs // n_batches
+    return max(1, min(cores // n_batches, n_pairs,
+                      work // _CHUNK_PAIR_ROWS))
+
+
 def score_batches(df: DataFrame, columns: Sequence[str],
                   pairs: Sequence[tuple[str, str]], heuristic: str,
                   label_column: str, n_batches: int,
                   mi_stratified_sampling_ratio: float = 1.0,
                   key_cols: Sequence[str] | None = None,
                   precode: bool | None = None,
-                  model_features: Sequence[str] = ()) -> DataFrame:
+                  model_features: Sequence[str] = (),
+                  n_rows: int = 0) -> DataFrame:
     """Score all planned pairs per minibatch; returns the triplet
     relation ``(batch_id, feature_a, feature_b, score)``.
 
@@ -271,6 +311,11 @@ def score_batches(df: DataFrame, columns: Sequence[str],
     shuffle bytes shrink ~5x.  Only enabled for relabel-invariant
     heuristics; exact-parity runs (and order-sensitive stratified
     subsampling, which follows value order) can force ``precode=False``.
+
+    ``n_rows``, the row count of ``df`` when the caller knows it, lets
+    a minibatch's pairs split over cores the minibatches leave idle
+    (``_pair_chunks``); the scores are the same either way, the order
+    of the triplets is not.
     """
     pairs = [tuple(p) for p in pairs]
     if precode is None:
@@ -297,62 +342,49 @@ def score_batches(df: DataFrame, columns: Sequence[str],
     batched = df.selectExpr(
         *layout.exprs, f"xxhash64({', '.join(keys)}) AS _rk",
         f"{_batch_id_sql(keys, n_batches)} AS batch_id")
+    sc = df.sparkSession.sparkContext
+    k = _pair_chunks(len(pairs), n_batches, n_rows, sc.defaultParallelism)
     fn = _score_group(layout, columns, pairs, heuristic, label_column,
-                      mi_stratified_sampling_ratio, model_features)
+                      mi_stratified_sampling_ratio, model_features, k)
 
-    # Spread CPU-heavy batch groups across tasks.  groupBy's default
-    # shuffle hashes n_batches keys into spark.sql.shuffle.partitions
-    # buckets; when the two are of similar magnitude (the interactive /
-    # bench regime: 64 batches, 32 partitions) balls-into-bins leaves
-    # ~1/3 of partitions empty and the worst task carrying 5-6 batches,
-    # so the scoring stage walls at max-load x batch-time while most
-    # cores idle (measured 4.4 s -> 2.8 s at 300k pages x 463 pairs).
-    # An explicit repartition to ~4*n_batches gives ~1 batch per task
-    # and, being a user-specified count, is not AQE-coalesced; the
-    # groupBy then reuses that HashPartitioning (ClusteredDistribution
-    # on batch_id is already satisfied) so no second Exchange appears.
-    # The spread applies while batches-per-partition < 32 — below that
-    # the binomial imbalance is material (at 123 batches over 8
-    # partitions the max-loaded partition walls a single-wave stage;
-    # measured 40.2 -> 37.8 s at 2M pages on 8 cores), above it many
-    # batches per task average out on their own and extra tasks would
-    # only cost scheduling.  The partition count caps at 64*shuf so a
-    # corpus-scale job never schedules more than ~64 tasks per shuffle
-    # slot while still leaving most tasks a single batch.
+    # Spread the CPU-heavy groups over tasks.  With fewer minibatches
+    # than cores, each row is copied to its minibatch's k groups:
+    # chunk c of minibatch b is group b * k + c and, through
+    # repartitionById, partition b * k + c too, so each group is a task
+    # of its own and no task is empty (hashing 4 chunk keys into 16
+    # partitions puts two of them in one task about a third of the
+    # time).  The groupBy reuses that partitioning: no second Exchange.
+    if k > 1:
+        bid = "CAST(batch_id AS INT)"
+        return (
+            batched.selectExpr(
+                "*", f"explode(sequence({bid} * {k}, {bid} * {k} + {k - 1}))"
+                     " AS chunk")
+            .repartitionById(n_batches * k, "chunk")
+            .groupBy("batch_id", "chunk")
+            .applyInArrow(fn, schema=_TRIPLET_SCHEMA))
+    # Otherwise one group is one minibatch.  groupBy's default shuffle
+    # hashes n_batches keys into spark.sql.shuffle.partitions buckets;
+    # when the two are of similar magnitude (64 batches, 32 partitions)
+    # balls-into-bins leaves ~1/3 of partitions empty and the worst
+    # task carrying 5-6 batches (measured 4.4 s -> 2.8 s at 300k pages x
+    # 463 pairs once spread).  An explicit repartition to ~4*n_batches
+    # gives ~1 batch per task and, being a user-specified count, is not
+    # AQE-coalesced; the groupBy reuses that HashPartitioning, so no
+    # second Exchange appears.  From 32 batches per shuffle partition
+    # on, many batches per task average out on their own (below, at
+    # 123 batches over 8 partitions, the max-loaded one walled the
+    # stage: 40.2 -> 37.8 s at 2M pages on 8 cores once spread), and
+    # the count caps at 64*shuf so a corpus-scale job never schedules
+    # more than ~64 tasks per shuffle slot.
     try:
         shuf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
-        shuf = df.sparkSession.sparkContext.defaultParallelism
+        shuf = sc.defaultParallelism
     if n_batches < 32 * shuf:
         batched = batched.repartition(
             min(4 * n_batches, 64 * shuf), "batch_id")
     return batched.groupBy("batch_id").applyInArrow(fn, schema=_TRIPLET_SCHEMA)
-
-
-def score_single_batch_distributed(spark, pdf: pd.DataFrame,
-                                   columns: Sequence[str],
-                                   pairs: Sequence[tuple[str, str]],
-                                   heuristic: str, label_column: str,
-                                   mi_stratified_sampling_ratio: float = 1.0,
-                                   parallelism: int | None = None) -> pd.DataFrame:
-    """Pair-level fan-out: broadcast one encoded batch, parallelize the
-    pair list (the reference's process-pool shape, on Spark tasks)."""
-    codes = _encode_codes(pdf, columns)
-    bc = spark.sparkContext.broadcast(codes)
-    pairs = [tuple(p) for p in pairs]
-    n = parallelism or spark.sparkContext.defaultParallelism
-
-    def run(chunk):
-        local = bc.value
-        return _score_block(local, list(chunk), heuristic, label_column,
-                            mi_stratified_sampling_ratio)
-
-    chunks = [pairs[i::n] for i in range(n) if pairs[i::n]]
-    scored = (
-        spark.sparkContext.parallelize(chunks, len(chunks))
-        .flatMap(run).collect()
-    )
-    return pd.DataFrame(scored, columns=["feature_a", "feature_b", "score"])
 
 
 def symmetrize(triplets: DataFrame) -> DataFrame:

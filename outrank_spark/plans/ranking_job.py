@@ -15,8 +15,10 @@ checkpointed CLI run use too:
      with
   3. minibatch pair scoring: a row count sizes the reference's
      minibatches of ``minibatch_size`` rows, then batch assignment ->
-     ``applyInArrow`` scoring of the pairs ``plan_pairs`` plans ->
-     raw triplets, collected to the driver;
+     ``applyInArrow`` scoring of the pairs ``plan_pairs`` plans, one
+     group per minibatch, or per chunk of its pairs while fewer
+     minibatches than cores would leave cores idle -> raw triplets,
+     collected to the driver in minibatch and plan order;
   4. ``finalize`` on the driver: symmetrised pandas median of each
      pair's minibatch scores (core_ranking.py:572-580),
      ``name-(card; cov)`` feature renaming (task_ranking.py:247-268),
@@ -25,7 +27,8 @@ checkpointed CLI run use too:
      post-processing follow in the CLI.
 
 Stages 2 and 3 are the only passes over the data besides the count.
-Stage 3 shuffles the subsampled scoring columns; stage 2 merges one
+Stage 3 shuffles the subsampled scoring columns (a minibatch split
+into k pair chunks ships k copies of its rows); stage 2 merges one
 small blob per partition and (column, kind), on the executors once
 there are more than ~5 partitions.
 """

@@ -13,13 +13,16 @@ one batch — a ``foreachBatch`` micro-batch, a checkpointed CLI slice or
    scan; merge associativity makes stream == batch bitwise) on a
    one-worker pool, while the driver
 2. counts the rows and scores the ``plan_pairs`` pairs with the SAME
-   ``score_batches`` fan-out in every driver, over the reference's
-   minibatches of ``minibatch_size`` rows (``MI-table-exact``: exact
-   MI over the whole batch);
-3. append the raw triplets and persist (triplets + sketch blobs +
-   planner prior counts) in the fold's JSON state record
-   (``streaming/state.py``), so a replayed batch after restart is
-   recognized and skipped — never double-counted.
+   ``score_batches`` call in every driver, over the reference's
+   minibatches of ``minibatch_size`` rows: one ``applyInArrow`` group
+   per minibatch, or, with fewer minibatches than cores and enough
+   pair work, per chunk of a minibatch's pairs (``MI-table-exact``:
+   exact MI over the whole batch);
+3. order the raw triplets by minibatch and plan index (so they do not
+   depend on how the pairs were split), append them and persist
+   (triplets + sketch blobs + planner prior counts) in the fold's JSON
+   state record (``streaming/state.py``), so a replayed batch after
+   restart is recognized and skipped — never double-counted.
 
 ``result()`` symmetrises the accumulated triplets and hands them to
 ``finalize``: median across all minibatches, feature renaming from the
@@ -60,6 +63,23 @@ __all__ = ["StreamingRankingAccumulator"]
 
 _TRIPLET_COLS = ["batch_key", "feature_a", "feature_b", "score"]
 _PAYLOAD_KEYS = ("blobs", "triplets", "prior_counts")
+
+
+def _plan_order(triplets: pd.DataFrame, pairs) -> pd.DataFrame:
+    """``triplets`` ordered by minibatch, then by each pair's index in
+    the plan ``pairs``: the order does not depend on how the scoring
+    split the pairs over tasks.  A pair planned twice scores the same
+    twice; its rows take its indices in turn."""
+    at: dict = {}
+    for i, pair in enumerate(pairs):
+        at.setdefault(tuple(pair), []).append(i)
+    nth = triplets.groupby(["batch_id", "feature_a", "feature_b"],
+                           sort=False).cumcount()
+    index = [at[(a, b)][n] for a, b, n in zip(
+        triplets["feature_a"], triplets["feature_b"], nth)]
+    return (triplets.assign(_pair=index)
+            .sort_values(["batch_id", "_pair"], kind="stable")
+            .drop(columns="_pair").reset_index(drop=True))
 
 
 class StreamingRankingAccumulator:
@@ -187,11 +207,11 @@ class StreamingRankingAccumulator:
             return mi_table_scores(sub, pairs).toPandas().assign(batch_id=0)
         # the reference's minibatches of ``minibatch_size`` rows
         n_batches = max(1, -(-n_rows // max(cfg.minibatch_size, 1)))
-        return score_batches(
+        return _plan_order(score_batches(
             sub, columns, pairs, cfg.heuristic, cfg.label_column,
             n_batches, cfg.mi_stratified_sampling_ratio,
-            model_features=model_features,
-        ).toPandas()
+            model_features=model_features, n_rows=n_rows,
+        ).toPandas(), pairs)
 
     @property
     def batches_seen(self) -> list[dict]:

@@ -61,3 +61,37 @@ def test_failed_run_reports_stderr_tail(monkeypatch):
     assert "exited with 3" in message
     assert "line 99" in message and "line 60" in message
     assert "line 59" not in message
+
+
+def test_summary_reports_median_difference_and_base_iqr(monkeypatch, capsys):
+    """Each metric's line gives the difference of the medians (change
+    minus base) and the base side's quartiles and IQR, the spread a
+    claimed gain is compared with."""
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        better = [m["name"] for m in json.load(f)["end_to_end"]]
+    base = iter([1.0, 2.0, 3.0, 4.0, 5.0])
+    change = iter([0.5, 1.5, 2.5, 3.5, 4.5])
+
+    def run_once(checkout, args):
+        side = change if checkout == ab_perfbench.ROOT else base
+        value = next(side)
+        return {m: value for m in better}
+
+    monkeypatch.setattr(ab_perfbench, "run_once", run_once)
+    ab_perfbench.compare(_args(5), "BASE")
+    lines = [line for line in capsys.readouterr().out.splitlines()
+             if ": median" in line]
+    assert len(lines) == len(better)
+    for line in lines:
+        # base 1..5: median 3, quartiles 2 and 4; change median 2.5
+        assert "median 3 -> 2.5 (diff -0.5; base quartiles 2, 4, IQR 2)" \
+            in line, line
+
+
+def test_quartiles_interpolate_like_perfbench():
+    from perfbench.stats import percentile
+
+    for values in ([0.8, 0.9, 0.7, 1.0], [3.0, 1.0], [1, 2, 3, 4, 5, 6, 7]):
+        assert ab_perfbench.quartiles(values) == pytest.approx(
+            (percentile(values, 25), percentile(values, 75)))
+    assert ab_perfbench.quartiles([2.5]) == (2.5, 2.5)

@@ -9,9 +9,11 @@ base and once in the working tree, the side that goes first
 alternating from pair to pair.  The base checkout is a ``git worktree``
 of ``--base`` (default ``HEAD~1``) under a temporary directory, removed
 at the end; ``--base-dir`` uses an existing checkout instead.  Prints
-each pair's end-to-end metrics, then per metric the two medians and in
-how many pairs the working tree was better (direction from
-BENCHMARK.json).
+each pair's end-to-end metrics, then per metric the two medians, their
+difference (change minus base), the base side's quartiles and their
+distance (IQR), and in how many pairs the working tree was better
+(direction from BENCHMARK.json).  A gain stands out from the base's
+run-to-run spread when the difference exceeds that IQR.
 """
 from __future__ import annotations
 
@@ -61,9 +63,21 @@ def compare(args, base: str) -> None:
         b = [r[m] for r in runs["change"]]
         wins = sum((y < x) if direction == "lower" else (y > x)
                    for x, y in zip(a, b))
-        print(f"{m}: median {statistics.median(a):.4g} -> "
-              f"{statistics.median(b):.4g}; change better in "
+        q1, q3 = quartiles(a)
+        med_a, med_b = statistics.median(a), statistics.median(b)
+        print(f"{m}: median {med_a:.4g} -> {med_b:.4g} "
+              f"(diff {med_b - med_a:+.4g}; base quartiles {q1:.4g}, "
+              f"{q3:.4g}, IQR {q3 - q1:.4g}); change better in "
               f"{wins}/{len(a)} pairs")
+
+
+def quartiles(values) -> tuple[float, float]:
+    """First and third quartile, linearly interpolated between the
+    sorted values (as ``perfbench.stats.percentile`` does)."""
+    if len(values) < 2:
+        return values[0], values[0]
+    q1, _, q3 = statistics.quantiles(values, n=4, method="inclusive")
+    return q1, q3
 
 
 def main(argv=None) -> None:
